@@ -161,12 +161,19 @@ def cached_stage(
 
     Mirrors the reference's file-existence caching between pipeline
     stages (app/main.py:110,130,177) with parquet checkpoints.
+
+    A stage computed by this call is read back under the schema it was
+    written with: ``spark.read.parquet`` would launch a schema-inference
+    job, and the explicit schema reads back identical (file sources
+    force every field nullable, as inference does). A stage that
+    already exists keeps inference.
     """
     success = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(success):
-        df = compute()
-        df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    if os.path.exists(success):
+        return spark.read.parquet(path)
+    df = compute()
+    df.write.mode("overwrite").parquet(path)
+    return spark.read.schema(df.schema).parquet(path)
 
 
 def write_bucketed(

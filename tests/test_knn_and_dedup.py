@@ -304,33 +304,95 @@ def test_srp_lsh_recall_on_planted_near_dups(spark):
     assert (np.round(sims, 4) >= 0.9).all()
 
 
-def test_srp_verify_tiers_agree(spark):
-    """The broadcast-matrix verify (candidates stay 16-byte pairs, no
-    vector rejoin) must emit exactly the relational verify's output —
-    same pairs, same round-4 similarities."""
+def _srp_tier_cases(spark):
+    """(label, frame, join kwargs, shrink chunks) inputs for the SRP
+    tier-equivalence test."""
     import numpy as np
     import pandas as pd
 
+    rng = np.random.default_rng(7)
+
+    def frame(m, ids=None, dtype=np.float32):
+        ids = np.arange(len(m)) if ids is None else ids
+        return spark.createDataFrame(
+            pd.DataFrame({"vec_id": ids, "embedding": list(m.astype(dtype))})
+        )
+
+    def unit(m):
+        return m / np.linalg.norm(m, axis=1, keepdims=True)
+
+    rand = unit(rng.standard_normal((300, 64)))
+    # 30 topics, near-dups inside each, 20 exact twins
+    centers = rng.standard_normal((30, 64))
+    near = unit(centers[rng.integers(0, 30, 300)]
+                + 0.15 * rng.standard_normal((300, 64)))
+    twins = near.copy()
+    twins[:20] = twins[100:120]
+    # 80% of rows within a hair of one direction: one bucket per band
+    hot = unit(np.vstack([
+        rng.standard_normal(64) + 0.02 * rng.standard_normal((240, 64)),
+        rng.standard_normal((60, 64)),
+    ]))
+    wide = unit(centers[rng.integers(0, 30, 200)][:, :48].repeat(8, axis=1)
+                + 0.1 * rng.standard_normal((200, 384)))
+    stress = dict(threshold=0.4, bits_per_band=4, num_bands=24)
+    auto = dict(threshold=0.9, bits_per_band="auto")
+    tau9 = dict(threshold=0.9)
+    str_ids = np.array([f"p{i:04d}" for i in range(300)])
+    return [
+        ("random f32 4x12", frame(rand),
+         dict(threshold=0.2, bits_per_band=4, num_bands=12), False),
+        ("stress 4x24 f32", frame(near), stress, True),
+        ("stress 4x24 f64", frame(near, dtype=np.float64), stress, False),
+        ("auto f32", frame(near), auto, False),
+        ("auto f64 384-d", frame(wide, dtype=np.float64), auto, False),
+        ("string ids", frame(near, ids=str_ids), stress, False),
+        ("planted twins", frame(twins), tau9, False),
+        ("hot bucket", frame(hot), tau9, True),
+        ("single row", frame(rand[:1]), stress, False),
+    ]
+
+
+def test_srp_verify_tiers_agree(spark, monkeypatch):
+    """The broadcast tier (fused band index + first-band dedup + einsum
+    verify in one scan) must emit exactly the relational tier's rows,
+    in the same order, with the same round-4 similarities — on stress
+    and planner knobs, f32/f64, string ids, exact twins, a hot bucket,
+    one row, and (schema included) no rows. Some cases rerun with
+    tiny chunk bounds: chunking must never change a value."""
     from job_post_similarity_spark.operators import ann
 
-    rng = np.random.default_rng(7)
-    n, d = 300, 64
-    m = rng.standard_normal((n, d))
-    m /= np.linalg.norm(m, axis=1, keepdims=True)
-    pdf = pd.DataFrame(
-        {"vec_id": np.arange(n), "embedding": list(m.astype(np.float32))}
-    )
-    df = spark.createDataFrame(pdf)
-    kw = dict(threshold=0.2, bits_per_band=4, num_bands=12)
-    bcast = ann.srp_lsh_similarity_join(
-        df, "vec_id", "embedding", verify="broadcast", **kw
-    ).collect()
-    rel = ann.srp_lsh_similarity_join(
-        df, "vec_id", "embedding", verify="relational", **kw
-    ).collect()
-    as_set = lambda rows: {(r["id1"], r["id2"], r["similarity"]) for r in rows}
-    assert len(bcast) > 0
-    assert as_set(bcast) == as_set(rel)
+    def both(df, kw):
+        fused = ann.srp_lsh_similarity_join(
+            df, "vec_id", "embedding", verify="broadcast", **kw
+        )
+        rel = ann.srp_lsh_similarity_join(
+            df, "vec_id", "embedding", verify="relational", **kw
+        )
+        return fused, rel
+
+    nonempty = 0
+    for label, df, kw, shrink in _srp_tier_cases(spark):
+        fused, rel = both(df, kw)
+        want = [tuple(r) for r in rel.collect()]
+        assert [tuple(r) for r in fused.collect()] == want, label
+        nonempty += bool(want)
+        if shrink:
+            with monkeypatch.context() as mp:
+                for name, v in (("_SRP_HASH_ROWS", 33), ("_SRP_ROW_BLOCK", 7),
+                                ("_SRP_PAIR_CHUNK", 64), ("_SRP_SCORE_CHUNK", 50)):
+                    mp.setattr(ann, name, v)
+                fused, _ = both(df, kw)
+                got = [tuple(r) for r in fused.collect()]
+            assert got == want, f"{label} (small chunks)"
+    assert nonempty >= 7
+
+    for id_type in ("bigint", "string"):
+        empty = spark.createDataFrame([], f"vec_id {id_type}, embedding array<float>")
+        fused, rel = both(empty, dict(threshold=0.9))
+        assert fused.collect() == rel.collect() == []
+        assert fused.schema == rel.schema
+        assert fused.schema["id1"].dataType.simpleString() == id_type
 
 
 def test_srp_topk_search_matches_exact_on_planted(spark):

@@ -303,6 +303,30 @@ def test_cached_stage_memoizes(spark, documents, tmp_path):
     assert len(calls) == 1 and a.count() == b.count() == documents.count()
 
 
+def test_cached_stage_reads_back_the_inferred_schema(spark, tmp_path):
+    """A freshly computed stage is read back under the schema it was
+    written with (no inference job); that schema must equal the one
+    inference gives a later run — non-nullable inputs included."""
+    from job_post_similarity_spark.sources.io import cached_stage
+
+    df = spark.range(5).select(
+        "id",
+        F.col("id").cast("string").alias("s"),
+        F.array(F.col("id").cast("double"), F.lit(0.5)).alias("v"),
+        F.struct(F.lit(1).alias("a"), F.col("id").cast("float").alias("b")).alias("st"),
+        F.create_map(F.lit("k"), F.col("id")).alias("mp"),
+        F.col("id").cast("decimal(12,2)").alias("dec"),
+        F.to_date(F.lit("2024-01-02")).alias("d"),
+        F.to_timestamp(F.lit("2024-01-02 03:04:05")).alias("ts"),
+    )
+    assert not df.schema["id"].nullable
+    path = str(tmp_path / "stage")
+    fresh = cached_stage(spark, path, lambda: df)
+    assert fresh.schema == spark.read.parquet(path).schema
+    assert fresh.schema == cached_stage(spark, path, lambda: df).schema
+    assert sorted(fresh.collect()) == sorted(df.collect())
+
+
 def test_approx_count_distinct_within_tolerance(spark, sf_dir):
     from job_post_similarity_spark.sources.io import load_table
 
@@ -475,6 +499,50 @@ def test_run_pipeline_cli_stages_and_memoization(spark, documents, tmp_path):
     # memoization: second run reads checkpoints (equal result)
     again = run_pipeline(spark, raw, out, cfg)
     assert sorted(pairs.collect()) == sorted(again.collect())
+
+
+def test_run_pipeline_leaks_no_cache_and_bounds_pair_join_jobs(
+    spark, documents, tmp_path, monkeypatch
+):
+    """At the default EngineConfig (HNSW32 -> SRP-LSH broadcast tier), a
+    pipeline run leaves the JVM's persisted RDD set as it found it, its
+    similar_pairs stage runs at most 5 Spark jobs on 200 posts, and the
+    stage reads back with the schema inference would give."""
+    import os
+
+    from job_post_similarity_spark.main import run_pipeline
+    from job_post_similarity_spark.sources import io
+
+    sc = spark.sparkContext
+    group = "test-similar-pairs-stage"
+    stage = io.cached_stage
+
+    def grouped_stage(spark_, path, compute, fmt="parquet"):
+        if os.path.basename(path) != "similar_pairs":
+            return stage(spark_, path, compute, fmt)
+        sc.setJobGroup(group, "similar_pairs stage")
+        try:
+            return stage(spark_, path, compute, fmt)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    monkeypatch.setattr(io, "cached_stage", grouped_stage)
+    for var in ("INDEX_DESCRIPTION", "SIMILARITY_THRESHOLD", "EMBEDDING_DIM",
+                "SEARCH_SAMPLE_SIZE", "TEXT_COLUMN", "ID_COLUMN"):
+        monkeypatch.delenv(var, raising=False)
+    cfg = EngineConfig()
+    assert cfg.index_description == "HNSW32"
+    raw = P.jobs_view_from_documents(documents.limit(200))
+    assert raw.count() == 200
+    out = str(tmp_path / "run")
+    persisted = set(sc._jsc.getPersistentRDDs().keySet())
+    pairs = run_pipeline(spark, raw, out, cfg)
+    pairs.collect()
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == persisted
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 5, jobs
+    assert pairs.schema == spark.read.parquet(os.path.join(out, "similar_pairs")).schema
 
 
 def test_main_entry_smoke(spark, documents, tmp_path, monkeypatch):
