@@ -1124,6 +1124,19 @@ def ivfpq_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CLUSTERED_EMB_CACHE: dict = {}
 
 
+def _serve_plan_memo(key: tuple, states: tuple, build):
+    """A memoized serve plan, reused only while every state object it
+    closes over is still the one it was built from (identity, not
+    equality — ADVICE r13 #3): a rebuilt or replaced state entry gets
+    a fresh plan instead of one that reads its predecessor's
+    (possibly released) relations."""
+    memo = _CLUSTERED_EMB_CACHE.get(key)
+    if memo is None or any(a is not b for a, b in zip(memo[0], states)):
+        memo = (states, build())
+        _CLUSTERED_EMB_CACHE[key] = memo
+    return memo[1]
+
+
 def _spark_key(spark: SparkSession) -> str:
     """Cache key for per-session fixture memos: the application id is
     unique per SparkContext, unlike id(spark) — a recycled object
@@ -1387,15 +1400,14 @@ def graph_serve_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # never persisted: EVERY action on it re-executes the full beam
     # search from the RAM-resident graph (per-run job/task counts are
     # unchanged — only plan construction is amortized).
-    pk = (_spark_key(spark), sf_dir, "graph_serve_plan")
-    plan = _CLUSTERED_EMB_CACHE.get(pk)
-    if plan is None:
-        plan = ann.graph_beam_search(
+    return _serve_plan_memo(
+        (_spark_key(spark), sf_dir, "graph_serve_plan"),
+        (hit, hit2),
+        lambda: ann.graph_beam_search(
             emb, graph, qids, k=1, beam=40, hops=4, entries=entries,
             corpus_rows=n, nav_tab=nav_tab,
-        ).select("query_id", "neighbor_id")
-        _CLUSTERED_EMB_CACHE[pk] = plan
-    return plan
+        ).select("query_id", "neighbor_id"),
+    )
 
 
 def graph_auto_entry_recall_embeddings(
@@ -1565,12 +1577,11 @@ def hnsw_serve_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb, k=8, iters=3, corpus_rows=n, base_graph=graph,
             meta=meta,
         ).localCheckpoint()
-        # the per-layer navigation relations are SERVING STATE
-        # (VERDICT r9 item 2): membership + prebuilt (node, qv, nxts)
-        # tables built once with the hierarchy and kept resident, so
-        # the measured descent never md5-rescans the corpus nor
-        # re-derives/re-plans the grouped adjacency per batch (a
-        # loaded Faiss HNSW pays zero per-query setup —
+        # the navigation state is SERVING STATE (VERDICT r9 item 2),
+        # built once with the hierarchy: the membership table (the
+        # insert row's warm state) and, within the broadcast cap, the
+        # HnswSnapshot each batch scans in one job (a loaded Faiss
+        # HNSW pays zero per-query setup —
         # app/vector_search.py:241-294)
         nav = ann.hnsw_nav_members(
             emb, m=2, top_layer=meta["top_layer"]
@@ -1590,17 +1601,16 @@ def hnsw_serve_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # action still re-executes the full descent (no persist on the
     # output), only per-batch Catalyst/py4j plan construction is
     # amortized.
-    pk = (_spark_key(spark), sf_dir, "hnsw_serve_plan")
-    plan = _CLUSTERED_EMB_CACHE.get(pk)
-    if plan is None:
-        queries = emb.filter(F.col("vec_id").isin(qids))
-        plan = ann.hnsw_topk_search(
-            queries, emb, k=1, hierarchy=hier, corpus_rows=n,
-            query_rows=len(qids), top_layer=top, layer_sizes=sizes,
-            size_cap=cap, nav_members=nav, serving_state=state,
-        ).select("query_id", "neighbor_id")
-        _CLUSTERED_EMB_CACHE[pk] = plan
-    return plan
+    return _serve_plan_memo(
+        (_spark_key(spark), sf_dir, "hnsw_serve_plan"),
+        (hit, cached),
+        lambda: ann.hnsw_topk_search(
+            emb.filter(F.col("vec_id").isin(qids)), emb, k=1,
+            hierarchy=hier, corpus_rows=n, query_rows=len(qids),
+            top_layer=top, layer_sizes=sizes, size_cap=cap,
+            nav_members=nav, serving_state=state,
+        ).select("query_id", "neighbor_id"),
+    )
 
 
 def graph_refresh_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:

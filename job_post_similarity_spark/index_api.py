@@ -93,13 +93,14 @@ class VectorSearch:
         # the hierarchy repair's per-layer old-member source (see
         # _invalidate_graph keep_warm)
         self._stale_nav: DataFrame | None = None
-        # memoized warm-serving navigation tables: the flat tier's
-        # (node, qv, nxts) relation and the descent tier's per-layer
-        # dict (ann.graph_nav_table / ann.hnsw_serving_state) —
-        # materialized once per index so every batch's plan references
-        # lineage-free relations (the loaded-Faiss zero-setup shape)
+        # memoized warm-serving state, one per index epoch: the flat
+        # tier's (node, qv, nxts) relation (ann.graph_nav_table) and
+        # the descent tier's ann.hnsw_serving_state — a broadcast
+        # HnswSnapshot within the broadcast cap (each batch is one
+        # scan, the loaded-Faiss zero-setup shape), per-layer
+        # relational tables above it
         self._nav_tab: DataFrame | None = None
-        self._serving_state: dict | None = None
+        self._serving_state: ann.HnswSnapshot | dict | None = None
         # retired flat nav table after an append — the insert
         # navigation's warm state (see _invalidate_graph keep_warm)
         self._stale_nav_tab: DataFrame | None = None
@@ -204,7 +205,11 @@ class VectorSearch:
                 ann.release_relation(self._stale_nav_tab)
             self._stale_nav_tab = None
         self._nav_tab = None
-        if self._serving_state is not None:
+        # the snapshot's release is Broadcast.unpersist, not destroy:
+        # a frame an earlier search() returned still collects
+        if isinstance(self._serving_state, ann.HnswSnapshot):
+            self._serving_state.release()
+        elif self._serving_state is not None:
             for _tab in self._serving_state.values():
                 ann.release_relation(_tab)
         self._serving_state = None
@@ -599,16 +604,10 @@ class VectorSearch:
                         top_layer=self._hier_meta["top_layer"],
                     ).transform(cache_auto)
                 if self._serving_state is None:
-                    # prebuilt (node, qv, nxts) tables per layer —
-                    # each batch's plan references lineage-free
-                    # relations (zero per-batch setup, the loaded-
-                    # Faiss shape)
-                    # guarded per layer (ADVICE r10 medium): tabs are
-                    # built only for layers serving will read — the
-                    # layer-0 table (full corpus) only within the
-                    # ≤100k broadcast regime the beam search itself
-                    # dispatches on, upper tabs only when no fitted
-                    # layer zeroes the auto walk policy
+                    # within the broadcast cap: one HnswSnapshot, so
+                    # every batch is a single scan; above it,
+                    # relational tables only for the upper layers
+                    # serving will read (ADVICE r10 medium)
                     self._serving_state = ann.hnsw_serving_state(
                         self._df, self._hier,
                         self._hier_meta["top_layer"],

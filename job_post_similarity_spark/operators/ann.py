@@ -3575,18 +3575,18 @@ def default_graph_entries(
     build and reuse across serving batches."""
     import math as _math
 
-    from .windows import global_rank_with_total
+    from .windows import _global_rank_impl
 
-    ranked, n = global_rank_with_total(
-        corpus.select(F.col(id_col).alias("id")),
-        [F.col("id")],
-        out_col="rk",
+    ranked, n, parted = _global_rank_impl(
+        corpus.select(F.col(id_col).alias("id")), [F.col("id")], "rk", None
     )
     step = max(1, _math.ceil(n / n_regions))
-    return [
+    picks = [
         r["id"]
         for r in ranked.filter((F.col("rk") - 1) % step == 0).collect()
     ]
+    release_relation(parted)  # consumed: the picks are driver scalars
+    return picks
 
 
 def ivf_graph_entries(
@@ -3755,6 +3755,18 @@ def _hnsw_hash(id_col: str) -> Column:
         10,
     ).cast("long")
 
+
+def _hnsw_level(id_col: str, m: int, cap: int) -> Column:
+    """The md5 level draw capped at ``cap`` (an int column): the
+    largest l <= cap with ``_hnsw_hash % m^l == 0``, so level >= l
+    <=> membership of layer l for every l <= cap."""
+    h = _hnsw_hash(id_col)
+    lvl = F.lit(0)
+    for l in range(1, cap + 1):
+        lvl = F.when(h % (m**l) == 0, l).otherwise(lvl)
+    return lvl
+
+
 def hnsw_levels(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -3770,11 +3782,10 @@ def hnsw_levels(
     tier's policy, not a seeded RNG). Output: (id_col, level)."""
     if m < 2 or max_level < 1:
         raise ValueError("m must be >= 2 and max_level >= 1")
-    h = _hnsw_hash(id_col)
-    lvl = F.lit(0)
-    for l in range(1, max_level + 1):
-        lvl = F.when(h % (m**l) == 0, l).otherwise(lvl)
-    return df.select(F.col(id_col), lvl.cast("int").alias("level"))
+    return df.select(
+        F.col(id_col),
+        _hnsw_level(id_col, m, max_level).cast("int").alias("level"),
+    )
 
 
 def hnsw_nav_members(
@@ -3805,11 +3816,7 @@ def hnsw_nav_members(
     Layer top_layer+1 is included because the serve path seeds from
     the ENTRY membership above the top built layer when no built
     layer fits its start budget."""
-    cap = top_layer + 1
-    h = _hnsw_hash(id_col)
-    lvl = F.lit(0)
-    for l in range(1, cap + 1):
-        lvl = F.when(h % (m**l) == 0, l).otherwise(lvl)
+    lvl = _hnsw_level(id_col, m, top_layer + 1)
     return (
         corpus.select(F.col(id_col), F.col(vec_col), lvl.alias("__lv"))
         .filter(F.col("__lv") >= 1)
@@ -3822,6 +3829,142 @@ def hnsw_nav_members(
             id_col,
             vec_col,
         )
+    )
+
+
+class HnswSnapshot:
+    """Warm serving state of a layered hierarchy in the broadcast
+    regime, as one driver-built numpy snapshot shipped in ONE
+    ``sc.broadcast``: corpus ids sorted ascending, the
+    ``_micro_quant`` matrix (quantized by Spark, so JVM HALF_UP;
+    stored int32 when every component fits, int64 otherwise),
+    each row's md5 level capped at ``top_layer + 1`` (layer l's
+    members are the rows with level >= l), and CSR adjacency in
+    row-index space for layer 0 (every layer's edges, duplicates
+    kept, exactly the relation the relational layer-0 walk reads)
+    and for each upper layer 1..top_layer.
+
+    Built by ``hnsw_serving_state``; read by ``hnsw_topk_search``.
+    ``layer_sizes`` holds the member count of layers 0..top_layer+1.
+    ``release()`` unpersists the executor copies only: a frame
+    already planned over the snapshot still collects afterwards (the
+    driver re-sends the value), which is why owners release with
+    ``unpersist`` and never ``destroy``."""
+
+    def __init__(self, bc, top_layer: int, m: int, id_type, layer_sizes):
+        self._bc = bc
+        self.top_layer = top_layer
+        self.m = m
+        self.id_type = id_type
+        self.layer_sizes = layer_sizes
+
+    def release(self) -> None:
+        self._bc.unpersist()
+
+
+def _hnsw_snapshot(
+    corpus: DataFrame,
+    hierarchy: DataFrame,
+    top_layer: int,
+    id_col: str,
+    vec_col: str,
+    m: int,
+) -> HnswSnapshot:
+    """Collect corpus and hierarchy once and broadcast the
+    ``HnswSnapshot`` arrays. Rows and edges with a null id are dropped
+    (the relational joins never match a null key), edges whose ends
+    are not corpus rows likewise. Duplicate corpus ids, null vectors,
+    null elements and ragged widths raise ``ValueError`` naming the
+    id."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    cap = top_layer + 1
+    # collected as Arrow and checked column-wise: no Python object per
+    # row, and the matrix is the flattened value buffer reshaped
+    tbl = (
+        corpus.filter(F.col(id_col).isNotNull())
+        .select(
+            F.col(id_col).alias("id"),
+            _micro_quant(vec_col).alias("qv"),
+            _hnsw_level(id_col, m, cap).alias("lv"),
+        )
+        .toArrow()
+    )
+    ids = tbl.column("id").to_numpy()
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order]
+    n = len(ids)
+    dup = np.flatnonzero(ids[1:] == ids[:-1])
+    if len(dup):
+        raise ValueError(f"HNSW corpus id {ids[dup[0]]!r} is not unique")
+    lv = tbl.column("lv").to_numpy().astype(np.int32)[order]
+    qv = tbl.column("qv").combine_chunks()
+    del tbl
+    # a null vector has length -1; errors name the smallest bad id
+    lens = pc.fill_null(pc.list_value_length(qv), -1).to_numpy()[order]
+    width = lens[lens >= 0]
+    d = int(width[0]) if len(width) else 0
+    bad = np.flatnonzero(lens != d)
+    if len(bad):
+        i = bad[0]
+        raise ValueError(
+            f"HNSW corpus id {ids[i]!r}: "
+            + ("null vector" if lens[i] < 0 else f"{lens[i]} dims, not {d}")
+        )
+    flat = qv.flatten()
+    if flat.null_count:
+        null_at = np.flatnonzero(pc.is_null(flat).to_numpy(zero_copy_only=False))
+        rank = np.empty(n, np.int64)
+        rank[order] = np.arange(n)
+        i = rank[null_at // d].min()
+        raise ValueError(f"HNSW corpus id {ids[i]!r}: a null element")
+    q = flat.to_numpy().reshape(n, d)
+    # |q| <= 1e6 on unit vectors: int32 halves the collected and
+    # broadcast matrix; every dot still accumulates in int64/float64
+    qmax = max(int(q.max()), -int(q.min())) if q.size else 0
+    q = q.astype(np.int32 if qmax < 2**31 else np.int64, copy=False)[order]
+    del qv, flat
+    edges = (
+        hierarchy.filter(
+            F.col("id").isNotNull() & F.col("neighbor_id").isNotNull()
+        )
+        .select("layer", "id", "neighbor_id")
+        .toArrow()
+    )
+
+    def to_row(col):
+        v = edges.column(col).to_numpy()
+        r = np.searchsorted(ids, v) if n else np.zeros(len(v), np.int64)
+        ok = r < n
+        ok[ok] = ids[r[ok]] == v[ok]
+        return r, ok
+
+    src, ok_s = to_row("id")
+    dst, ok_d = to_row("neighbor_id")
+    ok = ok_s & ok_d
+    layer = edges.column("layer").to_numpy()[ok]
+    src, dst = src[ok], dst[ok]
+
+    def csr(sel):
+        s, t = src[sel], dst[sel]
+        o = np.argsort(s, kind="stable")
+        indptr = np.zeros(n + 1, np.int64)
+        np.cumsum(np.bincount(s, minlength=n), out=indptr[1:])
+        return indptr, t[o].astype(np.int32)
+
+    adj = {0: csr(slice(None))}
+    for l in range(1, top_layer + 1):
+        adj[l] = csr(layer == l)
+    bc = corpus.sparkSession.sparkContext.broadcast(
+        {"ids": ids, "q": q, "qmax": qmax, "lv": lv, "adj": adj}
+    )
+    return HnswSnapshot(
+        bc,
+        top_layer,
+        m,
+        corpus.schema[id_col].dataType,
+        {l: int((lv >= l).sum()) for l in range(cap + 1)},
     )
 
 
@@ -3839,60 +3982,51 @@ def hnsw_serving_state(
     size_cap: int | None = None,
     start_budget: int = 1024,
     broadcast_cap: int = 100_000,
-) -> dict:
-    """Build the descent's WARM SERVING STATE once per index: the
-    per-layer ``(node, qv, nxts)`` navigation tables
-    (``graph_nav_table``) for the layers SERVING WILL ACTUALLY READ
-    (exactly the relation the in-plan path derives — duplicate
-    cross-layer edges pad the grouped lists identically, so serving
-    through the state is a pure substitution). Returns
-    ``{layer: nav_tab}`` for ``hnsw_topk_search(serving_state=...)``;
-    layers absent from the dict fall back to the in-plan derivation
-    (``(serving_state or {}).get(l)`` → None).
+) -> HnswSnapshot | dict:
+    """Build the descent's WARM SERVING STATE once per index epoch,
+    for ``hnsw_topk_search(serving_state=...)``. Two tiers, split on
+    the corpus size ``n`` (``corpus_rows``, else a bounded probe):
 
-    Which layers get a tab mirrors the reader, not the builder
-    (ADVICE r10: an unguarded build materialized a FULL-corpus
-    broadcast-join that serving never read above the broadcast
-    regime):
-
-    - layer 0 only when ``n <= broadcast_cap`` —
-      ``graph_beam_search`` ignores ``nav_tab`` on the node-keyed
-      shuffle path (its own ≤100k dispatch), so above the cap the
-      layer-0 table is a full-corpus broadcast materialization with
-      zero readers (driver/executor OOM risk at exactly the at-scale
-      regime); ``stream_topk_search`` guards its nav build the same
-      way.
-    - upper layers 1..top only when NO layer fits ``start_budget``
-      (``min(start_budget, size_cap)``, matching the reader's cap):
-      a fitted layer makes ``hnsw_topk_search``'s auto ``max_walks``
-      0, so no upper walk — and no upper tab read — ever happens.
-      When walks DO happen, a layer's tab is built only if its
-      membership is KNOWN to be within ``broadcast_cap``. Builder
-      ``layer_sizes`` values above ``size_cap`` are CAPPED SENTINELS
-      ("> exact_budget", not true cardinalities — see
-      ``hnsw_hierarchy_build``), so a sentinel is never compared
-      against ``broadcast_cap`` directly: with a trustworthy ``n``
-      (caller-supplied ``corpus_rows``, or a row probe that finished
-      under its own cap) the estimate is ``max(sentinel, n // m**l)``;
-      when ``n`` itself is a capped probe (``corpus_rows`` omitted on
-      a >``broadcast_cap`` corpus) the layer's size is unbounded-
-      unknown and the tab is SKIPPED — serving falls back to the
-      in-plan derivation rather than risk materializing an ~n/m^l-row
-      table nobody reads (ADVICE r11 medium).
-
-    ``materialize=True`` localCheckpoints each table (eager): the
-    serving plans then reference lineage-free in-memory relations —
-    zero per-batch derivation, grouping, or re-planning of the
-    navigation relations, the role the reference's loaded Faiss HNSW
-    structure plays (app/vector_search.py:241-294). Size: layer 0
-    holds n rows; layers above sum to ≤ n/(m-1) — the same budget as
-    ``nav_members``, which supplies the per-layer member vectors
-    without rescanning the corpus when provided."""
+    - **Snapshot tier** (``n <= broadcast_cap``, the regime where
+      ``graph_beam_search`` broadcasts its navigation tables anyway):
+      returns an ``HnswSnapshot`` — corpus and hierarchy collected
+      once, shipped in one broadcast. Serving then runs the whole
+      descent (seed, upper walks, layer-0 beam, self-exclusion,
+      top-k) in one ``mapInPandas`` over the query batch, with no
+      per-batch plan over the index relations — the reference's
+      load-once/search-from-RAM contract (app/main.py:177-194,
+      app/vector_search.py:241-294). Every served layer is included,
+      so ``start_budget``/``size_cap``/``layer_sizes``/
+      ``nav_members``/``materialize`` do not apply. The caller owns
+      it: ``release()`` when the index mutates.
+    - **Relational tier** (above the cap): returns ``{layer:
+      nav_tab}``, per-layer ``(node, qv, nxts)`` tables
+      (``graph_nav_table``) that the relational walks read instead of
+      deriving them per batch; layers absent from the dict are
+      derived in-plan. Layer 0 never gets one here (the node-keyed
+      shuffle path ignores ``nav_tab``). Upper layers get one only
+      when NO layer fits ``start_budget`` (``min(start_budget,
+      size_cap)``, the reader's cap — a fitted layer makes the auto
+      ``max_walks`` 0) and the layer's membership is KNOWN to be
+      within ``broadcast_cap``. Builder ``layer_sizes`` above
+      ``size_cap`` are CAPPED SENTINELS ("> exact_budget", see
+      ``hnsw_hierarchy_build``), never compared with the cap
+      directly: with a trustworthy ``n`` the estimate is
+      ``max(sentinel, n // m**l)``; when ``n`` itself is a capped
+      probe (``corpus_rows`` omitted) the layer is skipped and
+      serving derives it in-plan (ADVICE r10/r11). ``nav_members``
+      supplies the member vectors without a corpus rescan;
+      ``materialize=True`` localCheckpoints each table (the caller
+      releases them with ``release_relation``)."""
     n = (
         corpus_rows
         if corpus_rows is not None
         else corpus.limit(broadcast_cap + 1).count()
     )
+    if n <= broadcast_cap:
+        return _hnsw_snapshot(
+            corpus, hierarchy, top_layer, id_col, vec_col, m
+        )
     eff_budget = (
         min(start_budget, size_cap) if size_cap is not None else start_budget
     )
@@ -3900,10 +4034,9 @@ def hnsw_serving_state(
         l >= 1 and sz <= eff_budget for l, sz in layer_sizes.items()
     )
     # when corpus_rows was omitted, n came from a bounded probe and is
-    # itself a capped sentinel once the corpus exceeds broadcast_cap —
-    # fine for the one-sided layer-0 gate below, unusable as the base
-    # of an n/m^l upper-layer estimate
-    n_is_capped = corpus_rows is None and n > broadcast_cap
+    # itself a capped sentinel — unusable as the base of an n/m^l
+    # upper-layer estimate
+    n_is_capped = corpus_rows is None
     tabs: dict = {}
     if not fitted:
         for l in range(1, top_layer + 1):
@@ -3936,13 +4069,190 @@ def hnsw_serving_state(
                 id_col,
                 vec_col,
             )
-    if n <= broadcast_cap:
-        tabs[0] = graph_nav_table(
-            corpus, hierarchy.select("id", "neighbor_id"), id_col, vec_col
-        )
     if materialize:
         tabs = {l: t.localCheckpoint() for l, t in tabs.items()}
     return tabs
+
+
+#: queries per seed matmul block of the snapshot descent: bounds the
+#: (block × seed members) dot matrix a worker holds at once
+_HNSW_SEED_BLOCK = 256
+
+
+def _csr_rows(indptr, indices, rows):
+    """Concatenated adjacency of ``rows`` in a CSR (indptr, indices)."""
+    import numpy as np
+
+    start = indptr[rows]
+    lens = indptr[rows + 1] - start
+    total = int(lens.sum())
+    if total == 0:
+        return indices[:0]
+    # position p of the output reads indices[start[r] + (p - offset[r])]
+    offset = np.repeat(np.cumsum(lens) - lens, lens)
+    return indices[np.repeat(start, lens) + np.arange(total) - offset]
+
+
+def _snapshot_beam(Q, csr, member, cand, dt, qv, exact, width, hops):
+    """One layer of the snapshot descent for one query: keep the best
+    ``width`` of the scored entries ``cand``, then ``hops`` rounds of
+    expand (beam + CSR neighbors), dedup, keep ``member`` rows (None:
+    all), score, keep the best ``width``. Candidates are row-ascending
+    before each cut, so a stable sort on -dot is the relational
+    (dot DESC, id ASC) order; the beam comes back in that order."""
+    import numpy as np
+
+    indptr, indices = csr
+    o = np.argsort(cand, kind="stable")
+    cand, dt = cand[o], dt[o]
+    for h in range(hops + 1):
+        if h:
+            cand = np.union1d(cand, _csr_rows(indptr, indices, cand))
+            if member is not None:
+                cand = cand[member[cand]]
+            sub = Q[cand]
+            dt = (
+                (sub.astype(np.float64) @ qv).astype(np.int64)
+                if exact
+                else sub @ qv
+            )
+        top = np.argsort(-dt, kind="stable")[:width]
+        cand, dt = cand[top], dt[top]
+    return cand, dt
+
+
+def _hnsw_snapshot_descent(
+    queries: DataFrame,
+    snap: HnswSnapshot,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    beam: int,
+    hops: int,
+    seed_layer: int,
+    backstop: int,
+    walk_layers: list,
+    upper_beam: int,
+    upper_hops: int,
+    tiny_batch: bool,
+) -> DataFrame:
+    """The snapshot tier of ``hnsw_topk_search``: the relational
+    descent's exact arithmetic and total order, replayed per query in
+    one ``mapInPandas`` over the batch (queries quantized in Spark by
+    the same ``_micro_quant`` expression). Per query:
+
+    - seed: every member of ``seed_layer``, plus the ``backstop``
+      smallest-id members of layer ``seed_layer - 1`` (the entry
+      backstop when no layer fitted; 0 otherwise);
+    - each walk layer l: a beam of ``upper_beam`` over layer l's
+      members, ``upper_hops`` hops of CSR expansion + dedup;
+    - layer 0: a beam of ``beam`` for ``hops`` hops over the union
+      adjacency, then self-exclusion, top-k, ``rank`` and
+      ``_SIM_PPM_SQL``'s shifted truncating division.
+
+    Each beam keeps the best by (dot DESC, id ASC); ids are sorted, so
+    that is row ASC. Dots are exact int64: float64 BLAS when
+    ``d * max|corpus q| * max|batch q| < 2**53`` bounds every partial
+    sum below the float mantissa, numpy integer matmul otherwise
+    (wraparound identical to the JVM's long arithmetic)."""
+    import numpy as np
+    import pandas as pd
+
+    out_schema = T.StructType(
+        [
+            T.StructField("query_id", queries.schema[id_col].dataType),
+            T.StructField("neighbor_id", snap.id_type),
+            T.StructField("similarity", T.DoubleType()),
+            T.StructField("rank", T.IntegerType()),
+        ]
+    )
+    qdf = queries.filter(F.col(id_col).isNotNull()).select(
+        F.col(id_col).alias("qid"), _micro_quant(vec_col).alias("qv")
+    )
+    if tiny_batch:
+        qdf = qdf.coalesce(1)
+    bc = snap._bc
+    block = _HNSW_SEED_BLOCK
+
+    def op(batches):
+        s = bc.value
+        ids, Q, lv, adj = s["ids"], s["q"], s["lv"], s["adj"]
+        n, d = Q.shape
+        seeds = np.flatnonzero(lv >= seed_layer)
+        if backstop:
+            seeds = np.union1d(
+                seeds, np.flatnonzero(lv >= seed_layer - 1)[:backstop]
+            )
+        # an upper-layer edge to a non-member is dropped, as the
+        # relational walk's inner join on the member table drops it
+        members = {l: lv >= l for l in walk_layers}
+        members[0] = None
+        stages = [(l, upper_beam, upper_hops) for l in walk_layers]
+        stages.append((0, beam, hops))
+        for pdf in batches:
+            qids = pdf["qid"].to_numpy()
+            vecs = pdf["qv"].to_numpy()
+            for qid, v in zip(qids, vecs):
+                # an empty index has no width to check against
+                if v is None or (n and len(v) != d):
+                    raise ValueError(
+                        f"hnsw_topk_search: query id {qid!r} has "
+                        + (
+                            "a null vector"
+                            if v is None
+                            else f"{len(v)} dims, the index has {d}"
+                        )
+                    )
+            if n == 0 or len(qids) == 0:
+                continue
+            QB = np.stack(vecs)
+            if QB.dtype.kind == "f":
+                # a null element arrives as NaN and turns the batch float
+                bad = np.flatnonzero(np.isnan(QB).any(axis=1))
+                if len(bad):
+                    raise ValueError(
+                        f"hnsw_topk_search: query id {qids[bad[0]]!r} "
+                        "has a null element"
+                    )
+            QB = QB.astype(np.int64)
+            exact = d * s["qmax"] * int(np.abs(QB).max()) < 2**53
+            if exact:
+                QB = QB.astype(np.float64)
+            QS = Q[seeds].astype(np.float64) if exact else Q[seeds]
+            out_n, out_dot, n_kept = [], [], []
+            for b0 in range(0, len(qids), block):
+                S = QS @ QB[b0 : b0 + block].T
+                for j, qv in enumerate(QB[b0 : b0 + block]):
+                    cand, dt = seeds, S[:, j].astype(np.int64)
+                    # entries are always members of the walked layer:
+                    # membership nests (level >= l implies level >= l-1)
+                    for l, width, n_hops in stages:
+                        cand, dt = _snapshot_beam(
+                            Q, adj[l], members[l], cand, dt, qv, exact,
+                            width, n_hops,
+                        )
+                    keep = ids[cand] != qids[b0 + j]
+                    out_n.append(cand[keep][:k])
+                    out_dot.append(dt[keep][:k])
+                    n_kept.append(len(out_n[-1]))
+            # _SIM_PPM_SQL: the JVM's `div` truncates toward zero
+            x = np.concatenate(out_dot) + 10**15
+            ppm = np.where(x >= 0, x // 10**6, -(-x // 10**6)) - 10**9
+            yield pd.DataFrame(
+                {
+                    "query_id": np.repeat(qids, n_kept),
+                    "neighbor_id": ids[np.concatenate(out_n)],
+                    "similarity": ppm / 1_000_000.0,
+                    "rank": np.concatenate(
+                        [np.arange(1, c + 1, dtype=np.int32) for c in n_kept]
+                    ),
+                }
+            )
+
+    out = qdf.mapInPandas(op, out_schema)
+    if tiny_batch:
+        return out.sortWithinPartitions("query_id", "rank")
+    return out.orderBy("query_id", "rank")
 
 
 def _exact_knn_graph_local(
@@ -4468,7 +4778,7 @@ def _batched_layer_graph_insert(
     sim_ppm)`` covering exactly the batched layers."""
     import math as _math
 
-    from .windows import global_rank
+    from .windows import _global_rank_impl
 
     spark = hierarchy.sparkSession
     layers = [s[0] for s in batch_specs]
@@ -4526,9 +4836,10 @@ def _batched_layer_graph_insert(
         "sim_ppm",
     )
     entries_parts = []
+    parted = None
     if stride_tagged is not None:
-        ranked = global_rank(
-            stride_tagged, [F.col("ly"), F.col("nid")], out_col="__rk"
+        ranked, _n, parted = _global_rank_impl(
+            stride_tagged, [F.col("ly"), F.col("nid")], "__rk", None
         )
         # per-layer counts -> cumulative offsets + stride steps (one
         # tiny job; the per-layer true sizes, NOT the capped meta)
@@ -4597,6 +4908,10 @@ def _batched_layer_graph_insert(
         entries_df=entries_df,
         new_rows_count=total_new,
     )
+    if parted is not None:
+        # graph_insert's output is an eager checkpoint: the entry
+        # ranking is consumed
+        release_relation(parted)
     return merged.select(
         F.col("id.ly").alias("layer"),
         F.col("id.nid").alias("id"),
@@ -4628,7 +4943,7 @@ def hnsw_topk_search(
     size_cap: int | None = None,
     descent_stride: int | None = None,
     nav_members: DataFrame | None = None,
-    serving_state: dict | None = None,
+    serving_state: HnswSnapshot | dict | None = None,
     max_walks: int | None = None,
 ) -> DataFrame:
     """Serve top-k by LAYERED DESCENT over a ``hnsw_hierarchy_build``
@@ -4676,12 +4991,27 @@ def hnsw_topk_search(
     same ``m`` and cover layers through top+1; ``index_store`` keeps
     the knobs in the artifact meta and refuses a mismatch.
 
-    ``serving_state`` (from ``hnsw_serving_state``) goes one step
-    further: the per-layer ``(node, qv, nxts)`` navigation tables are
-    prebuilt and MATERIALIZED once, so each walk's and the final
-    search's plan references a lineage-free relation — per-batch
-    planning+grouping work drops out entirely (the warm-latency
-    lever; Faiss pays zero per-query setup for the same reason).
+    ``serving_state`` (from ``hnsw_serving_state``) picks the tier:
+
+    - an ``HnswSnapshot`` (corpus within the broadcast cap) serves
+      the whole descent — seed or strided walks, layer-0 beam,
+      self-exclusion, top-k, rank, similarity — in ONE
+      ``mapInPandas`` over the query batch against the broadcast
+      snapshot: one Spark job per batch, no shuffle, no plan over the
+      index relations (Faiss's zero per-query setup;
+      app/vector_search.py:241-294). Row-for-row identical to the
+      relational tier: same integer dots, same (dot DESC, id ASC)
+      order, same output sort. ``hierarchy``, ``corpus``,
+      ``nav_members`` and ``corpus_rows`` are not read; ``top_layer``
+      and ``m`` must match the snapshot. A query row with a null
+      vector, a null element or a width other than the corpus's
+      fails the scan with a ``ValueError`` naming its id. Query ids are assumed unique per
+      batch, as on the relational tier.
+    - otherwise (a ``{layer: nav_tab}`` dict or None) the RELATIONAL
+      reference tier runs: per-layer ``graph_beam_search`` plans,
+      reading prebuilt ``(node, qv, nxts)`` tables for the layers the
+      dict holds and deriving the rest in-plan. It is the tier the
+      DuckDB replay gates grade and the one above the broadcast cap.
 
     ``max_walks`` caps the intermediate beam-walks between the start
     seed and layer 0. Default (None) is adaptive: 0 when the seed
@@ -4692,25 +5022,27 @@ def hnsw_topk_search(
     strided descent when seeding from the sparse entry membership
     (no fitted layer — HNSW's actual regime, where the walks ARE the
     navigation). Pass an int to pin either behavior."""
-    n = corpus_rows if corpus_rows is not None else corpus.count()
-    if hierarchy is None:
-        built_meta: dict = {}
-        hierarchy = hnsw_hierarchy_build(
-            corpus,
-            id_col,
-            vec_col,
-            k=graph_k,
-            iters=iters,
-            m=m,
-            entry_budget=entry_budget,
-            corpus_rows=n,
-            meta=built_meta,
-        )
-        if top_layer is None:
-            top_layer = built_meta["top_layer"]
-        if layer_sizes is None:
-            layer_sizes = built_meta["layer_sizes"]
-            size_cap = built_meta.get("size_cap", size_cap)
+    snap = serving_state if isinstance(serving_state, HnswSnapshot) else None
+    if snap is None:
+        n = corpus_rows if corpus_rows is not None else corpus.count()
+        if hierarchy is None:
+            built_meta: dict = {}
+            hierarchy = hnsw_hierarchy_build(
+                corpus,
+                id_col,
+                vec_col,
+                k=graph_k,
+                iters=iters,
+                m=m,
+                entry_budget=entry_budget,
+                corpus_rows=n,
+                meta=built_meta,
+            )
+            if top_layer is None:
+                top_layer = built_meta["top_layer"]
+            if layer_sizes is None:
+                layer_sizes = built_meta["layer_sizes"]
+                size_cap = built_meta.get("size_cap", size_cap)
     if size_cap is not None:
         # builder meta sizes above size_cap are capped sentinels, not
         # true cardinalities — never exhaustively seed a layer whose
@@ -4718,25 +5050,32 @@ def hnsw_topk_search(
         start_budget = min(start_budget, size_cap)
     if beam is None:
         beam = max(2 * k + 8, 16)
-    nq = (
-        query_rows
-        if query_rows is not None
-        else queries.limit(100_001).count()
-    )
-    top = (
-        top_layer
-        if top_layer is not None
-        else hierarchy.agg(F.max("layer").alias("t")).collect()[0]["t"]
-    )
-    if top is None:
-        raise ValueError("hierarchy has no layers")
-    if layer_sizes is None and top >= 1:
-        layer_sizes = {
-            r["layer"]: r["sz"]
-            for r in hierarchy.groupBy("layer")
-            .agg(F.countDistinct("id").alias("sz"))
-            .collect()
-        }
+    if snap is not None:
+        if top_layer not in (None, snap.top_layer) or m != snap.m:
+            raise ValueError(
+                "serving_state was built for top_layer="
+                f"{snap.top_layer}, m={snap.m}"
+            )
+        top = snap.top_layer
+        if layer_sizes is None:
+            layer_sizes = {
+                l: snap.layer_sizes[l] for l in range(1, top + 1)
+            }
+    else:
+        top = (
+            top_layer
+            if top_layer is not None
+            else hierarchy.agg(F.max("layer").alias("t")).collect()[0]["t"]
+        )
+        if top is None:
+            raise ValueError("hierarchy has no layers")
+        if layer_sizes is None and top >= 1:
+            layer_sizes = {
+                r["layer"]: r["sz"]
+                for r in hierarchy.groupBy("layer")
+                .agg(F.countDistinct("id").alias("sz"))
+                .collect()
+            }
     # pick the start layer: the DEEPEST built layer that fits
     # start_budget (exhaustive seed beats walking everything above
     # it); if none fits, the entry membership above the top built
@@ -4746,63 +5085,7 @@ def hnsw_topk_search(
         for l in (layer_sizes or {})
         if l >= 1 and layer_sizes[l] <= start_budget
     ]
-    if fits:
-        s = min(fits)
-        if nav_members is not None:
-            # one row per member by construction — no distinct, no
-            # edge-table scan
-            members = nav_members.filter(F.col("layer") == s).select(
-                F.col(id_col).alias("node")
-            )
-        else:
-            members = (
-                hierarchy.filter(F.col("layer") == s)
-                .select(F.col("id").alias("node"))
-                .distinct()
-            )
-    elif nav_members is not None and top >= 1:
-        # entry membership above the top built layer + the smallest-id
-        # backstop, both straight from the materialized member table
-        # (layer top+1 may be empty on a tiny corpus — the backstop
-        # rows are layer-top members, so the walk cannot drop them)
-        s = top + 1
-        members = (
-            nav_members.filter(F.col("layer") == s)
-            .select(F.col(id_col).alias("node"))
-            .unionByName(
-                nav_members.filter(F.col("layer") == top)
-                .select(F.col(id_col).alias("node"))
-                .orderBy("node")
-                .limit(beam)
-            )
-            .distinct()
-        )
-    else:
-        # membership of the level above the top built layer, straight
-        # from the level expression — no graph, no collect. Tiny-
-        # corpus edge: nobody drew the level, so union the flat
-        # beam-smallest default (dedup'd by the hop-0 aggregate).
-        s = top + 1
-        members = (
-            corpus.filter(_hnsw_hash(id_col) % (m**s) == 0)
-            .select(F.col(id_col).alias("node"))
-            .unionByName(
-                # non-empty backstop: the smallest ids of layer `top`
-                # itself (m**0 == 1 makes this the flat default when
-                # there are no upper layers) — these ARE members of
-                # the first walked layer, so the member-filtered walk
-                # cannot drop them
-                corpus.filter(_hnsw_hash(id_col) % (m**top) == 0)
-                .select(F.col(id_col).alias("node"))
-                .orderBy("node")
-                .limit(beam)
-            )
-            .distinct()
-        )
-    ent_df = (
-        queries.select(F.col(id_col).alias("qid"))
-        .crossJoin(F.broadcast(members))
-    )
+    s = min(fits) if fits else top + 1
     if descent_stride is None:
         import math as _math
 
@@ -4820,6 +5103,94 @@ def hnsw_topk_search(
         # descent remains the mechanism, exactly HNSW's regime.
         max_walks = 0 if fits else len(walk_layers)
     walk_layers = walk_layers[: max_walks]
+    if snap is not None:
+        # the relational tier's plan-time checks, same messages
+        if k < 1 or hops < 0 or (walk_layers and upper_hops < 0):
+            raise ValueError("k must be >= 1 and hops >= 0")
+        if beam <= k or (walk_layers and upper_beam <= 1):
+            raise ValueError("beam must exceed k")
+        if s > top + 1:
+            raise ValueError(
+                f"start layer {s} is above the snapshot's top layer + 1"
+            )
+        # only the output sort depends on the batch size: a
+        # single-partition probe (one task, no exchange) bounded at
+        # the sort's 1000-query cut
+        nq = (
+            query_rows
+            if query_rows is not None
+            else queries.coalesce(1).limit(1_001).count()
+        )
+        return _hnsw_snapshot_descent(
+            queries, snap, id_col, vec_col, k, beam, hops,
+            seed_layer=s,
+            # no fitted layer: the entry membership plus the
+            # smallest-id backstop of layer `top`, as below
+            backstop=0 if fits else beam,
+            walk_layers=walk_layers,
+            upper_beam=upper_beam,
+            upper_hops=upper_hops,
+            tiny_batch=nq <= 1_000,
+        )
+    if fits:
+        if nav_members is not None:
+            # one row per member by construction — no distinct, no
+            # edge-table scan
+            members = nav_members.filter(F.col("layer") == s).select(
+                F.col(id_col).alias("node")
+            )
+        else:
+            members = (
+                hierarchy.filter(F.col("layer") == s)
+                .select(F.col("id").alias("node"))
+                .distinct()
+            )
+    elif nav_members is not None and top >= 1:
+        # entry membership above the top built layer + the smallest-id
+        # backstop, both straight from the materialized member table
+        # (layer top+1 may be empty on a tiny corpus — the backstop
+        # rows are layer-top members, so the walk cannot drop them)
+        members = (
+            nav_members.filter(F.col("layer") == s)
+            .select(F.col(id_col).alias("node"))
+            .unionByName(
+                nav_members.filter(F.col("layer") == top)
+                .select(F.col(id_col).alias("node"))
+                .orderBy("node")
+                .limit(beam)
+            )
+            .distinct()
+        )
+    else:
+        # membership of the level above the top built layer, straight
+        # from the level expression — no graph, no collect. Tiny-
+        # corpus edge: nobody drew the level, so union the flat
+        # beam-smallest default (dedup'd by the hop-0 aggregate).
+        members = (
+            corpus.filter(_hnsw_hash(id_col) % (m**s) == 0)
+            .select(F.col(id_col).alias("node"))
+            .unionByName(
+                # non-empty backstop: the smallest ids of layer `top`
+                # itself (m**0 == 1 makes this the flat default when
+                # there are no upper layers) — these ARE members of
+                # the first walked layer, so the member-filtered walk
+                # cannot drop them
+                corpus.filter(_hnsw_hash(id_col) % (m**top) == 0)
+                .select(F.col(id_col).alias("node"))
+                .orderBy("node")
+                .limit(beam)
+            )
+            .distinct()
+        )
+    nq = (
+        query_rows
+        if query_rows is not None
+        else queries.limit(100_001).count()
+    )
+    ent_df = (
+        queries.select(F.col(id_col).alias("qid"))
+        .crossJoin(F.broadcast(members))
+    )
     for l in walk_layers:
         g_l = hierarchy.filter(F.col("layer") == l).drop("layer")
         # the walk only ever visits layer members, so its scoring

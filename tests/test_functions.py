@@ -250,3 +250,39 @@ def test_cache_layout_helpers(spark):
         == spark.sparkContext.defaultParallelism
     )
     d.unpersist()
+
+
+def test_cache_census_matches_calls_not_text():
+    """tools/cache_census.py finds cache sites in the AST (ADVICE r13
+    #4): a storage-level or multi-line ``.persist(...)`` is a bare
+    site, ``.rdd.persist(...)`` is the allowlisted RDD kind, and the
+    word in a comment or a string is no site at all."""
+    import importlib.util
+    import os
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools", "cache_census.py",
+    )
+    spec = importlib.util.spec_from_file_location("cache_census", path)
+    census = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(census)
+    src = (
+        "a = df.persist(StorageLevel.DISK_ONLY)\n"
+        "b = (df\n"
+        "     .persist(\n"
+        "     ))\n"
+        "c = df.rdd.persist()\n"
+        "# df.persist() in a comment\n"
+        "s = 'x.persist()'\n"
+        "d = df.transform(cache_auto)\n"
+        "e = df.transform(cache_pinned('k', partitions=7))\n"
+    )
+    assert sorted(
+        (line, kind, detail) for line, kind, detail in census._sites(src)
+        if kind != "bare"
+    ) == [(5, "rdd", "df.rdd.persist()"), (8, "auto", ""),
+          (9, "pinned", "'k', partitions=7")]
+    assert sorted(
+        line for line, kind, _ in census._sites(src) if kind == "bare"
+    ) == [1, 3]

@@ -2003,6 +2003,84 @@ def test_vector_search_hierarchy_dispatch_at_scale_threshold(spark, embeddings):
     assert got2 == {q: q + 10_000_000 for q in range(5)}
 
 
+def test_vector_search_snapshot_lifetime(spark):
+    """The descent tier's serving state is one broadcast HnswSnapshot
+    per index epoch, released (Broadcast.unpersist, never destroy)
+    only when the index mutates: a frame search() returned before an
+    add or a remove still collects the same rows after it, and across
+    search → add → search → remove → search the JVM's persisted RDD
+    set never grows past what the first search left — no serving
+    table is localCheckpointed per epoch. Counted after a forced
+    Python + JVM GC, so only relations something still holds are
+    counted, not builder intermediates awaiting the ContextCleaner."""
+    import gc
+    import time
+
+    import numpy as np
+    import pandas as pd
+
+    from job_post_similarity_spark.index_api import VectorSearch
+    from job_post_similarity_spark.operators.ann import HnswSnapshot
+
+    sc = spark.sparkContext
+    rng = np.random.default_rng(7)
+    centers = rng.normal(size=(6, 16))
+    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+    v = np.concatenate([c + 0.05 * rng.normal(size=(40, 16)) for c in centers])
+    v /= np.linalg.norm(v, axis=1, keepdims=True)
+
+    def frame(ids, vecs):
+        return spark.createDataFrame(
+            pd.DataFrame(
+                {"vec_id": list(ids), "embedding": [list(map(float, x)) for x in vecs]}
+            ),
+            "vec_id bigint, embedding array<double>",
+        )
+
+    def persisted() -> set:
+        gc.collect()
+        sc._jvm.System.gc()
+        seen = []
+        for _ in range(40):  # the ContextCleaner runs asynchronously
+            time.sleep(0.25)
+            seen.append(set(sc._jsc.getPersistentRDDs().keySet()))
+            if len(seen) >= 3 and seen[-1] == seen[-2] == seen[-3]:
+                break
+        return seen[-1]
+
+    vs = VectorSearch(16, "HNSW32", spark=spark)
+    vs.exact_shortcut_rows = 0
+    vs.hierarchy_min_rows = 0
+    vs.add(frame(range(240), v))
+    queries = frame(range(1000, 1012), v[::20] + 0.01)
+    frames, answers = [], []
+
+    def search():
+        out = vs.search(queries, k=3)
+        answers.append(out.collect())
+        frames.append(out)
+        assert isinstance(vs._serving_state, HnswSnapshot)
+        assert len(answers[-1]) == 12 * 3
+
+    def old_frames_still_collect():
+        for out, rows in zip(frames, answers):
+            assert out.collect() == rows
+
+    before = persisted()  # whatever earlier tests still hold
+    search()
+    first = len(persisted() - before)
+    vs.add(frame(range(500, 510), v[:10] * 0.99))
+    old_frames_still_collect()
+    search()
+    assert len(persisted() - before) <= first
+    vs.remove([0, 1, 2, 500])
+    old_frames_still_collect()
+    search()
+    assert len(persisted() - before) <= first
+    assert answers[2] != answers[0]  # the removed ids left the index
+    assert not {r["neighbor_id"] for r in answers[2]} & {0, 1, 2, 500}
+
+
 def test_vector_search_saves_and_reloads_hierarchy_artifact(
     spark, embeddings, tmp_path
 ):

@@ -2278,7 +2278,9 @@ def test_hnsw_serving_state_sentinel_layer_sizes(spark):
     import numpy as np
 
     from job_post_similarity_spark.operators.ann import (
+        HnswSnapshot,
         hnsw_hierarchy_build,
+        hnsw_levels,
         hnsw_serving_state,
     )
 
@@ -2302,13 +2304,27 @@ def test_hnsw_serving_state_sentinel_layer_sizes(spark):
     )
     assert 1 not in tabs and 0 not in tabs
     # (b) sentinel size + trustworthy n: est = max(21, 60//2) = 30,
-    # within the cap -> built; layer 0 within the cap -> built
+    # within the cap -> built; layer 0 is never built above the cap
     tabs = hnsw_serving_state(
+        df, hier, top, layer_sizes={1: 21}, size_cap=20,
+        broadcast_cap=40, corpus_rows=60, **common,
+    )
+    assert 1 in tabs and 0 not in tabs
+    assert tabs[1].count() > 0
+    # (b') the whole corpus within the cap: one broadcast snapshot
+    # serving every layer instead of per-layer tables
+    snap = hnsw_serving_state(
         df, hier, top, layer_sizes={1: 21}, size_cap=20,
         broadcast_cap=100, corpus_rows=60, **common,
     )
-    assert 1 in tabs and 0 in tabs
-    assert tabs[1].count() > 0
+    assert isinstance(snap, HnswSnapshot)
+    assert snap.top_layer == top
+    assert snap.layer_sizes[0] == 60
+    levels = hnsw_levels(df)
+    for l in (1, top):
+        assert snap.layer_sizes[l] == levels.filter(F.col("level") >= l).count()
+    assert snap.layer_sizes[1] > 0
+    snap.release()
     # (c) sentinel size + trustworthy n, estimate OVER the cap:
     # skipped even though the raw sentinel (21) sits under it
     tabs = hnsw_serving_state(
@@ -2326,6 +2342,232 @@ def test_hnsw_serving_state_sentinel_layer_sizes(spark):
             broadcast_cap=40, **common,
         )
         assert 1 in tabs
+
+
+def _clustered_unit(seed, clusters, per, dim):
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    centers = rng.normal(size=(clusters, dim))
+    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+    v = np.concatenate(
+        [c + 0.05 * rng.normal(size=(per, dim)) for c in centers]
+    )
+    return v / np.linalg.norm(v, axis=1, keepdims=True)
+
+
+def _typed_vec_df(spark, ids, vecs, id_t="bigint", el_t="double"):
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {"vec_id": list(ids), "embedding": [list(map(float, v)) for v in vecs]}
+        ),
+        f"vec_id {id_t}, embedding array<{el_t}>",
+    )
+
+
+def test_hnsw_snapshot_tier_equals_relational(spark):
+    """hnsw_topk_search through the broadcast HnswSnapshot (one scan
+    per batch) returns the relational reference tier's rows in the
+    same order, byte for byte: fitted seed, forced walks from the
+    entry membership (start_budget=1), a fitted seed plus forced
+    walks, corpus-member queries (self-exclusion) and external ids,
+    f64 and f32 vectors, bigint and string ids, k one below beam, a
+    batch over the 1000-query single-partition sort (the orderBy
+    path), an empty batch (same schema, id types kept), an upper
+    layer with edges to non-members (the walk must not step off its
+    layer), and an empty entry layer (the smallest-id backstop seeds
+    alone)."""
+    import numpy as np
+
+    from job_post_similarity_spark.operators.ann import (
+        HnswSnapshot,
+        hnsw_hierarchy_build,
+        hnsw_levels,
+        hnsw_serving_state,
+        hnsw_topk_search,
+    )
+
+    vecs = _clustered_unit(23, 8, 25, 16)
+    n = len(vecs)
+    rng = np.random.default_rng(29)
+
+    def same(queries, df, snap, kw):
+        want = hnsw_topk_search(queries, df, **kw)
+        got = hnsw_topk_search(queries, df, serving_state=snap, **kw)
+        assert [
+            (f.name, f.dataType) for f in got.schema.fields
+        ] == [(f.name, f.dataType) for f in want.schema.fields]
+        rows = got.collect()
+        assert [tuple(r) for r in rows] == [
+            tuple(r) for r in want.collect()
+        ], kw
+        return rows
+
+    for id_t, el_t in (("bigint", "double"), ("string", "float")):
+        ids = list(range(n)) if id_t == "bigint" else [f"p{i:04d}" for i in range(n)]
+        df = _typed_vec_df(spark, ids, vecs, id_t, el_t)
+        meta = {}
+        hier = hnsw_hierarchy_build(
+            df, k=8, iters=3, entry_budget=8, meta=meta
+        ).localCheckpoint()
+        snap = hnsw_serving_state(df, hier, meta["top_layer"], corpus_rows=n)
+        assert isinstance(snap, HnswSnapshot)
+        sizes = meta["layer_sizes"]
+        assert meta["top_layer"] >= 2 and sizes[2] < sizes[1]
+        base = dict(
+            k=3, hierarchy=hier, entry_budget=8,
+            top_layer=meta["top_layer"], layer_sizes=sizes,
+            size_cap=meta["size_cap"],
+        )
+        members = df.filter(F.col("vec_id").isin(ids[::17]))
+        ext_ids = (
+            [10_000 + i for i in range(12)]
+            if id_t == "bigint"
+            else [f"q{i}" for i in range(12)]
+        )
+        noisy = vecs[::17] + 0.02 * rng.normal(size=(12, 16))
+        external = _typed_vec_df(spark, ext_ids, noisy, id_t, el_t)
+        cases = [
+            (members, {}),  # fitted seed: layer 1 fits 1024
+            (members, {"start_budget": 1}),  # entry seed + walks
+            (external, {"start_budget": 1}),
+            (external, {"k": 15, "beam": 16}),
+        ]
+        if id_t == "bigint":
+            cases += [
+                # fitted layer 2, forced walk over layer 1
+                (members, {"start_budget": sizes[2], "max_walks": 99}),
+                (external, {}),
+            ]
+        for queries, extra in cases:
+            rows = same(queries, df, snap, {**base, **extra})
+            assert len(rows) == 12 * extra.get("k", 3)
+        if id_t == "bigint":
+            # > 1000 queries: the orderBy output path
+            big = _typed_vec_df(
+                spark,
+                range(20_000, 21_100),
+                vecs[rng.integers(0, n, 1100)]
+                + 0.02 * rng.normal(size=(1100, 16)),
+            )
+            assert len(same(big, df, snap, base)) == 1100 * 3
+            # empty batch: same schema, no rows
+            assert same(external.limit(0), df, snap, base) == []
+            # walked layer 2 gets edges from every member to ten
+            # non-members of its cluster; hops=0 serves the walks'
+            # hand-off as is
+            lv = {
+                r["vec_id"]: r["level"]
+                for r in hnsw_levels(df, max_level=2).collect()
+            }
+            extra = [
+                (2, a, b, 99, 0)
+                for a in ids if lv[a] == 2
+                for b in [x for x in ids if lv[x] < 2 and x // 25 == a // 25][:10]
+            ]
+            doctored = hier.unionByName(
+                spark.createDataFrame(extra, hier.schema)
+            )
+            dsnap = hnsw_serving_state(
+                df, doctored, meta["top_layer"], corpus_rows=n
+            )
+            kw = {**base, "hierarchy": doctored, "start_budget": 1, "hops": 0}
+            assert len(same(members, df, dsnap, kw)) == 12 * 3
+            dsnap.release()
+        snap.release()
+
+    # a corpus whose ids never draw level 2: layer 1 is the top built
+    # layer and the entry membership above it is empty
+    pool = _typed_vec_df(spark, range(400), np.zeros((400, 1)))
+    lv = {
+        r["vec_id"]: r["level"]
+        for r in hnsw_levels(pool, max_level=2).collect()
+    }
+    pick = [i for i in range(400) if lv[i] == 0][:30]
+    pick += [i for i in range(400) if lv[i] == 1][:20]
+    df = _typed_vec_df(spark, pick, _clustered_unit(37, 5, 10, 16))
+    meta = {}
+    hier = hnsw_hierarchy_build(df, k=4, iters=2, entry_budget=8, meta=meta)
+    assert meta["top_layer"] == 1
+    snap = hnsw_serving_state(df, hier, 1, corpus_rows=50)
+    assert snap.layer_sizes[2] == 0
+    rows = same(
+        df.filter(F.col("vec_id").isin(pick[::7])), df, snap,
+        dict(k=2, hierarchy=hier, entry_budget=8, top_layer=1,
+             layer_sizes=meta["layer_sizes"], start_budget=1),
+    )
+    assert len(rows) == 8 * 2
+    snap.release()
+
+
+def test_hnsw_snapshot_dirty_query_raises_in_scan(spark):
+    """A query row with a null vector, a null element or the wrong
+    width fails the snapshot scan itself with a ValueError naming the
+    query id — no probe or validation job of its own (one job, the
+    scan). The corpus gets the same checks (and a duplicate-id check)
+    when the snapshot is built."""
+    from pyspark.errors import PythonException
+
+    from job_post_similarity_spark.operators.ann import (
+        hnsw_hierarchy_build,
+        hnsw_serving_state,
+        hnsw_topk_search,
+    )
+
+    vecs = _clustered_unit(31, 4, 15, 8)
+    df = _typed_vec_df(spark, range(60), vecs)
+    meta = {}
+    hier = hnsw_hierarchy_build(df, k=4, iters=2, entry_budget=4, meta=meta)
+    snap = hnsw_serving_state(df, hier, meta["top_layer"], corpus_rows=60)
+    good = [float(x) for x in vecs[3]]
+    sc = spark.sparkContext
+    for bad_id, bad_vec, what in (
+        (7, None, "a null vector"),
+        (8, good[:3], "3 dims, the index has 8"),
+        (9, good[:5] + [None] + good[6:], "a null element"),
+    ):
+        queries = spark.createDataFrame(
+            [(100, good), (bad_id, bad_vec)],
+            "vec_id bigint, embedding array<double>",
+        )
+        group = f"dirty_query_{bad_id}"
+        sc.setJobGroup(group, "dirty query scan")
+        try:
+            with pytest.raises(PythonException) as err:
+                hnsw_topk_search(
+                    queries, df, k=2, hierarchy=hier,
+                    top_layer=meta["top_layer"],
+                    layer_sizes=meta["layer_sizes"], query_rows=2,
+                    serving_state=snap,
+                ).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert f"ValueError: hnsw_topk_search: query id {bad_id} has {what}" in str(
+            err.value
+        )
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    snap.release()
+    # the same checks on the corpus, at snapshot build, name the id
+    for rows, what in (
+        ([(1, good), (2, good), (2, good)], "HNSW corpus id 2 is not unique"),
+        ([(1, good), (2, None)], "HNSW corpus id 2: null vector"),
+        ([(1, good), (2, good[:3])], "HNSW corpus id 2: 3 dims, not 8"),
+        (
+            [(1, good), (2, good[:5] + [None] + good[6:])],
+            "HNSW corpus id 2: a null element",
+        ),
+    ):
+        dirty = spark.createDataFrame(
+            rows, "vec_id bigint, embedding array<double>"
+        )
+        with pytest.raises(ValueError) as err:
+            hnsw_serving_state(
+                dirty, hier, meta["top_layer"], corpus_rows=len(rows)
+            )
+        assert str(err.value) == what
 
 
 def test_rabitq_flat_boundary_ties_partition_invariant(spark):

@@ -7,10 +7,13 @@ explicit — see caching.py for why (the
 ``canChangeCachedPlanOutputPartitioning`` fallout class from round
 12). This tool lists every call site with its policy and, in strict
 mode (the default; ``--report-only`` disables), EXITS 1 on any bare
-``.persist()`` left outside caching.py — a new cached relation cannot
-land without declaring how it is laid out. RDD-level
-``.rdd.persist()`` sites are outside DataFrame cache planning and are
-allowlisted (listed, not failed).
+``.persist(...)`` call left outside caching.py — a new cached relation
+cannot land without declaring how it is laid out. RDD-level
+``.rdd.persist(...)`` sites are outside DataFrame cache planning and
+are allowlisted (listed, not failed). Sites are found in the parsed
+AST, not the text: calls with a storage level or split over lines
+count, the words in comments and strings do not. Each site is
+reported at the line of its ``.persist`` / ``.transform`` attribute.
 
 Writes CACHE_CENSUS.md and prints one JSON summary line.
 
@@ -19,9 +22,9 @@ Usage: python tools/cache_census.py [--report-only]
 
 from __future__ import annotations
 
+import ast
 import json
 import os
-import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -42,38 +45,69 @@ def py_files():
                     yield os.path.relpath(os.path.join(dirpath, f), REPO)
 
 
+def _sites(src: str):
+    """Yield ``(line, kind, detail)`` for every cache call in ``src``:
+    kind is "auto" / "pinned" (``.transform(cache_auto)`` /
+    ``.transform(cache_pinned(...))``), "rdd" (``<x>.rdd.persist(...)``)
+    or "bare" (any other ``.persist(...)``)."""
+    for node in ast.walk(ast.parse(src)):
+        if not (
+            isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+        ):
+            continue
+        fn = node.func
+        if fn.attr == "persist":
+            recv = fn.value
+            rdd = isinstance(recv, ast.Attribute) and recv.attr == "rdd"
+            kind = "rdd" if rdd else "bare"
+            yield fn.end_lineno, kind, ast.get_source_segment(src, node)
+        elif fn.attr == "transform" and len(node.args) == 1:
+            arg = node.args[0]
+            if isinstance(arg, ast.Name) and arg.id == "cache_auto":
+                yield fn.end_lineno, "auto", ""
+            elif (
+                isinstance(arg, ast.Call)
+                and isinstance(arg.func, ast.Name)
+                and arg.func.id == "cache_pinned"
+            ):
+                inner = ", ".join(
+                    ast.get_source_segment(src, a)
+                    for a in [*arg.args, *arg.keywords]
+                )
+                yield fn.end_lineno, "pinned", inner
+
+
 def main() -> None:
     strict = "--report-only" not in sys.argv
     rows = []       # (file, line, policy, detail)
     violations = [] # (file, line, text)
     rdd_sites = []
-    pin_re = re.compile(r"\.transform\(cache_pinned\(([^)]*)\)")
     for rel in py_files():
         if rel == HELPER:
             continue
         with open(os.path.join(REPO, rel)) as fh:
-            for i, line in enumerate(fh, 1):
-                if ".rdd.persist()" in line:
-                    rdd_sites.append((rel, i))
-                    continue
-                if ".persist()" in line:
-                    violations.append((rel, i, line.strip()))
-                if ".transform(cache_auto)" in line:
-                    rows.append((rel, i, "auto", "AQE byte-sized re-layout"))
-                m = pin_re.search(line)
-                if m:
-                    rows.append((
-                        rel, i, "pinned",
-                        f"explicit defaultParallelism({m.group(1).strip()})",
-                    ))
+            src = fh.read()
+        for i, kind, detail in sorted(_sites(src)):
+            if kind == "rdd":
+                rdd_sites.append((rel, i))
+            elif kind == "bare":
+                violations.append((rel, i, " ".join(detail.split())))
+            elif kind == "auto":
+                rows.append((rel, i, "auto", "AQE byte-sized re-layout"))
+            else:
+                rows.append((
+                    rel, i, "pinned",
+                    f"explicit defaultParallelism({detail})",
+                ))
     out = [
         "# CACHE CENSUS — cached relations and their layout policies",
         "",
         "Generated by tools/cache_census.py. Every DataFrame cache on a",
         "query path routes through `caching.cache_auto` /",
         "`caching.cache_pinned` (see caching.py for the policy",
-        "rationale); bare `.persist()` fails the strict gate in",
-        "tools/verify_all.py.",
+        "rationale); a bare `.persist(...)` call (found in the AST:",
+        "storage-level and multi-line calls count, comments and",
+        "strings do not) fails the strict gate in tools/verify_all.py.",
         "",
         "| file:line | policy | layout |",
         "|---|---|---|",
@@ -87,7 +121,7 @@ def main() -> None:
         "",
     ]
     if violations:
-        out.append("## VIOLATIONS (bare DataFrame .persist())")
+        out.append("## VIOLATIONS (bare DataFrame .persist(...))")
         for rel, i, text in violations:
             out.append(f"- {rel}:{i}: `{text}`")
     with open(os.path.join(REPO, "CACHE_CENSUS.md"), "w") as fh:
