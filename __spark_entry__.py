@@ -191,9 +191,9 @@ def sql_parameterized_revenue(
     ``spark.sql(sql, args={...})``): the injection-safe text-query
     API a serving layer uses. Same plan space as the literal-SQL
     twin `sql_interface_revenue`; parameters bind a segment filter
-    and a price floor. (Oracle staged in _PENDING_ORACLES with the
-    parameters inlined as literals — binding is the surface under
-    test, the PLAN must be identical.)"""
+    and a price floor. (The oracle inlines the parameters as
+    literals — binding is the surface under test, the PLAN must be
+    identical.)"""
     for t in ("orders", "customer"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"vp_{t}")
     return spark.sql(
@@ -1486,8 +1486,7 @@ def hnsw_descent_recall_embeddings(
     reference's default HNSW32 index (app/vector_search.py:42-47,
     app/main.py:47). recall@1 vs the exact tier is 50/50 at
     sf0.001/0.01/0.1 (measured, deterministic); floor form so a
-    borderline fixture regeneration cannot red-shift the hash.
-    (Oracle staged in _PENDING_ORACLES for the r10 window.)"""
+    borderline fixture regeneration cannot red-shift the hash."""
     from job_post_similarity_spark.operators import ann, index_store
 
     clustered, n, step = _clustered_emb_corpus(spark, sf_dir)
@@ -1798,7 +1797,7 @@ def hierarchy_insert_exact_embeddings(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Incremental HIERARCHY maintenance gate (round 10 —
-    ``ann.hnsw_hierarchy_insert``; staged oracle for the r11 window):
+    ``ann.hnsw_hierarchy_insert``):
     insert 50 planted twins into the layered hierarchy built over the
     exact 400-row clustered graph, repairing each layer the twins'
     md5 levels touch — the result must equal the hierarchy REBUILT
@@ -1908,7 +1907,7 @@ def unigram_train_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     Viterbi E-step and usage M-step, the vocab prune — replays as one
     generated DuckDB query (unrolled positional DP; see
     ``_unigram_oracle``). Output: the final (piece, freq, lp6)
-    vocabulary. (Oracle staged in _PENDING_ORACLES.)"""
+    vocabulary."""
     docs = load_table(spark, sf_dir, "documents")
     return text_analysis.unigram_lm_train(docs, "text", **_UNIGRAM_KNOBS)
 
@@ -1923,8 +1922,7 @@ def unigram_loss_prune_documents(
     default tier ranks by raw Viterbi usage frequency, which keeps
     cheaply-substitutable pieces the loss criterion prunes). Same
     knobs as ``unigram_train_documents``; the oracle replays the
-    what-if DP with a banned-piece block per (word, path piece) pair
-    (staged in _PENDING_ORACLES)."""
+    what-if DP with a banned-piece block per (word, path piece) pair."""
     docs = load_table(spark, sf_dir, "documents")
     return text_analysis.unigram_lm_train(
         docs, "text", prune="loss", **_UNIGRAM_KNOBS
@@ -1942,8 +1940,7 @@ def unigram_shrink_train_documents(
     one-shot tiers (``unigram_train_documents`` frequency cut,
     ``unigram_loss_prune_documents`` loss cut) miss that trajectory
     effect — on the gate corpus all three select different
-    vocabularies. Oracle: 2 rounds unrolled to 6 DP blocks (staged
-    in _PENDING_ORACLES for the r10 window)."""
+    vocabularies. Oracle: 2 rounds unrolled to 6 DP blocks."""
     docs = load_table(spark, sf_dir, "documents")
     return text_analysis.unigram_lm_train(
         docs, "text", prune="loss",
@@ -1959,7 +1956,7 @@ def unigram_token_count_documents(
     and summed micro-log likelihood (``unigram_viterbi_encode`` — the
     Arrow-batched serving shape). The oracle replays training AND
     re-segments every distinct word under the final scores with a
-    second unrolled DP block. (Oracle staged in _PENDING_ORACLES.)"""
+    second unrolled DP block."""
     docs = load_table(spark, sf_dir, "documents")
     pieces = text_analysis.unigram_lm_train(
         docs, "text", **_UNIGRAM_KNOBS
@@ -3531,9 +3528,8 @@ def ngram_lm_train_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     ARPA-analog relation (order, gram words, count, conditional
     micro-log). Output bounded to grams seen >= 3 times at order >= 2
     (the order-1 vocabulary is graded through the score gate's OOV
-    arithmetic). (Oracle staged in _PENDING_ORACLES for the r10
-    window: three gram-count CTEs + context joins replay every lp6 by
-    value.)"""
+    arithmetic). (Oracle: three gram-count CTEs + context joins
+    replay every lp6 by value.)"""
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 2 == 0
     )
@@ -3551,8 +3547,7 @@ def ngram_lm_score_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     odd-doc_id half, per-doc integer micro-log sum + perplexity.
     ``bigram_perplexity_documents`` grades the self-trained add-k
     tier; this gate grades the backoff chain (3 suffix-keyed left
-    joins + the OOV floor) and the train/score artifact split.
-    (Oracle staged in _PENDING_ORACLES for the r10 window.)"""
+    joins + the OOV floor) and the train/score artifact split."""
     docs = load_table(spark, sf_dir, "documents")
     model = text_analysis.ngram_lm_train(
         docs.filter(F.col("doc_id") % 2 == 0), "text"
@@ -3839,8 +3834,7 @@ def contamination_matrix_documents(
     """Cross-source trigram contamination matrix: shared distinct
     grams + directional containment ppm for every source pair — the
     all-pairs corpus audit behind mixture curation (the 1-vs-corpus
-    scan is `decontaminate_documents`). (Oracle staged in
-    _PENDING_ORACLES.)"""
+    scan is `decontaminate_documents`)."""
     docs = load_table(spark, sf_dir, "documents")
     return curation.contamination_matrix(docs, "source", n=3)
 
@@ -3850,8 +3844,7 @@ def curriculum_shards_documents(
 ) -> DataFrame:
     """Curriculum ordering: corpus ranked by length score (desc, id
     tiebreak) through the two-phase global_rank — no single-partition
-    window — and cut into 64-doc ordered shards with per-shard stats.
-    (Oracle staged in _PENDING_ORACLES.)"""
+    window — and cut into 64-doc ordered shards with per-shard stats."""
     from job_post_similarity_spark.operators.curation import (
         curriculum_shards,
     )
@@ -3867,8 +3860,8 @@ def entity_resolution_suppliers(
 ) -> DataFrame:
     """End-to-end ER: FastSS-blocked edit-distance ≤ 1 matching on
     supplier names → connected components → best-balance canonical
-    representative per entity. (Oracle staged in _PENDING_ORACLES —
-    quadratic levenshtein + recursive reachability + keep-best CTE.)"""
+    representative per entity. (Oracle: quadratic levenshtein +
+    recursive reachability + keep-best CTE.)"""
     sup = load_table(spark, sf_dir, "supplier")
     out = dedup.entity_resolution(sup, "s_suppkey", "s_name", "s_acctbal")
     return (
@@ -3891,8 +3884,8 @@ def quality_ensemble_documents(
     three independent, individually-oracled signals — heuristic
     quality score ≥ 0.5, Gopher gates, md5-twin classifier sign —
     majority-voted into the keep decision. Integer votes only; each
-    signal is engine-exact, so the composition is too. (Oracle staged
-    in _PENDING_ORACLES, generated by `_quality_ensemble_oracle`.)"""
+    signal is engine-exact, so the composition is too. (Oracle
+    generated by `_quality_ensemble_oracle`.)"""
     from job_post_similarity_spark.operators.text_analysis import (
         gopher_quality_flags,
         linear_classifier_twin,
@@ -3934,8 +3927,8 @@ def quality_filter_twin_documents(
     """Deterministic twin of the learned quality filter
     (`linear_text_classifier`): md5 bucket hashing + md5-derived
     integer milli-weights, mean-weight logit, sign-threshold keep —
-    every decision value-graded cross-engine. (Oracle staged in
-    _PENDING_ORACLES, generated by `_quality_twin_oracle`.)"""
+    every decision value-graded cross-engine. (Oracle generated by
+    `_quality_twin_oracle`.)"""
     from job_post_similarity_spark.operators.text_analysis import (
         linear_classifier_twin,
     )
@@ -3950,8 +3943,7 @@ def embed_twin_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer md5 components → int64 norm² → IEEE-exact normalize →
     integer micros, comma-joined. Proves the full embed pipeline's
     VALUES cross-engine, not just a property. Production tier stays
-    `hashing_embedder`. (Oracle staged in _PENDING_ORACLES,
-    generated by `_embed_twin_oracle`.)"""
+    `hashing_embedder`. (Oracle generated by `_embed_twin_oracle`.)"""
     from job_post_similarity_spark.functions.embed import (
         md5_twin_components,
     )
@@ -3993,8 +3985,8 @@ def listagg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 ``listagg … WITHIN GROUP (ORDER BY …)`` surface: the
     ANSI ordered string aggregation (per customer, the date-ordered
     status sequence) — deterministic because the WITHIN GROUP order
-    (o_orderdate, o_orderkey) is total. (Oracle staged in
-    _PENDING_ORACLES — DuckDB ``string_agg(... ORDER BY ...)``.)"""
+    (o_orderdate, o_orderkey) is total. (Oracle: DuckDB
+    ``string_agg(... ORDER BY ...)``.)"""
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_custkey") < 100
     )
@@ -4019,8 +4011,7 @@ def variant_extract_events(
     schema-on-read path for semi-structured columns (vs the
     schema-declared ``from_json`` twin in `json_extract_events`).
     The variant itself never reaches the projection (binary — the
-    driver canon couldn't hash it); only the extracted int does.
-    (Oracle staged in _PENDING_ORACLES.)"""
+    driver canon couldn't hash it); only the extracted int does."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.filter(F.col("props").isNotNull())
@@ -4039,7 +4030,7 @@ def stream_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast segment dimension (re-planned per micro-batch — the
     Structured Streaming stream-static contract), folded to per-type
     counts. On the bounded file the snapshot equals the batch join —
-    the oracle. (Oracle staged in _PENDING_ORACLES.)"""
+    the oracle."""
     from job_post_similarity_spark.streaming import stream_static_enrich
 
     dim = spark.createDataFrame(
@@ -4308,8 +4299,7 @@ def referential_profile_lineitem(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Referential-integrity profile lineitem→orders: orphaned facts
-    and childless dimension rows, one summary row. (Oracle staged in
-    _PENDING_ORACLES — enters the graded window next rotation.)"""
+    and childless dimension rows, one summary row."""
     from job_post_similarity_spark.operators.profiling import (
         referential_profile,
     )
@@ -4321,9 +4311,7 @@ def referential_profile_lineitem(
 
 def vocab_coverage_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary coverage curve: smallest top-frequency vocab
-    reaching 50/90/99% of token mass — all-integer cuts. (Oracle
-    staged in _PENDING_ORACLES — enters the graded window next
-    rotation.)"""
+    reaching 50/90/99% of token mass — all-integer cuts."""
     from job_post_similarity_spark.operators.text_analysis import (
         vocab_coverage,
     )
@@ -4337,7 +4325,7 @@ def negative_samples_embeddings(
 ) -> DataFrame:
     """Deterministic contrastive negative sampling: 5 stride-hash
     negatives per embedding id — map-side, no RNG state, replayable
-    in SQL. (Oracle staged in _PENDING_ORACLES.)"""
+    in SQL."""
     from job_post_similarity_spark.operators.sampling import (
         negative_samples,
     )
@@ -4353,8 +4341,7 @@ def equi_depth_histogram_lineitem(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Exact 10-bucket equi-depth histogram of l_extendedprice
-    (ntile over a (value, tie) total order). (Oracle staged in
-    _PENDING_ORACLES.)"""
+    (ntile over a (value, tie) total order)."""
     from job_post_similarity_spark.operators.profiling import (
         equi_depth_histogram,
     )
@@ -4376,7 +4363,7 @@ def time_weighted_avg_events(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Per-user time-weighted average of value (step-function TWA,
-    DECIMAL-weighted sums). (Oracle staged in _PENDING_ORACLES.)"""
+    DECIMAL-weighted sums)."""
     from job_post_similarity_spark.operators.windows import (
         time_weighted_avg,
     )
@@ -4394,7 +4381,7 @@ def monthly_revenue_change_orders(
     window is global-by-construction BUT runs on the POST-AGGREGATE
     month spine (one row per calendar month — dozens of rows at any
     corpus size), the bounded-frame exception PLAN_CENSUS.md flags
-    for justification. (Oracle staged in _PENDING_ORACLES.)"""
+    for justification."""
     from pyspark.sql.window import Window
 
     o = load_table(spark, sf_dir, "orders")
@@ -4429,8 +4416,7 @@ def monthly_revenue_change_orders(
 def top_tokens_by_lang_documents(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Per-language top-5 frequent tokens (grouped heavy terms).
-    (Oracle staged in _PENDING_ORACLES.)"""
+    """Per-language top-5 frequent tokens (grouped heavy terms)."""
     from job_post_similarity_spark.operators.text_analysis import (
         top_tokens_by_group,
     )
@@ -4444,8 +4430,7 @@ def nearest_centroid_embeddings(
 ) -> DataFrame:
     """Nearest-centroid (Rocchio) classification against the
     DECIMAL-exact per-label centroids — map-side literal-array dot
-    folds, no join, no shuffle. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    folds, no join, no shuffle."""
     emb = load_table(spark, sf_dir, "embeddings")
     out = knn.nearest_centroid_classify(emb)
     return out.select(
@@ -4465,7 +4450,7 @@ def semantic_dedup_embeddings(
     components, keep-min-id — every step cross-engine exact, so the
     WHOLE semantic-dedup pipeline is oracle-graded end-to-end.
     ``dedup.semantic_dedup`` (Lloyd quantizer, same downstream shape)
-    is the production path. (Oracle staged in _PENDING_ORACLES.)"""
+    is the production path."""
     emb = load_table(spark, sf_dir, "embeddings")
     return dedup.stratified_semantic_dedup(
         emb, "vec_id", "embedding", k=8, threshold=0.4
@@ -4478,8 +4463,7 @@ def dsir_weights_documents(
     """DSIR (Xie et al. 2023) importance weights: hashed-unigram
     target-vs-raw LM log-ratio per document — target corpus = the
     English slice, raw = everything. Integer micro-log sums, so the
-    whole data-selection signal is cross-engine exact. (Oracle staged
-    in _PENDING_ORACLES.)"""
+    whole data-selection signal is cross-engine exact."""
     from job_post_similarity_spark.operators.curation import dsir_weights
 
     docs = load_table(spark, sf_dir, "documents")
@@ -4496,8 +4480,7 @@ def quantize_int8_embeddings(
     representation is bit-exactly reproducible by an independent
     engine. Codes emitted comma-joined as a STRING — the driver
     canon can't hash list cells (r4 lesson); element order is
-    preserved so the hash still proves every code. (Oracle staged
-    in _PENDING_ORACLES.)"""
+    preserved so the hash still proves every code."""
     emb = load_table(spark, sf_dir, "embeddings")
     return (
         knn.quantize_int8(emb)
@@ -4517,8 +4500,7 @@ def leakage_safe_split_documents(
     """Leakage-safe train/val/test split: fold keyed on the content
     digest (exact-dup group), so duplicate documents can never
     straddle train and eval (Lee et al. 2022 §5). Map-side md5
-    bucket + cumulative fold thresholds — cross-engine exact.
-    (Oracle staged in _PENDING_ORACLES.)"""
+    bucket + cumulative fold thresholds — cross-engine exact."""
     from job_post_similarity_spark.operators.sampling import (
         leakage_safe_split,
     )
@@ -4545,8 +4527,7 @@ def expectation_report_lineitem(
     row-level contracts evaluated in ONE scan — conditional counts
     inside a single aggregate, report exploded from the one result
     row. The tax_low rule is intentionally violated by the data so
-    both report branches are exercised. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    both report branches are exercised."""
     from job_post_similarity_spark.operators.profiling import (
         expectation_report,
     )
@@ -4569,8 +4550,7 @@ def truncate_tokens_documents(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Token-budget truncation to the first 32 whitespace tokens —
-    map-side split/slice/join, codegen end-to-end. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    map-side split/slice/join, codegen end-to-end."""
     from job_post_similarity_spark.operators.preprocess import (
         truncate_tokens,
     )
@@ -4589,8 +4569,7 @@ def stream_expectation_monitor_events(
     """Streaming data-quality monitor: per-day windowed expectation
     violations over the event stream (null-hostile conditional
     counts in windowed state). Bounded input ⇒ equals the batch
-    windowed report — the oracle. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    windowed report — the oracle."""
     from job_post_similarity_spark.streaming import (
         stream_expectation_monitor,
     )
@@ -4604,7 +4583,7 @@ def psi_drift_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PSI distribution drift of l_extendedprice: pre-1998 shipments
     as the reference population vs 1998+ as the new one — equal-width
     bins over the reference min/max, per-bin PSI terms in integer
-    micro units. (Oracle staged in _PENDING_ORACLES.)"""
+    micro units."""
     from job_post_similarity_spark.operators.profiling import psi_drift
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -4620,7 +4599,7 @@ def temperature_mixture_documents(
     """Temperature-scaled (α=0.7) source-mixing weights per language
     — n^α rounded to micro ints BEFORE the normalization sum, floor
     divisions outside the aggregates, so the mixing table is
-    bit-exact cross-engine. (Oracle staged in _PENDING_ORACLES.)"""
+    bit-exact cross-engine."""
     from job_post_similarity_spark.operators.sampling import (
         temperature_mixture_weights,
     )
@@ -4635,8 +4614,7 @@ def sentence_split_documents(
     """Sentence segmentation over synthesized punctuation (the
     word-soup corpus has none: a period is inserted after each
     'spark'/'window' token first — the multimodal-gate synthesis
-    precedent). Java∩RE2 extract-all pattern, dense sent_idx.
-    (Oracle staged in _PENDING_ORACLES.)"""
+    precedent). Java∩RE2 extract-all pattern, dense sent_idx."""
     from job_post_similarity_spark.operators.text_analysis import (
         sentence_split,
     )
@@ -4654,7 +4632,7 @@ def pivot_orders_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot (long → wide, the inverse of the melt gate): yearly
     order-priority revenue matrix — ONE hash aggregate of
     conditional DECIMAL sums, explicit value list so the schema is a
-    stable contract. (Oracle staged in _PENDING_ORACLES.)"""
+    stable contract."""
     from job_post_similarity_spark.operators.preprocess import pivot_table
 
     orders = load_table(spark, sf_dir, "orders").withColumn(
@@ -4673,8 +4651,7 @@ def pivot_orders_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 def analyze_table_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE TABLE stats collection: per-column nulls / exact NDV /
     numeric min-max in ONE scan (multi-distinct Expand aggregate),
-    report exploded from the single result row. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    report exploded from the single result row."""
     from job_post_similarity_spark.operators.profiling import (
         analyze_table,
     )
@@ -4688,7 +4665,7 @@ def grouped_median_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched aggregate UDF — completes the scalar / iterator /
     UDTF / aggregate UDF quartet. np.median's even-count
     (a+b)/2 midpoint is the same IEEE computation as DuckDB's exact
-    median. (Oracle staged in _PENDING_ORACLES.)"""
+    median."""
     from job_post_similarity_spark.functions.udaf_ops import median_udaf
 
     ev = load_table(spark, sf_dir, "events")
@@ -4702,8 +4679,7 @@ def grouped_median_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def corr_matrix_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-scan Pearson correlation matrix over the lineitem numeric
     columns — DECIMAL(27,10) moment accumulation (order-independent),
-    one fixed-shape double expression per pair, rounded to 6. (Oracle
-    staged in _PENDING_ORACLES.)"""
+    one fixed-shape double expression per pair, rounded to 6."""
     from job_post_similarity_spark.operators.profiling import corr_matrix
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -4793,7 +4769,7 @@ def sorted_neighborhood_suppliers(
     """Sorted-neighborhood entity-resolution blocking over supplier
     names (window 4) with Levenshtein ≤ 2 verify — candidates from a
     frame-bounded collect over the (key, id) total order, no
-    self-join. (Oracle staged in _PENDING_ORACLES.)"""
+    self-join."""
     sup = load_table(spark, sf_dir, "supplier")
     return dedup.sorted_neighborhood_pairs(
         sup, "s_name", "s_suppkey", window=4, max_dist=2
@@ -4805,8 +4781,7 @@ def weighted_sample_documents(
 ) -> DataFrame:
     """Deterministic A-ES weighted sampling: 50 docs drawn
     proportionally to text length via ln(u)/w competition keys from
-    the engine-agnostic LCG uniform — same winners on any engine.
-    (Oracle staged in _PENDING_ORACLES.)"""
+    the engine-agnostic LCG uniform — same winners on any engine."""
     from job_post_similarity_spark.operators.sampling import (
         weighted_sample,
     )
@@ -4827,8 +4802,7 @@ def asof_forward_tolerance_events(
     """FORWARD as-of with tolerance (pandas merge_asof parity): every
     event enriched with the user's NEXT purchase event id, but only
     when it lands within 6 hours — same union+window plan as the
-    backward tier, reversed time order. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    backward tier, reversed time order."""
     from pyspark.sql.window import Window as W_
 
     from job_post_similarity_spark.operators.asof import asof_join
@@ -4870,8 +4844,7 @@ def transitive_closure_parts(
     Spark lacks): ancestor paths over a synthesized part hierarchy
     (parent = key div 5 — a branching-5 tree, the multimodal-gate
     synthesis precedent). Frontier expansion with shortest-depth
-    dedup; DuckDB replays it with WITH RECURSIVE. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    dedup; DuckDB replays it with WITH RECURSIVE."""
     from job_post_similarity_spark.operators.graph import (
         transitive_closure,
     )
@@ -4887,7 +4860,7 @@ def transitive_closure_parts(
 def linear_fit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-priority OLS trend of order value over order year —
     DECIMAL-exact moments, fixed-shape slope/intercept doubles
-    rounded to 6. (Oracle staged in _PENDING_ORACLES.)"""
+    rounded to 6."""
     from job_post_similarity_spark.operators.profiling import linear_fit
 
     orders = (
@@ -4905,7 +4878,7 @@ def mean_pool_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     as comma-joined INTEGER MICROS (driver canon can't hash list
     cells, and float→string rendering is engine-dependent — micros
     are exact: both engines start from the identical round-6
-    double). (Oracle staged in _PENDING_ORACLES.)"""
+    double)."""
     emb = load_table(spark, sf_dir, "embeddings").withColumn(
         "grp", F.pmod(F.col("vec_id"), F.lit(16))
     )
@@ -4951,8 +4924,7 @@ def ranking_metrics_embeddings(
 ) -> DataFrame:
     """Retrieval eval: hit@10 / RR / DCG / NDCG per query (integer
     micro policy) over exact top-10 neighbor lists, relevance =
-    shared pmod-8 stratum. (Oracle staged in _PENDING_ORACLES —
-    registered after _COS.)"""
+    shared pmod-8 stratum."""
     from job_post_similarity_spark.operators.knn import knn_join
     from job_post_similarity_spark.operators.metrics import (
         ranking_metrics,
@@ -4980,8 +4952,7 @@ def classification_report_embeddings(
 ) -> DataFrame:
     """Per-class precision/recall/F1 (integer ppm, F1 from raw
     tp/fp/fn — no double rounding) over the Rocchio classifier's
-    predictions. (Oracle staged in _PENDING_ORACLES — registered
-    after _COS.)"""
+    predictions."""
     from job_post_similarity_spark.operators.metrics import (
         classification_report,
     )
@@ -5000,8 +4971,7 @@ def label_propagation_parts(
     """Semi-supervised label propagation (2 rounds) over the
     synthesized part tree: seeds = part keys < 10 labeled pmod-3;
     majority vote with (votes desc, label asc) total order — oracle
-    replays the rounds unrolled (the PageRank oracle pattern).
-    (Oracle staged in _PENDING_ORACLES.)"""
+    replays the rounds unrolled (the PageRank oracle pattern)."""
     from job_post_similarity_spark.operators.graph import (
         label_propagation,
     )
@@ -5023,8 +4993,7 @@ def label_propagation_parts(
 def feature_hash_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashing-trick categorical vectorizer: (event_type, user
     bucket) features md5-hashed into 32 namespaced buckets, dense
-    count vector per event — map-side, no vocabulary, no fit state.
-    (Oracle staged in _PENDING_ORACLES.)"""
+    count vector per event — map-side, no vocabulary, no fit state."""
     from job_post_similarity_spark.functions.features import feature_hash
 
     ev = load_table(spark, sf_dir, "events").withColumn(
@@ -5044,8 +5013,7 @@ def feature_hash_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def seasonality_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly seasonality index of event value (integer cents, ISO
-    weekday via the portable epoch-day formula, one floor div).
-    (Oracle staged in _PENDING_ORACLES.)"""
+    weekday via the portable epoch-day formula, one floor div)."""
     from job_post_similarity_spark.operators.windows import (
         seasonality_profile,
     )
@@ -5060,8 +5028,7 @@ def stream_psi_drift_events(
     """Streaming PSI drift: each day's value distribution vs the
     whole-corpus reference — windowed histogram state on the stream,
     micro-integer PSI batch-side on the snapshot. Bounded input ⇒
-    equals the batch windowed PSI (the oracle). (Oracle staged in
-    _PENDING_ORACLES.)"""
+    equals the batch windowed PSI (the oracle)."""
     from job_post_similarity_spark.streaming import stream_psi_drift
 
     ref = load_table(spark, sf_dir, "events")
@@ -5074,7 +5041,7 @@ def sql_registered_udaf_events(
     """SQL-interface UDAF registration: the pandas GROUPED_AGG median
     registered via spark.udf.register and invoked from spark.sql —
     the SQL-side twin of grouped_median_events proving the
-    registration path. (Oracle staged in _PENDING_ORACLES.)"""
+    registration path."""
     from job_post_similarity_spark.functions.udaf_ops import median_udaf
 
     ev = load_table(spark, sf_dir, "events")
@@ -5092,8 +5059,7 @@ def sql_registered_udaf_events(
 def utf8_stats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """mapInArrow surface: per-doc UTF-8 byte vs char counts through
     Arrow compute kernels, no pandas round-trip (JVM twin:
-    octet_length/char_length — documented production path). (Oracle
-    staged in _PENDING_ORACLES.)"""
+    octet_length/char_length — documented production path)."""
     from job_post_similarity_spark.functions.arrow_ops import (
         utf8_byte_stats,
     )
@@ -5105,8 +5071,7 @@ def utf8_stats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dense_ids_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalable global row numbering: range-partition + per-partition
     offsets instead of the single-reducer global window — ids equal
-    row_number() − 1 over the total order exactly. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    row_number() − 1 over the total order exactly."""
     from job_post_similarity_spark.operators.preprocess import (
         assign_dense_ids,
     )
@@ -5125,7 +5090,7 @@ def session_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Semantics note the oracle encodes: a session's window end is
     last_event + gap, and a new session starts when the gap is >= 30
     minutes (window-overlap rule), vs the lag-based formulation's
-    strict >. (Oracle staged in _PENDING_ORACLES.)"""
+    strict >."""
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull()
     )
@@ -5151,8 +5116,7 @@ def bitmap_distinct_events(
     (bitmap_bucket_number / bitmap_bit_position / construct_agg /
     bitmap_count) — the roaring-bitmap-shaped exact tier between
     countDistinct (full value shuffle) and HLL (approximate):
-    per-bucket fixed-size bitmaps merge map-side. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    per-bucket fixed-size bitmaps merge map-side."""
     ev = load_table(spark, sf_dir, "events")
     b = ev.groupBy(
         "event_type",
@@ -5176,8 +5140,7 @@ def bitmap_distinct_events(
 def try_divide_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANSI-safe arithmetic surface: try_divide yields NULL (never an
     error, never inf) on zero denominators — here price per
-    incremental unit, where l_quantity == 1 makes real zeros.
-    (Oracle staged in _PENDING_ORACLES.)"""
+    incremental unit, where l_quantity == 1 makes real zeros."""
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.select(
@@ -5203,8 +5166,7 @@ def scd2_lookup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time SCD2 lookup: each event resolved against the
     Type-2 dimension AS OF its own timestamp (disjoint validity
     ranges ⇒ the backward as-of plan, not a range join). Self-
-    consistency makes the expected value the event's own run attr.
-    (Oracle staged in _PENDING_ORACLES.)"""
+    consistency makes the expected value the event's own run attr."""
     from job_post_similarity_spark.operators.cdc import (
         scd2_build,
         scd2_lookup,
@@ -5227,8 +5189,7 @@ def scd2_lookup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def calendar_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Generated date dimension 1995-1997 — range over epoch days,
-    portable ISO weekday formula, no driver loop. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    portable ISO weekday formula, no driver loop."""
     from job_post_similarity_spark.sources.io import calendar_table
 
     return calendar_table(spark, "1995-01-01", "1997-12-31")
@@ -5237,7 +5198,7 @@ def calendar_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ks_drift_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample KS statistic (bin-free drift twin of psi_drift):
     pre- vs post-1998 extended price, integer-exact CDF-difference
-    max in ppm. (Oracle staged in _PENDING_ORACLES.)"""
+    max in ppm."""
     from job_post_similarity_spark.operators.profiling import (
         ks_statistic,
     )
@@ -5253,8 +5214,7 @@ def entropy_profile_events(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Shannon entropy per categorical column in integer micro-nats
-    (per-value terms micro-rounded before the sum). (Oracle staged
-    in _PENDING_ORACLES.)"""
+    (per-value terms micro-rounded before the sum)."""
     from job_post_similarity_spark.operators.profiling import (
         entropy_profile,
     )
@@ -5268,8 +5228,7 @@ def impute_group_mean_events(
 ) -> DataFrame:
     """Group-mean null imputation (DECIMAL-exact means broadcast
     back; synthesized nulls — event_id % 37 == 0, the synthesis
-    precedent — since the corpus has none). (Oracle staged in
-    _PENDING_ORACLES.)"""
+    precedent — since the corpus has none)."""
     from job_post_similarity_spark.operators.preprocess import (
         impute_group_mean,
     )
@@ -5290,8 +5249,7 @@ def impute_group_mean_events(
 
 def one_hot_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit-vocabulary one-hot of event_type (fixed 5-wide
-    contract; unseen/NULL → zeros). (Oracle staged in
-    _PENDING_ORACLES.)"""
+    contract; unseen/NULL → zeros)."""
     from job_post_similarity_spark.operators.preprocess import one_hot
 
     ev = load_table(spark, sf_dir, "events")
@@ -5315,7 +5273,7 @@ def kfold_assign_documents(
 ) -> DataFrame:
     """5-fold CV assignment, group-keyed on the content digest so
     exact dups share a fold (the leakage_safe_split contract for
-    CV). (Oracle staged in _PENDING_ORACLES.)"""
+    CV)."""
     from job_post_similarity_spark.operators.sampling import kfold_assign
     from job_post_similarity_spark.operators.text_analysis import (
         doc_fingerprint,
@@ -5333,8 +5291,7 @@ def kfold_assign_documents(
 
 def target_encode_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leave-one-out target encoding of event_type against value —
-    DECIMAL-exact sums, smoothing prior, floor-micro render.
-    (Oracle staged in _PENDING_ORACLES.)"""
+    DECIMAL-exact sums, smoothing prior, floor-micro render."""
     from job_post_similarity_spark.operators.preprocess import (
         target_encode_loo,
     )
@@ -5353,7 +5310,7 @@ def target_encode_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bow_counts_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit-vocabulary bag-of-words count vectors — one
     aggregate fold over the token array updates all vocab lanes
-    (no explode, no shuffle). (Oracle staged in _PENDING_ORACLES.)"""
+    (no explode, no shuffle)."""
     from job_post_similarity_spark.operators.text_analysis import (
         bow_counts,
     )
@@ -5372,7 +5329,7 @@ def bow_counts_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tree_rollup_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical BOM-style rollup: per ancestor in the synthetic
     part tree, the retail-price total (integer cents) over all
-    descendants + self. (Oracle staged in _PENDING_ORACLES.)"""
+    descendants + self."""
     from job_post_similarity_spark.operators.graph import tree_rollup
 
     part = load_table(spark, sf_dir, "part")
@@ -5391,8 +5348,7 @@ def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (the general form under cube/rollup):
     status-only, priority-only, and grand-total sets in ONE
     expand+aggregate pass, with grouping_id disambiguating real
-    NULLs from subtotal markers. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    NULLs from subtotal markers."""
     orders = load_table(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("orders_gs")
     return spark.sql(
@@ -5412,8 +5368,7 @@ def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def shortest_paths_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted SSSP (bounded Bellman-Ford, integer min-plus) from
     part key 1 over the synthetic tree with weight (dst%7)+1 —
-    oracle replays via recursive CTE path enumeration. (Oracle
-    staged in _PENDING_ORACLES.)"""
+    oracle replays via recursive CTE path enumeration."""
     from job_post_similarity_spark.operators.graph import shortest_paths
 
     part = load_table(spark, sf_dir, "part")
@@ -5430,8 +5385,7 @@ def zipf_slope_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     token vocabulary (DECIMAL moments via linear_fit). Slope ≈ −1 on
     natural corpora. Ranking via the two-phase ``global_rank`` — the
     vocabulary is billions of strings at web scale, too big for a
-    single-partition window (the frequent_tokens precedent). (Oracle
-    staged in _PENDING_ORACLES.)"""
+    single-partition window (the frequent_tokens precedent)."""
     from job_post_similarity_spark.operators.profiling import linear_fit
     from job_post_similarity_spark.operators.windows import global_rank
 
@@ -5488,8 +5442,7 @@ def containment_join_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed word-set containment ≥ 0.8 (subset-duplication
     detection) with probe-side prefix blocking over the doc_id < 150
     subset — the oracle is the quadratic token join, so a green gate
-    machine-checks the pigeonhole blocking. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    machine-checks the pigeonhole blocking."""
     from job_post_similarity_spark.operators.dedup import (
         containment_join,
     )
@@ -5527,8 +5480,7 @@ def bpe_train_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-separator string-replace (exactly leftmost-greedy BPE —
     see text_analysis.bpe_train_distributed). Equality with the
     driver-local bpe_train is property-tested; the oracle unrolls
-    the 3 merge iterations as chained CTEs. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    the 3 merge iterations as chained CTEs."""
     from job_post_similarity_spark.operators.text_analysis import (
         bpe_train_distributed,
     )
@@ -5541,7 +5493,7 @@ def bleu_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BLEU-style modified 1/2-gram precision between consecutive
     document pairs (even doc as candidate, odd successor as
     reference) — integer clipped-match counts, precision as integer
-    ppm floor division. (Oracle staged in _PENDING_ORACLES.)"""
+    ppm floor division."""
     from job_post_similarity_spark.operators.metrics import (
         ngram_precision,
     )
@@ -5568,8 +5520,7 @@ def rrf_hybrid_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     window] fused with the dense top-50 (exact cosine vs the vec_id
     0 query) by reciprocal rank fusion, k=60 — pure integer floor
     division, so the fused scores are engine-exact. doc_id and
-    vec_id share the same id space in the testdata. (Oracle staged
-    in _PENDING_ORACLES.)"""
+    vec_id share the same id space in the testdata."""
     from job_post_similarity_spark.functions.vectors import dot
     from job_post_similarity_spark.operators.retrieval import (
         rank_by,
@@ -5607,7 +5558,7 @@ def token_budget_mixture_documents(
     count): within each source, docs in LCG-hash order survive while
     the exclusive running token sum is under the source budget —
     greedy fill, boundary doc may overshoot. Deterministic integer
-    arithmetic end-to-end. (Oracle staged in _PENDING_ORACLES.)"""
+    arithmetic end-to-end."""
     from job_post_similarity_spark.operators.sampling import (
         token_budget_mixture,
     )
@@ -5626,8 +5577,7 @@ def hamming_topk_embeddings(
     """Binary-quantization retrieval: sign-bit pack (32 bits/long,
     ANSI-safe sum of distinct powers) then top-10 by Hamming
     distance vs the vec_id 0 query — xor + bit_count, integer-exact,
-    so the whole binary ANN tier is oracle-checkable end-to-end.
-    (Oracle staged in _PENDING_ORACLES.)"""
+    so the whole binary ANN tier is oracle-checkable end-to-end."""
     emb = load_table(spark, sf_dir, "embeddings")
     bits = knn.binary_quantize(emb)
     return knn.hamming_topk(bits, query_id=0, k=10)
@@ -5638,7 +5588,7 @@ def mrl_search_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim truncated space (MRL prefix-as-embedding, Kusupati 2022).
     Full cosine (dot / norms product) instead of renormalize-then-dot
     so every IEEE op has the identical shape in both engines; the
-    renorm path is unit-tested. (Oracle staged in _PENDING_ORACLES.)"""
+    renorm path is unit-tested."""
     from job_post_similarity_spark.functions.vectors import cosine
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -5666,7 +5616,7 @@ def hamming_rerank_embeddings(
     """Binary-shortlist-then-float-rerank serving composition:
     Hamming top-50 over sign-bit codes, exact-dot rerank to top-10 —
     both stages engine-exact, so the full two-stage ANN serving path
-    is oracle-graded. (Oracle staged in _PENDING_ORACLES.)"""
+    is oracle-graded."""
     emb = load_table(spark, sf_dir, "embeddings")
     return knn.hamming_rerank_topk(emb, query_id=0, shortlist=50, k=10)
 
@@ -5680,8 +5630,7 @@ def keep_best_dedup_documents(
     clusters on this corpus, which would leave the quality ordering
     unexercised), keep the highest-quality member per cluster
     (integer-basis-point quality score; ties lowest id). Output =
-    survivors with their cluster size. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    survivors with their cluster size."""
     from job_post_similarity_spark.operators.dedup import (
         keep_best_in_cluster,
     )
@@ -5721,7 +5670,7 @@ def fim_transform_documents(
     """FIM (fill-in-the-middle) target construction: deterministic
     LCG split into prefix/middle/suffix, PSM-format output string —
     integer split arithmetic and the rendered string both
-    engine-exact. (Oracle staged in _PENDING_ORACLES.)"""
+    engine-exact."""
     from job_post_similarity_spark.operators.curation import (
         fim_transform,
     )
@@ -5738,8 +5687,7 @@ def bpe_train_encode_documents(
     JVM replace-chain encoder (bpe_encode_expr) — per-doc subword
     counts. The oracle recomputes the merges (the trainer CTEs) and
     replays the same replace chain, so training AND encoding are
-    value-hash-graded as one pipeline. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    value-hash-graded as one pipeline."""
     from job_post_similarity_spark.operators.text_analysis import (
         bpe_encode_expr,
         bpe_train_distributed,
@@ -5760,7 +5708,7 @@ def kcenter_coreset_embeddings(
     """Greedy k-center coreset, k=4: seed = lowest id, then 3
     farthest-point selections on 4dp-rounded cosine distance (ties
     lowest id) — the whole greedy loop is engine-exact, oracle =
-    unrolled argmax CTEs. (Oracle staged in _PENDING_ORACLES.)"""
+    unrolled argmax CTEs."""
     emb = load_table(spark, sf_dir, "embeddings")
     return knn.kcenter_select(emb, k=4).orderBy("sel_rank")
 
@@ -5774,7 +5722,7 @@ def minhash_banded_oracle_documents(
     keys → per-band candidates → exact-Jaccard ppm verify. A green
     hash here proves the banding ALGORITHM end-to-end, complementing
     the production tier's recall tests. doc_id < 200 bounds the
-    oracle's quadratic verify. (Oracle staged in _PENDING_ORACLES.)"""
+    oracle's quadratic verify."""
     from job_post_similarity_spark.operators.dedup import (
         minhash_near_dup_pairs_oracle_tier,
     )
@@ -5795,8 +5743,7 @@ def fuzzy_decontaminate_documents(
     doc_id < 200) within banded-MinHash reach of a benchmark doc (odd
     doc_id < 200), exact-Jaccard-verified at ≥ 0.3. Within-corpus
     pairs are never generated — only the train×bench band join. md5
-    deterministic tier, every step SQL-replayable. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    deterministic tier, every step SQL-replayable."""
     from job_post_similarity_spark.operators.dedup import (
         cross_near_dup_pairs_oracle_tier,
     )
@@ -5817,7 +5764,7 @@ def fuzzy_decontaminate_apply_documents(
     """The APPLY step of fuzzy decontamination: the training corpus
     (even doc_id < 200) with every near-dup-of-benchmark doc dropped
     (left-anti on the pair gate above) — what actually ships to
-    training. (Oracle staged in _PENDING_ORACLES.)"""
+    training."""
     from job_post_similarity_spark.operators.dedup import (
         fuzzy_decontaminate,
     )
@@ -5911,7 +5858,7 @@ def simhash_banded_oracle_documents(
     signatures, 4×14-bit pigeonhole chunk blocking (complete for
     Hamming ≤ 3), xor+bit_count verify. The oracle verifies via the
     QUADRATIC Hamming filter, so a green hash is a blocking-
-    completeness proof. (Oracle staged in _PENDING_ORACLES.)"""
+    completeness proof."""
     from job_post_similarity_spark.operators.dedup import (
         simhash_near_dup_pairs_oracle_tier,
     )
@@ -5930,7 +5877,7 @@ def srp_rademacher_oracle_embeddings(
     banding+verify pipeline is engine-exact (the production SRP
     tier's BLAS matmul accumulation is not SQL-reproducible).
     32 planes = 4 bands × 8 bits; testdata embeddings are dim 64 at
-    every SF. (Oracle staged in _PENDING_ORACLES.)"""
+    every SF."""
     from job_post_similarity_spark.operators.ann import (
         rademacher_signs,
         srp_rademacher_pairs_oracle_tier,
@@ -5945,8 +5892,7 @@ def srp_rademacher_oracle_embeddings(
 def datacard_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus data card: size/token/char mass, lang & source
     cardinalities, exact-dup pressure, length extremes — all exact
-    integers in one (metric, value) long table. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    integers in one (metric, value) long table."""
     from job_post_similarity_spark.operators.profiling import (
         corpus_datacard,
     )
@@ -5960,8 +5906,7 @@ def ivf_stratified_search_embeddings(
     """IVF nprobe search, deterministic oracle tier: stratified
     DECIMAL-exact quantizer (8 strata), probe the 2 nearest
     centroids, exact 4dp top-10 inside the probed lists — the Faiss
-    IVF search shape, every step SQL-replayable. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    IVF search shape, every step SQL-replayable."""
     from job_post_similarity_spark.operators.ann import (
         ivf_stratified_topk_search,
     )
@@ -5978,8 +5923,7 @@ def pq_stratified_adc_embeddings(
     """PQ ADC top-10, deterministic oracle tier: stratified DECIMAL
     sub-codebooks (8 subspaces × 8 codes), argmax-dot encode, query
     lookup table, fixed-LTR 8-term ADC sum rounded 4dp — the full
-    IndexPQ search pipeline, SQL-replayable. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    IndexPQ search pipeline, SQL-replayable."""
     from job_post_similarity_spark.operators.ann import (
         pq_stratified_adc_search,
     )
@@ -5991,8 +5935,7 @@ def pq_stratified_adc_embeddings(
 def ohlc_bars_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly OHLC bars per event_type over events.value: one
     (key, bucket) hash aggregate via min_by/max_by on a (ts, value)
-    composite — deterministic under duplicate timestamps. (Oracle
-    staged in _PENDING_ORACLES.)"""
+    composite — deterministic under duplicate timestamps."""
     from job_post_similarity_spark.operators.windows import ohlc_bars
 
     ev = load_table(spark, sf_dir, "events")
@@ -6006,7 +5949,7 @@ def ivfpq_stratified_search_embeddings(
     stratified quantizer → round6 residuals → stratified residual
     sub-codebooks → per-probe ADC tables → fixed-LTR lookup-sum
     top-10. The full IndexIVFPQ composition, SQL-replayable end to
-    end. (Oracle staged in _PENDING_ORACLES.)"""
+    end."""
     from job_post_similarity_spark.operators.ann import (
         ivfpq_stratified_search,
     )
@@ -6023,8 +5966,7 @@ def mmr_rerank_oracle_embeddings(
     """MMR diversity re-rank, deterministic oracle tier: top-20 pool
     by integer-e4 cosine, greedy 7·rel_e4 − 3·maxsim_e4 picks (λ=0.7
     scaled to the 7:3 integer ratio — a double-score first cut hit
-    DuckDB FMA last-ulp drift), ties lowest id. (Oracle staged in
-    _PENDING_ORACLES.)"""
+    DuckDB FMA last-ulp drift), ties lowest id."""
     emb = load_table(spark, sf_dir, "embeddings")
     return knn.mmr_rerank_oracle_tier(emb, 0, pool=20, k=5, lam=0.7)
 
@@ -6039,7 +5981,7 @@ def nn_descent_graph_embeddings(
     init), so the PRODUCTION implementation is itself oracle-graded:
     the DuckDB twin unrolls the 2 refinement rounds with recursive-
     free CTEs and must reproduce every (id, neighbor, rank, sim_ppm)
-    row. (Oracle staged in _PENDING_ORACLES.)"""
+    row."""
     from job_post_similarity_spark.operators.ann import nn_descent_knn_graph
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
@@ -6057,7 +5999,7 @@ def pretraining_corpus_documents(
     components → keep-best-per-cluster → leakage-safe cluster-keyed
     split. ONE DuckDB replay verifies the whole emitted artifact —
     the curate_corpus e2e pattern extended through near-dup dedup and
-    the split. (Oracle staged in _PENDING_ORACLES.)"""
+    the split."""
     from job_post_similarity_spark.plans.pipeline import (
         prepare_pretraining_corpus,
     )
@@ -6092,8 +6034,7 @@ def tokenizer_fertility_documents(
     pipeline reports): corpus fertility (BPE tokens per word, ppm) and
     compression (chars per BPE token, ppm) for the 3-merge distributed
     trainer over the doc_id < 250 slice. The oracle replays the shared
-    trainer CTEs + encode chain and the same integer floor-divs.
-    (Oracle staged in _PENDING_ORACLES.)"""
+    trainer CTEs + encode chain and the same integer floor-divs."""
     from job_post_similarity_spark.operators.text_analysis import (
         bpe_encode_expr,
         bpe_train_distributed,
@@ -6154,7 +6095,7 @@ def sql_pipe_syntax_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Google-SQL-pipes surface): WHERE -> EXTEND -> AGGREGATE GROUP BY
     -> ORDER BY as a pipeline. Same Catalyst plan as the nested form;
     the DuckDB oracle is the equivalent ANSI query (integer cents, so
-    the hash is engine-exact). (Oracle staged in _PENDING_ORACLES.)"""
+    the hash is engine-exact)."""
     load_table(spark, sf_dir, "orders").createOrReplaceTempView(
         "pipe_orders"
     )
@@ -6198,8 +6139,7 @@ def graph_beam_search_embeddings(
     """Graph-index tier END TO END: NN-Descent build (k=4, 1 round)
     then HNSW-style greedy beam search (beam=8, 2 hops, top-5) for 5
     fixed queries — one DuckDB query replays BOTH halves
-    (ann.nn_descent_knn_graph + ann.graph_beam_search). (Oracle staged
-    in _PENDING_ORACLES.)"""
+    (ann.nn_descent_knn_graph + ann.graph_beam_search)."""
     from job_post_similarity_spark.operators.ann import (
         graph_beam_search,
         nn_descent_knn_graph,
@@ -6224,9 +6164,8 @@ def stream_graph_topk_embeddings(
     static RAM-resident index, parquet append sink, read-back
     dedup). Per-query independence makes the accumulated sink equal
     the batch operator exactly, so the SAME unrolled build+search
-    DuckDB replay grades the streaming path end to end. (Oracle
-    staged in _PENDING_ORACLES — the batch gate's SQL under this
-    name.)"""
+    DuckDB replay grades the streaming path end to end. (Oracle:
+    the batch gate's SQL under this name.)"""
     import tempfile as _tempfile
 
     from job_post_similarity_spark.operators.ann import (
@@ -6271,8 +6210,7 @@ def stream_rabitq_topk_embeddings(
     sink, read-back dedup). Per-query independence makes the
     accumulated sink equal the batch operator exactly, so the SAME
     closed-form planted oracle grades the streaming path end to end
-    after the twin projection. (Oracle staged in _PENDING_ORACLES
-    for the r12 window.)"""
+    after the twin projection."""
     import tempfile as _tempfile
 
     from job_post_similarity_spark.operators import ann
@@ -6338,8 +6276,8 @@ def wordpiece_train_documents(
     count(ab)/(count(a)·count(b)) as integer micro-log score6, ties
     (score6 desc, l, r). Oracle: the merge chain unrolled to 6
     (symbol-count, pair-count, argmax, replace) blocks — every
-    winning pair, count, and score replayed by value. (Oracle staged
-    in _PENDING_ORACLES, generated by ``_wordpiece_oracle``.)"""
+    winning pair, count, and score replayed by value. (Oracle
+    generated by ``_wordpiece_oracle``.)"""
     from job_post_similarity_spark.operators.text_analysis import (
         wordpiece_train_distributed,
     )
@@ -6355,8 +6293,7 @@ def dup_lines_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     is single-line word soup, so the gate synthesizes 8-token lines
     and PLANTS one duplicate (the first line repeated at the end) —
     the oracle replays the synthesis, so the value hash proves the
-    beyond-first-occurrence counting on known-nonzero fractions.
-    (Oracle staged in _PENDING_ORACLES.)"""
+    beyond-first-occurrence counting on known-nonzero fractions."""
     from job_post_similarity_spark.operators.text_analysis import (
         duplicate_line_stats,
     )
@@ -6381,8 +6318,7 @@ def dup_lines_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def top_ngram_char_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher top-2-gram character occupancy (the Table A1 character
-    variant, complementing top_ngram_fraction's occurrence share).
-    (Oracle staged in _PENDING_ORACLES.)"""
+    variant, complementing top_ngram_fraction's occurrence share)."""
     from job_post_similarity_spark.operators.text_analysis import (
         top_ngram_char_fraction,
     )
@@ -6399,8 +6335,7 @@ def dup_ngram_coverage_documents(
     """Gopher duplicate-5-gram character coverage: chars covered by
     grams occurring >1x per doc, overlapping occurrences counted once
     (interval-union sweep). The oracle replays positions, duplicate
-    marking, and the running-max merge — integer-exact end to end.
-    (Oracle staged in _PENDING_ORACLES.)"""
+    marking, and the running-max merge — integer-exact end to end."""
     from job_post_similarity_spark.operators.text_analysis import (
         duplicate_ngram_char_coverage,
     )
@@ -6419,8 +6354,7 @@ def stream_running_counts_events(
     wherever the driver env ships google.protobuf, else the
     complete-mode aggregation twin — identical (event_type, cnt)
     snapshot either way, so the gate grades green in both envs
-    instead of env-skipping (VERDICT r5 item 7). (Oracle staged in
-    _PENDING_ORACLES.)"""
+    instead of env-skipping (VERDICT r5 item 7)."""
     from job_post_similarity_spark.streaming.stream_ops import (
         stream_running_counts,
     )
@@ -6433,8 +6367,7 @@ def stream_running_counts_events(
 def stream_ohlc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming OHLC bars (complete-mode over the bounded event
     stream): min_by/max_by state updates are order-insensitive, so
-    the result equals the batch operator — and shares its oracle.
-    (Oracle staged in _PENDING_ORACLES.)"""
+    the result equals the batch operator — and shares its oracle."""
     from job_post_similarity_spark.streaming.stream_ops import (
         stream_ohlc_bars,
     )
@@ -6711,8 +6644,7 @@ def opq_planted_recall_embeddings(
     training alternation only, so a bit-identical twin rotates AND
     encodes identically to its original — the PQ planted argument is
     rotation-invariant, and the twin again scores the global ADC
-    minimum. Same closed-form expected set as the PQ gate. (Oracle
-    staged in _PENDING_ORACLES.)"""
+    minimum. Same closed-form expected set as the PQ gate."""
     from job_post_similarity_spark.operators import ann
 
     emb = _planted_emb_union(spark, sf_dir)
@@ -6746,8 +6678,7 @@ def opq_ivfpq_planted_recall_embeddings(
     bit-identical twin again shares its original's bucket, the own
     bucket is always probed, and the twin's residual code scores the
     ADC minimum — the ivfpq planted argument, rotation-invariant.
-    Closed-form expected set, same as the flat OPQ gate. (Oracle
-    staged in _PENDING_ORACLES for the r11 window.)"""
+    Closed-form expected set, same as the flat OPQ gate."""
     from job_post_similarity_spark.operators import ann
 
     emb = _planted_emb_union(spark, sf_dir)
@@ -6785,8 +6716,7 @@ def rabitq_planted_recall_embeddings(
     rank 1. Closed-form expected set, same shape as the OPQ/PQ
     planted gates. Completes the modern Faiss quantizer family
     (VERDICT r10 item 4; reference descriptor surface
-    app/vector_search.py:42-47). (Oracle staged in _PENDING_ORACLES
-    for the r12 window.)"""
+    app/vector_search.py:42-47)."""
     from job_post_similarity_spark.operators import ann
 
     emb = _planted_emb_union(spark, sf_dir)
@@ -6819,8 +6749,7 @@ def rabitq_ivf_planted_recall_embeddings(
     tie-break), the query's own list is always among its probes, so
     the twin is scanned, ties the query's self-estimate, and the
     engine-exact rerank pins it at rank 1. Closed-form expected set,
-    same shape as the flat RaBitQ / OPQ,IVF,PQ gates. (Oracle staged
-    in _PENDING_ORACLES for the r12 window.)"""
+    same shape as the flat RaBitQ / OPQ,IVF,PQ gates."""
     from job_post_similarity_spark.operators import ann
 
     emb = _planted_emb_union(spark, sf_dir)
@@ -6857,7 +6786,8 @@ def rabitq_ivfres_planted_recall_embeddings(
     shortlists are strictly better (raw within-list sign codes
     collapse toward the centroid's code —
     test_rabitq_residual_beats_raw_on_tight_clusters measures 4×).
-    (Oracle staged in _PENDING_ORACLES for the r13 window.)"""
+    (Oracle staged: the name is in ``_STAGED``, so its SQL is not
+    registered in ``oracle_sql()`` yet.)"""
     from job_post_similarity_spark.operators import ann
 
     emb = _planted_emb_union(spark, sf_dir)
@@ -6888,8 +6818,7 @@ def filtered_oversample_recall_embeddings(
     composition, VERDICT r9 item 6). Each query's bit-identical twin
     is the global ADC^0 top-1 AND passes the predicate, so it must
     survive the post-filter at rank 1 — closed-form expected set on
-    the md5-deterministic descent (verified 50/50 at all three SFs).
-    (Oracle staged in _PENDING_ORACLES for the r11 window.)"""
+    the md5-deterministic descent (verified 50/50 at all three SFs)."""
     from job_post_similarity_spark.operators import ann
 
     clustered, n, step = _clustered_emb_corpus(spark, sf_dir, limit=400)
@@ -6997,23 +6926,15 @@ def bpe_encode_udf_graded_documents(
     return bpe_apply(docs, merges).orderBy("doc_id")
 
 
-# Round-5 graded window (driver grades exactly the FIRST 50 queries()
-# entries). Composition: the 3 round-4 erred gates (array outputs the
-# driver canon couldn't hash — now comma-joined strings) for re-grade,
-# then 47 never-graded staged gates oldest-first (tools/plan_rotation).
-# The remaining never-graded gates (25 r4 carryover + the round-5
-# additions — run tools/plan_rotation.py for the live count) queue for
-# round 6; every entry parked at 51+ is green in
-# CORRECTNESS_r01∪r02∪r03∪r04.
+# The graded window: the driver grades exactly the FIRST 50 queries()
+# entries, and queries() puts these first. Every oracle-backed entry
+# parked at 51+ is green in some prior round's CORRECTNESS file.
 _R12_WINDOW: tuple[str, ...] = (
-    # 3 never-graded round-12 gates first (the RaBitQ family staged
-    # in round 11; their SQL is promoted out of _PENDING_ORACLES at
-    # module end — see _PROMOTED_ORACLES), then 47 prior-green
-    # canaries rotated OLDEST-GRADING-FIRST with md5("r12:<name>")
-    # as the within-staleness tie-break (tools/plan_rotation.py
-    # --round 12 — the committed window and the planner agree
-    # verbatim; run only after CORRECTNESS_r11 landed, per the
-    # NOTES r12 rotation caveat)
+    # 3 never-graded round-12 gates first (the RaBitQ family), then
+    # 47 prior-green canaries rotated OLDEST-GRADING-FIRST with
+    # md5("r12:<name>") as the within-staleness tie-break
+    # (tools/plan_rotation.py --round 12 — the committed window and
+    # the planner agree verbatim)
     "rabitq_planted_recall_embeddings",
     "rabitq_ivf_planted_recall_embeddings",
     "stream_rabitq_topk_embeddings",
@@ -7067,443 +6988,27 @@ _R12_WINDOW: tuple[str, ...] = (
 )
 
 
-_R11_WINDOW: tuple[str, ...] = (
-    # 3 never-graded round-11 gates first (window priority; their
-    # staged SQL is promoted out of _PENDING_ORACLES at module end —
-    # see _PROMOTED_ORACLES), then 47 prior-green canaries rotated
-    # OLDEST-GRADING-FIRST with md5("r11:<name>") as the within-
-    # staleness tie-break (tools/plan_rotation.py --round 11 — the
-    # committed window and the planner agree verbatim)
-    "hierarchy_insert_exact_embeddings",
-    "opq_ivfpq_planted_recall_embeddings",
-    "filtered_oversample_recall_embeddings",
-    "hash_split_events",
-    "hard_negatives_embeddings",
-    "event_transitions_events",
-    "stream_keep_latest_events",
-    "pagerank_lineitem_graph",
-    "fuzzy_join_suppliers",
-    "ivfpq_recall_vs_exact",
-    "merge_upsert_events",
-    "perplexity_buckets_documents",
-    "line_dedup_documents",
-    "stream_topk_users",
-    "pmi_collocations_documents",
-    "basket_lift_lineitem",
-    "mad_outliers_events",
-    "group_zscore_events",
-    "chi2_token_label_documents",
-    "bigram_perplexity_documents",
-    "knn_classify_embeddings",
-    "leakage_safe_split_documents",
-    "containment_join_docs",
-    "srp_rademacher_oracle_embeddings",
-    "hamming_rerank_embeddings",
-    "grouped_median_events",
-    "mmr_rerank_oracle_embeddings",
-    "psi_drift_lineitem",
-    "rrf_hybrid_documents",
-    "bpe_train_documents",
-    "dsir_weights_documents",
-    "stream_expectation_monitor_events",
-    "ivf_stratified_search_embeddings",
-    "temperature_mixture_documents",
-    "equi_depth_histogram_lineitem",
-    "datacard_documents",
-    "ivfpq_stratified_search_embeddings",
-    "expectation_report_lineitem",
-    "truncate_tokens_documents",
-    "bpe_train_encode_documents",
-    "time_weighted_avg_events",
-    "analyze_table_events",
-    "top_tokens_by_lang_documents",
-    "quantize_int8_embeddings",
-    "asof_forward_tolerance_events",
-    "monthly_revenue_change_orders",
-    "keep_best_dedup_documents",
-    "fim_transform_documents",
-    "simhash_banded_oracle_documents",
-    "sorted_neighborhood_suppliers",
-)
-
-
-_R10_WINDOW: tuple[str, ...] = (
-    # 8 never-graded round-10 gates first (window priority; their
-    # staged SQL is promoted from _PENDING_ORACLES by the loop
-    # below), then 42 prior-green canaries rotated OLDEST-GRADING-
-    # FIRST with md5("r10:<name>") as the within-staleness tie-break
-    # (tools/plan_rotation.py --round 10 — the committed window and
-    # the planner agree verbatim)
-    "ngram_lm_train_documents",
-    "ngram_lm_score_documents",
-    "filtered_topk_embeddings",
-    "stream_graph_topk_embeddings",
-    "wordpiece_train_documents",
-    "opq_planted_recall_embeddings",
-    "hnsw_descent_recall_embeddings",
-    "unigram_shrink_train_documents",
-    "q10_returned_items",
-    "tfidf_top_terms_documents",
-    "curate_corpus_documents",
-    "stream_sessionize_events",
-    "q19_disjunctive_revenue",
-    "similarity_histogram_pairs",
-    "q14_promo_revenue",
-    "pii_scrub_documents",
-    "running_total_orders",
-    "mixture_sample_documents",
-    "id_set_union_events",
-    "quality_score_documents",
-    "q21_sole_late_shipper",
-    "asof_join_events",
-    "q9_product_profit",
-    "q22_dormant_high_balance",
-    "q12_shipmode_priority",
-    "token_explode_documents",
-    "q11_important_parts",
-    "q18_large_volume_customers",
-    "curation_funnel_documents",
-    "customers_without_orders",
-    "cohort_retention_events",
-    "semantic_dedup_embeddings",
-    "pq_recall_vs_exact",
-    "bm25_rank_documents",
-    "stream_click_attribution_events",
-    "scd2_user_events",
-    "triangle_counts_suppliers",
-    "strip_dup_spans_documents",
-    "zorder_key_orders",
-    "full_outer_monthly_counts",
-    "token_windows_udtf_documents",
-    "phrase_search_documents",
-    "json_extract_events",
-    "bucketed_join_orders",
-    "label_centroids_embeddings",
-    "prefix_jaccard_docs",
-    "stratified_sample_orders",
-    "funnel_conversion_events",
-    "sq8_recall_vs_exact",
-    "skew_profile_events",
-)
-
-
-_R9_WINDOW: tuple[str, ...] = (
-    # 5 never-graded round-9 gates first (window priority; their
-    # staged SQL is promoted from _PENDING_ORACLES by the loop
-    # below), then 45 prior-green canaries rotated OLDEST-GRADING-
-    # FIRST with md5("r9:<name>") as the within-staleness tie-break
-    # (tools/plan_rotation.py --round 9 under the r9 policy --
-    # regenerated after the oldest-first change so the committed
-    # window and the planner agree)
-    "unigram_train_documents",
-    "unigram_token_count_documents",
-    "graph_insert_exact_embeddings",
-    "graph_auto_entry_recall_embeddings",
-    "unigram_loss_prune_documents",
-    "top_ngram_repetition_documents",
-    "multimodal_metadata_documents",
-    "string_clean_part",
-    "summary_stats_documents",
-    "sessionize_events",
-    "null_profile_events",
-    "decontaminate_documents",
-    "first_last_documents",
-    "q5_local_supplier_volume",
-    "group_count_topn_orders",
-    "null_fill_drop_events",
-    "neighbor_pivot_orders",
-    "interval_join_events",
-    "stream_windowed_counts",
-    "date_extract_orders",
-    "window_topk_orders",
-    "cosine_topk_search",
-    "duplicate_count_events",
-    "q17_small_quantity_revenue",
-    "rollup_orders_by_year_priority",
-    "preprocess_jobs_pipeline",
-    "point_lookup_documents",
-    "dedup_keep_first_events",
-    "knn_exact_top1",
-    "q3_shipping_priority",
-    "distinct_counts_lineitem",
-    "token_count_documents",
-    "q2_min_cost_supplier",
-    "stream_event_counts",
-    "q6_forecast_revenue",
-    "stream_dedup_keys",
-    "q4_order_priority_check",
-    "order_rank_stats",
-    "text_annotate_documents",
-    "deterministic_sample_lineitem",
-    "lang_id_documents",
-    "vector_removal_embeddings",
-    "q8_market_share",
-    "substring_dup_spans_documents",
-    "q16_distinct_suppliers",
-    "keep_latest_events",
-    "quantile_disc_events",
-    "ntile_customer_quartiles",
-    "q7_volume_shipping",
-    "rolling_fingerprint_documents",
-)
-
-
-_R8_WINDOW: tuple[str, ...] = (
-    # 3 never-graded round-8 gates (their SQL is promoted from
-    # _PENDING_ORACLES by the loop below): the PQ / IVF-PQ
-    # planted-recall gates (VERDICT r7 item 2) and the warm-start
-    # graph-refresh equivalence gate (item 5)
-    # + 47 rotated prior-green canaries (tools/plan_rotation.py
-    # --round 8: md5("r8:<name>") ordering — the drift-insurance
-    # rotation; the r7 window drained the never-graded queue, so this
-    # window is almost entirely re-grades)
-    "pq_planted_recall_embeddings",
-    "ivfpq_planted_recall_embeddings",
-    "graph_refresh_equals_cold_embeddings",
-    "doc_fingerprint_documents",
-    "bloom_decontaminate_documents",
-    "ivf_pairs_planted_recall_embeddings",
-    "bitmap_distinct_events",
-    "shard_topk_search",
-    "sort_limit_orders",
-    "q20_heavy_part_shippers",
-    "bpe_token_count_documents",
-    "label_propagation_parts",
-    "exact_dup_clusters_props",
-    "kfold_assign_documents",
-    "kcenter_coreset_embeddings",
-    "nearest_centroid_embeddings",
-    "weighted_sample_documents",
-    "broadcast_lookup_customers",
-    "dedup_clusters_documents",
-    "rolling_value_events",
-    "mean_pool_embeddings",
-    "hamming_topk_embeddings",
-    "tree_rollup_parts",
-    "bleu_pairs_documents",
-    "token_budget_mixture_documents",
-    "q15_top_supplier",
-    "salted_join_events",
-    "pivot_orders_priority",
-    "bow_counts_documents",
-    "scalar_functions_part",
-    "pack_sequences_documents",
-    "target_encode_events",
-    "sql_interface_revenue",
-    "embedding_norms",
-    "stream_enrich_events",
-    "table_diff_events",
-    "melt_part_attrs",
-    "zipf_slope_documents",
-    "top_ngram_char_documents",
-    "ranking_metrics_embeddings",
-    "session_window_events",
-    "incremental_agg_orders",
-    "ohlc_bars_events",
-    "bpe_merge_pairs_documents",
-    "pq_stratified_adc_embeddings",
-    "srp_recall_vs_exact",
-    "corr_matrix_lineitem",
-    "frequent_tokens_documents",
-    "referential_profile_lineitem",
-    "parse_dates_documents",
-)
-
-
-_R7_WINDOW: tuple[str, ...] = (
-    # 11 never-graded staged gates (the full r6 _PENDING_ORACLES queue;
-    # their SQL is promoted from _PENDING_ORACLES by the loop below)
-    "sql_pipe_syntax_revenue",
-    "tokenizer_fertility_documents",
-    "pretraining_corpus_documents",
-    "multimodal_resize_oracle_documents",
-    "multimodal_frames_oracle_documents",
-    "nn_descent_graph_embeddings",
-    "graph_beam_search_embeddings",
-    "dup_lines_documents",
-    "top_ngram_char_documents",
-    "dup_ngram_coverage_documents",
-    "stream_running_counts_events",
-    # 8 round-7 cross-tier equivalence gates (never-graded, new this
-    # round — VERDICT r6 item 2)
-    "minhash_xxh_planted_recall_documents",
-    "minhash_auto_planted_recall_documents",
-    "simhash_xxh_planted_recall_documents",
-    "srp_fixed_planted_recall_embeddings",
-    "srp_auto_planted_recall_embeddings",
-    "ivf_pairs_planted_recall_embeddings",
-    "bpe_train_local_graded_documents",
-    "bpe_encode_udf_graded_documents",
-    # the graph-index closed-loop serving gate (VERDICT r6 item 4)
-    "graph_recall_vs_exact_embeddings",
-    # cross-corpus fuzzy decontamination (near-dup train-vs-benchmark)
-    # + its continuous-ingest streaming twin
-    "fuzzy_decontaminate_documents",
-    "fuzzy_decontaminate_apply_documents",
-    "stream_fuzzy_decontaminate_documents",
-    "fuzzy_decontaminate_xxh_planted_documents",
-    # 26 rotated prior-green canaries (tools/plan_rotation.py --round 7:
-    # sorted by md5("r7:<name>") so every oracle-backed entry is
-    # re-graded within a few rounds — VERDICT r6 item 6)
-    "q13_customer_distribution",
-    "resample_ffill_events",
-    "mrl_search_embeddings",
-    "label_propagation_parts",
-    "strip_html_documents",
-    "similarity_pairs_flagship",
-    "winsorize_events",
-    "event_user_set_ops",
-    "normalize_unicode_documents",
-    "pack_sequences_documents",
-    "q1_pricing_summary",
-    "curriculum_shards_documents",
-    "quality_ensemble_documents",
-    "q20_heavy_part_shippers",
-    "stream_enrich_events",
-    "gopher_quality_documents",
-    "l2_cosine_conversion",
-    "kfold_assign_documents",
-    "dedup_clusters_documents",
-    "ivf_recall_vs_exact",
-    "bloom_decontaminate_documents",
-    "quantile_profile_lineitem",
-    "minhash_banded_oracle_documents",
-    "embedding_norms",
-    "ngram_jaccard_documents",
-    "chunk_documents",
-)
-
-
-_R6_WINDOW: tuple[str, ...] = (
-    # 38 never-graded staged gates (tools/plan_rotation.py order —
-    # their SQL is promoted from _PENDING_ORACLES by the loop below)
-    "transitive_closure_parts",
-    "linear_fit_orders",
-    "mean_pool_embeddings",
-    "ranking_metrics_embeddings",
-    "classification_report_embeddings",
-    "label_propagation_parts",
-    "feature_hash_events",
-    "seasonality_events",
-    "stream_psi_drift_events",
-    "sql_registered_udaf_events",
-    "utf8_stats_documents",
-    "dense_ids_orders",
-    "session_window_events",
-    "bitmap_distinct_events",
-    "try_divide_lineitem",
-    "scd2_lookup_events",
-    "calendar_dimension",
-    "ks_drift_lineitem",
-    "entropy_profile_events",
-    "impute_group_mean_events",
-    "one_hot_events",
-    "kfold_assign_documents",
-    "target_encode_events",
-    "bow_counts_documents",
-    "tree_rollup_parts",
-    "grouping_sets_orders",
-    "shortest_paths_parts",
-    "zipf_slope_documents",
-    "contamination_matrix_documents",
-    "curriculum_shards_documents",
-    "entity_resolution_suppliers",
-    "stream_enrich_events",
-    "variant_extract_events",
-    "listagg_orders",
-    "sql_parameterized_revenue",
-    "embed_twin_documents",
-    "quality_filter_twin_documents",
-    "quality_ensemble_documents",
-    # the 6 r1 rows-only names, repointed at deterministic oracle
-    # tiers this round (VERDICT r5 item 3) — re-graded so their last
-    # driver record flips from `no_oracle` to green
-    "minhash_near_dup_documents",
-    "simhash_near_dup_documents",
-    "lsh_similarity_pairs",
-    "srp_lsh_similarity_pairs",
-    "strip_html_fidelity_documents",
-    "bpe_token_count_documents",
-    # prior-green canaries (r5 window members, re-graded for drift)
-    "order_arrays_by_customer",
-    "inverted_index_documents",
-    "sq8_encode_embeddings",
-    "referential_profile_lineitem",
-    "vocab_coverage_documents",
-    "negative_samples_embeddings",
-)
-
-
-_R5_WINDOW: tuple[str, ...] = (
-    # re-grades (fixed this round)
-    "order_arrays_by_customer",
-    "inverted_index_documents",
-    "sq8_encode_embeddings",
-    # never-graded staged gates, rotation order
-    "referential_profile_lineitem",
-    "vocab_coverage_documents",
-    "negative_samples_embeddings",
-    "equi_depth_histogram_lineitem",
-    "time_weighted_avg_events",
-    "monthly_revenue_change_orders",
-    "top_tokens_by_lang_documents",
-    "nearest_centroid_embeddings",
-    "containment_join_docs",
-    "semantic_dedup_planted_twin",
-    "bpe_train_documents",
-    "bleu_pairs_documents",
-    "rrf_hybrid_documents",
-    "token_budget_mixture_documents",
-    "hamming_topk_embeddings",
-    "mrl_search_embeddings",
-    "hamming_rerank_embeddings",
-    "keep_best_dedup_documents",
-    "fim_transform_documents",
-    "bpe_train_encode_documents",
-    "kcenter_coreset_embeddings",
-    "minhash_banded_oracle_documents",
-    "simhash_banded_oracle_documents",
-    "srp_rademacher_oracle_embeddings",
-    "datacard_documents",
-    "ivf_stratified_search_embeddings",
-    "pq_stratified_adc_embeddings",
-    "ohlc_bars_events",
-    "ivfpq_stratified_search_embeddings",
-    "mmr_rerank_oracle_embeddings",
-    "stream_ohlc_events",
-    "dsir_weights_documents",
-    "quantize_int8_embeddings",
-    "leakage_safe_split_documents",
-    "expectation_report_lineitem",
-    "truncate_tokens_documents",
-    "stream_expectation_monitor_events",
-    "psi_drift_lineitem",
-    "temperature_mixture_documents",
-    "sentence_split_documents",
-    "pivot_orders_priority",
-    "analyze_table_events",
-    "grouped_median_events",
-    "corr_matrix_lineitem",
-    "sorted_neighborhood_suppliers",
-    "weighted_sample_documents",
-    "asof_forward_tolerance_events",
-)
+# Gates whose oracle SQL (in _MODULE_ORACLES) is written and locally
+# verified but not yet registered in oracle_sql(): a gate that was
+# never graded cannot park at 51+. To promote one, drop its name from
+# here and put it in the window above.
+_STAGED: frozenset[str] = frozenset({
+    "rabitq_ivfres_planted_recall_embeddings",
+})
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Insertion order is deliberate: the driver grades exactly the
-    FIRST 50 dict entries per round. Round 12 applies _R12_WINDOW (the
-    3 never-graded round-12 gates in plan_rotation order + prior-green
-    canaries rotated OLDEST-GRADING-FIRST, md5("r12:<name>") breaking
-    staleness ties — the policy re-grades every oracle-backed entry
-    within ceil(n_oracles/slack) rounds deterministically) on top of
-    the prior ordering: window members first, everything else keeps
-    its prior relative order. Every oracle-backed entry
-    parked at 51+ is green in some prior round's CORRECTNESS file
-    (machine-checked by tools/check_oracles + the verify skill's
-    window invariant); rows-only (no-oracle) tiers trail."""
+    FIRST 50 dict entries per round. The _R12_WINDOW names come first
+    (never-graded gates, then prior-green canaries rotated
+    OLDEST-GRADING-FIRST by tools/plan_rotation.py); everything else
+    keeps its relative order below. Every oracle-backed entry parked
+    at 51+ is green in some prior round's CORRECTNESS file. A gate
+    whose oracle is written but not yet graded stays in _STAGED, off
+    oracle_sql(); promoting it is one edit: drop it from _STAGED and
+    put it in the window."""
     base = {
-        # ===== round-4 base ordering (reordered by _R5_WINDOW below) =====
+        # ===== base ordering (the _R12_WINDOW names move first) =====
         # never-graded gates new this session:
         "bpe_merge_pairs_documents": bpe_merge_pairs_documents,
         "chi2_token_label_documents": chi2_token_label_documents,
@@ -7620,8 +7125,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pack_sequences_documents": pack_sequences_documents,
         "sessionize_events": sessionize_events,
         "knn_exact_top1": knn_exact_top1,
-        # round 9: metadata-filtered ANN (Faiss IDSelector role),
-        # staged for the r10 window
+        # round 9: metadata-filtered ANN (Faiss IDSelector role)
         "filtered_topk_embeddings": filtered_topk_embeddings,
         "cosine_topk_search": cosine_topk_search,
         "q1_pricing_summary": q1_pricing_summary,
@@ -7699,10 +7203,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "nn_descent_graph_embeddings": nn_descent_graph_embeddings,
         "graph_beam_search_embeddings": graph_beam_search_embeddings,
         # round 9: streaming ANN serving twin (foreachBatch against
-        # the static index; staged = the batch gate's replay SQL)
+        # the static index; oracle = the batch gate's replay SQL)
         "stream_graph_topk_embeddings": stream_graph_topk_embeddings,
-        # round 9: WordPiece trainer (likelihood-ratio merges),
-        # staged for the r10 window
+        # round 9: WordPiece trainer (likelihood-ratio merges)
         "wordpiece_train_documents": wordpiece_train_documents,
         "dup_lines_documents": dup_lines_documents,
         "top_ngram_char_documents": top_ngram_char_documents,
@@ -7714,7 +7217,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "random_pair_baseline": random_pair_baseline_q,
         "qualitative_report": qualitative_report_q,
         "sketch_profile_events": sketch_profile_events,
-        # pending-oracle (window full this round; see _PENDING_ORACLES)
         "referential_profile_lineitem": referential_profile_lineitem,
         "vocab_coverage_documents": vocab_coverage_documents,
         "negative_samples_embeddings": negative_samples_embeddings,
@@ -7727,7 +7229,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bpe_train_local_documents": bpe_train_local_documents,
         "bpe_encode_documents": bpe_encode_documents,
         "pca_project_embeddings": pca_project_embeddings,
-        # pending-oracle (window full this round)
         "containment_join_docs": containment_join_docs,
         "semantic_dedup_planted_twin": semantic_dedup_planted_twin,
         "bpe_train_documents": bpe_train_documents,
@@ -7797,7 +7298,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "grouping_sets_orders": grouping_sets_orders,
         "shortest_paths_parts": shortest_paths_parts,
         "zipf_slope_documents": zipf_slope_documents,
-        # -- round-5 additions (never-graded; r6+ window queue) --
+        # -- round-5 additions --
         "contamination_matrix_documents": contamination_matrix_documents,
         "curriculum_shards_documents": curriculum_shards_documents,
         "entity_resolution_suppliers": entity_resolution_suppliers,
@@ -7839,7 +7340,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # planted-recall treatment (VERDICT r7 item 2)
         "pq_planted_recall_embeddings": pq_planted_recall_embeddings,
         # round 9: OPQ planted recall (rotation-invariant twin
-        # argument), staged for the r10 window
+        # argument)
         "opq_planted_recall_embeddings": opq_planted_recall_embeddings,
         "ivfpq_planted_recall_embeddings":
             ivfpq_planted_recall_embeddings,
@@ -7852,12 +7353,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_serve_embeddings": graph_serve_embeddings,
         "graph_refresh_embeddings": graph_refresh_embeddings,
         # round 8: unigram-LM (SentencePiece-style) tokenizer — the
-        # subword family BPE doesn't cover; oracles staged for the r9
-        # window (generated unrolled-DP DuckDB replays)
+        # subword family BPE doesn't cover (oracles: generated
+        # unrolled-DP DuckDB replays)
         "unigram_train_documents": unigram_train_documents,
         "unigram_token_count_documents": unigram_token_count_documents,
         # round 8: HNSW-style per-row insert ≡ brute-force exact union
-        # graph (stronger than refresh-equals-cold; oracle staged)
+        # graph (stronger than refresh-equals-cold)
         "graph_insert_exact_embeddings": graph_insert_exact_embeddings,
         # round 9: out-of-the-box graph serving — the public facade
         # with NO manual entries on the clustered fixture (VERDICT r8
@@ -7866,28 +7367,27 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             graph_auto_entry_recall_embeddings,
         # round 9: full layered-HNSW descent serving (md5 geometric
         # levels + exact tiny upper layers + per-query entries_df
-        # hand-off), staged for the r10 window
+        # hand-off)
         "hnsw_descent_recall_embeddings": hnsw_descent_recall_embeddings,
         # rows-only warm-serve latency row for the layered tier (its
         # correctness gate is the recall entry above)
         "hnsw_serve_embeddings": hnsw_serve_embeddings,
         # round 9: SentencePiece-faithful likelihood-loss vocab prune
-        # (VERDICT r8 item 5; graded in the r9 window)
+        # (VERDICT r8 item 5)
         "unigram_loss_prune_documents": unigram_loss_prune_documents,
         # round 9: the full shrink-cycle loop — prune BETWEEN EM
-        # rounds (oracle staged for the r10 window)
+        # rounds
         "unigram_shrink_train_documents": unigram_shrink_train_documents,
         # round 10: incremental hierarchy maintenance — per-layer
-        # insert ≡ rebuilt hierarchy (oracle staged for the r11
-        # window; VERDICT r9 item 4)
+        # insert ≡ rebuilt hierarchy (VERDICT r9 item 4)
         "hierarchy_insert_exact_embeddings": (
             hierarchy_insert_exact_embeddings
         ),
         # round 10: hierarchy maintenance bench row (rows-only by
-        # scale; correctness via the staged exact gate above)
+        # scale; correctness via the exact gate above)
         "hnsw_insert_embeddings": hnsw_insert_embeddings,
         # round 10: the two r10 dispatch paths that were unit-test-
-        # pinned only, made driver-gradable (oracles staged for r11)
+        # pinned only, made driver-gradable
         "opq_ivfpq_planted_recall_embeddings": (
             opq_ivfpq_planted_recall_embeddings
         ),
@@ -7895,20 +7395,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             filtered_oversample_recall_embeddings
         ),
         # round 11: RaBitQ 1-bit asymmetric-estimator tier — the
-        # quantizer-family completion (oracle staged for the r12
-        # window; VERDICT r10 item 4)
+        # quantizer-family completion (VERDICT r10 item 4)
         "rabitq_planted_recall_embeddings": (
             rabitq_planted_recall_embeddings
         ),
         "rabitq_ivf_planted_recall_embeddings": (
             rabitq_ivf_planted_recall_embeddings
         ),
-        # round 11: streaming serving at the 1-bit tier (oracle
-        # staged for the r12 window — the planted SQL under this
-        # name; stream ≡ batch by per-query independence)
+        # round 11: streaming serving at the 1-bit tier (oracle: the
+        # planted SQL under this name; stream ≡ batch by per-query
+        # independence)
         "stream_rabitq_topk_embeddings": stream_rabitq_topk_embeddings,
         # round 12: the residual-encoding IVF composition (oracle
-        # staged for the r13 window under this name)
+        # staged: see _STAGED)
         "rabitq_ivfres_planted_recall_embeddings":
             rabitq_ivfres_planted_recall_embeddings,
     }
@@ -8184,13 +7683,10 @@ _BPE_TRAIN_CTES = """
         m2 AS (SELECT l, r, pair_count FROM p2
                ORDER BY pair_count DESC, l, r LIMIT 1)"""
 
-# Oracles authored and locally verified this round, but NOT yet in
-# oracle_sql(): the graded window holds exactly 50 never-graded gates
-# already, and the repo invariant requires every oracle-backed entry
-# parked at 51+ to be green in a prior round's CORRECTNESS file.
-# Next rotation: move these two entries into the window and merge
-# this dict into oracle_sql().
-_PENDING_ORACLES: dict[str, str] = {
+# Module-level oracle SQL (this literal plus the assignments after
+# oracle_sql() below). oracle_sql() registers every entry whose name
+# is not in _STAGED; _PENDING_ORACLES at module end is the staged rest.
+_MODULE_ORACLES: dict[str, str] = {
     "referential_profile_lineitem": """
         -- NOT EXISTS (not NOT IN): a NULL fk is an orphan under
         -- left-anti-join semantics, and NOT IN would let one NULL
@@ -12063,18 +11559,12 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY jaccard DESC, id1, id2
         """,
     }
-    # Promote staged SQL for every gate that has EVER entered a graded
-    # window: a gate entering the window moves OUT of _PENDING_ORACLES
-    # into _PROMOTED_ORACLES at module end (see the promotion block at
-    # the bottom of this file) and stays registered afterwards (the
-    # parked-at-51+ entries remain prior-green). Reading the promoted
-    # dict — not _PENDING_ORACLES — keeps pending strictly disjoint
-    # from oracle_sql(), so check_oracles --pending's merge-with-
-    # override can never shadow registered SQL (VERDICT r10 item 3;
-    # the round-4 semantic_dedup near-miss mechanism).
-    for _k, _staged_sql in _PROMOTED_ORACLES.items():
-        if _k not in out:
-            out[_k] = _staged_sql
+    # the module-level oracles, minus the staged gates: those stay in
+    # _PENDING_ORACLES only, so check_oracles --pending's merge-with-
+    # override can never shadow registered SQL (VERDICT r10 item 3)
+    out.update(
+        (k, sql) for k, sql in _MODULE_ORACLES.items() if k not in _STAGED
+    )
     # r7 cross-tier equivalence alias: the pandas-UDF BPE encoder is
     # graded by the SAME replace-chain replay as the expr-chain gate
     # (bpe_apply == bpe_encode_expr is the equivalence claim; both
@@ -12090,8 +11580,8 @@ def oracle_sql() -> dict[str, str]:
 
 
 # Oracles that need _COS (defined above) — registered post-definition
-# so the module-level _PENDING_ORACLES literal stays import-safe.
-_PENDING_ORACLES.update({
+# so the module-level _MODULE_ORACLES literal stays import-safe.
+_MODULE_ORACLES.update({
     "ranking_metrics_embeddings": f"""
         WITH p AS (
             SELECT a.vec_id AS query, b.vec_id AS nb,
@@ -12712,7 +12202,7 @@ def _embed_twin_oracle(dim: int = 16, scale: int = 1000) -> str:
     """
 
 
-_PENDING_ORACLES["embed_twin_documents"] = _embed_twin_oracle()
+_MODULE_ORACLES["embed_twin_documents"] = _embed_twin_oracle()
 
 
 def _quality_twin_oracle(buckets: int = 32, scale: int = 1000) -> str:
@@ -12750,7 +12240,7 @@ def _quality_twin_oracle(buckets: int = 32, scale: int = 1000) -> str:
     """
 
 
-_PENDING_ORACLES["quality_filter_twin_documents"] = _quality_twin_oracle()
+_MODULE_ORACLES["quality_filter_twin_documents"] = _quality_twin_oracle()
 
 
 def _quality_ensemble_oracle(buckets: int = 32, scale: int = 1000) -> str:
@@ -12845,7 +12335,7 @@ def _quality_ensemble_oracle(buckets: int = 32, scale: int = 1000) -> str:
     """
 
 
-_PENDING_ORACLES["quality_ensemble_documents"] = _quality_ensemble_oracle()
+_MODULE_ORACLES["quality_ensemble_documents"] = _quality_ensemble_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -12855,7 +12345,7 @@ _PENDING_ORACLES["quality_ensemble_documents"] = _quality_ensemble_oracle()
 # independent check, not a copy of the twin gate's hash.
 # --------------------------------------------------------------------------
 
-_PENDING_ORACLES.update({
+_MODULE_ORACLES.update({
     # minhash twin SQL at the doc_id < 150 slice (twin gate: < 200)
     "minhash_near_dup_documents": f"""
         WITH d AS (
@@ -13056,7 +12546,7 @@ _PENDING_ORACLES.update({
 # BPE token count for the doc_id < 250 slice: the train+encode twin
 # SQL (shared trainer CTEs) with the output restricted — needs the
 # f-string after _BPE_TRAIN_CTES, so registered here.
-_PENDING_ORACLES["bpe_token_count_documents"] = f"""
+_MODULE_ORACLES["bpe_token_count_documents"] = f"""
         WITH {_BPE_TRAIN_CTES},
         docw AS (
             SELECT doc_id,
@@ -13105,7 +12595,7 @@ _PENDING_ORACLES["bpe_token_count_documents"] = f"""
 
 # Capability-dispatched running counts: bounded input ⇒ both the TWS
 # tier and the aggregation twin equal the batch group count.
-_PENDING_ORACLES["stream_running_counts_events"] = """
+_MODULE_ORACLES["stream_running_counts_events"] = """
     SELECT event_type, count(*) AS cnt
     FROM events
     WHERE event_type IS NOT NULL
@@ -13119,7 +12609,7 @@ _PENDING_ORACLES["stream_running_counts_events"] = """
 # character), so DuckDB replays the resample / frame-window arithmetic
 # exactly. media_type routing mirrors attach_binary_payload's
 # doc_id % 3 assignment.
-_PENDING_ORACLES["multimodal_resize_oracle_documents"] = r"""
+_MODULE_ORACLES["multimodal_resize_oracle_documents"] = r"""
     WITH d AS (
         SELECT doc_id, text, length(text) AS n
         FROM documents
@@ -13137,7 +12627,7 @@ _PENDING_ORACLES["multimodal_resize_oracle_documents"] = r"""
     ORDER BY doc_id
 """
 
-_PENDING_ORACLES["multimodal_frames_oracle_documents"] = r"""
+_MODULE_ORACLES["multimodal_frames_oracle_documents"] = r"""
     WITH d AS (
         SELECT doc_id, text, length(text) AS n
         FROM documents
@@ -13245,7 +12735,7 @@ def _nn_descent_oracle(
     """
 
 
-_PENDING_ORACLES["nn_descent_graph_embeddings"] = _nn_descent_oracle()
+_MODULE_ORACLES["nn_descent_graph_embeddings"] = _nn_descent_oracle()
 
 
 # Gopher repetition-signal oracles (round 6): every value is integer
@@ -13253,7 +12743,7 @@ _PENDING_ORACLES["nn_descent_graph_embeddings"] = _nn_descent_oracle()
 # DuckDB traps handled: sum(BIGINT) -> HUGEINT (cast back), // floors
 # on the non-negative operands used here.
 
-_PENDING_ORACLES["dup_lines_documents"] = r"""
+_MODULE_ORACLES["dup_lines_documents"] = r"""
     WITH d AS (
         SELECT doc_id,
                string_split_regex(trim(text), '\s+') AS toks
@@ -13299,7 +12789,7 @@ _PENDING_ORACLES["dup_lines_documents"] = r"""
     ORDER BY doc_id
 """
 
-_PENDING_ORACLES["top_ngram_char_documents"] = r"""
+_MODULE_ORACLES["top_ngram_char_documents"] = r"""
     WITH d AS (
         SELECT doc_id,
                string_split_regex(trim(text), '\s+') AS toks
@@ -13342,7 +12832,7 @@ _PENDING_ORACLES["top_ngram_char_documents"] = r"""
     ORDER BY t.doc_id
 """
 
-_PENDING_ORACLES["dup_ngram_coverage_documents"] = r"""
+_MODULE_ORACLES["dup_ngram_coverage_documents"] = r"""
     WITH d AS (
         SELECT doc_id,
                string_split_regex(trim(text), '\s+') AS toks
@@ -13419,7 +12909,7 @@ _PENDING_ORACLES["dup_ngram_coverage_documents"] = r"""
 # SQL pipe syntax twin: the pipeline form compiles to the same plan as
 # this nested ANSI query; integer cents keep the hash engine-exact
 # (DuckDB sum(BIGINT) -> HUGEINT, cast back).
-_PENDING_ORACLES["sql_pipe_syntax_revenue"] = """
+_MODULE_ORACLES["sql_pipe_syntax_revenue"] = """
     SELECT o_orderpriority,
            CAST(count(*) AS BIGINT) AS n_orders,
            CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
@@ -13434,7 +12924,7 @@ _PENDING_ORACLES["sql_pipe_syntax_revenue"] = """
 # Tokenizer fertility/compression twin: shared trainer CTEs + encode
 # replay (bpe_token_count's chain), corpus-rolled with the same
 # integer floor-divs. sum() casts guard the HUGEINT trap.
-_PENDING_ORACLES["tokenizer_fertility_documents"] = f"""
+_MODULE_ORACLES["tokenizer_fertility_documents"] = f"""
         WITH {_BPE_TRAIN_CTES},
         docw AS (
             SELECT doc_id,
@@ -13607,7 +13097,7 @@ def _pretraining_oracle(
     """
 
 
-_PENDING_ORACLES["pretraining_corpus_documents"] = _pretraining_oracle()
+_MODULE_ORACLES["pretraining_corpus_documents"] = _pretraining_oracle()
 
 
 def _graph_beam_search_oracle(
@@ -13684,7 +13174,7 @@ def _graph_beam_search_oracle(
     """
 
 
-_PENDING_ORACLES["graph_beam_search_embeddings"] = _graph_beam_search_oracle()
+_MODULE_ORACLES["graph_beam_search_embeddings"] = _graph_beam_search_oracle()
 
 
 # ---------------------------------------------------------------------
@@ -13697,7 +13187,7 @@ _PENDING_ORACLES["graph_beam_search_embeddings"] = _graph_beam_search_oracle()
 # banding stages for data reasons; a red hash therefore isolates a
 # production-tier recall or verify-arithmetic defect.
 # ---------------------------------------------------------------------
-_PENDING_ORACLES.update({
+_MODULE_ORACLES.update({
     "minhash_xxh_planted_recall_documents": """
         SELECT doc_id AS id1, doc_id + 100000 AS id2,
                10000::BIGINT AS jaccard_x10000
@@ -13947,14 +13437,14 @@ def _unigram_train_ctes() -> str:
 
 # round 8: HNSW-style insert vs brute-force exact union graph —
 # closed-form like the refresh gate (450 nodes × k=8, zero diffs)
-_PENDING_ORACLES["graph_insert_exact_embeddings"] = """
+_MODULE_ORACLES["graph_insert_exact_embeddings"] = """
     SELECT 3600::BIGINT AS n_edges_insert,
            3600::BIGINT AS n_edges_exact,
            0::BIGINT AS n_diff,
            true AS insert_equals_exact
 """
 
-_PENDING_ORACLES["hierarchy_insert_exact_embeddings"] = """
+_MODULE_ORACLES["hierarchy_insert_exact_embeddings"] = """
     SELECT 0::BIGINT AS n_diff,
            true AS tops_match,
            true AS insert_equals_rebuild
@@ -13962,19 +13452,19 @@ _PENDING_ORACLES["hierarchy_insert_exact_embeddings"] = """
 
 # the OPQ,IVF,PQ composition finds every planted twin (rotation-
 # invariant ivfpq planted argument — see the gate docstring)
-_PENDING_ORACLES["opq_ivfpq_planted_recall_embeddings"] = """
+_MODULE_ORACLES["opq_ivfpq_planted_recall_embeddings"] = """
     SELECT vec_id AS query_id, vec_id + 100000 AS neighbor_id
     FROM embeddings WHERE vec_id < 50 ORDER BY query_id
 """
 
 # the filtered oversample branch (hierarchy-served) keeps every
 # planted twin at rank 1 after the post-filter
-_PENDING_ORACLES["filtered_oversample_recall_embeddings"] = """
+_MODULE_ORACLES["filtered_oversample_recall_embeddings"] = """
     SELECT vec_id AS query_id, vec_id + 100000 AS neighbor_id
     FROM embeddings WHERE vec_id < 50 ORDER BY query_id
 """
 
-_PENDING_ORACLES["unigram_train_documents"] = f"""
+_MODULE_ORACLES["unigram_train_documents"] = f"""
     WITH {_unigram_train_ctes()}
     SELECT piece, freq, lp6 FROM ufin ORDER BY piece
 """
@@ -14029,7 +13519,7 @@ def _unigram_loss_ctes() -> str:
     """
 
 
-_PENDING_ORACLES["unigram_loss_prune_documents"] = f"""
+_MODULE_ORACLES["unigram_loss_prune_documents"] = f"""
     WITH {_unigram_loss_ctes()}
     SELECT piece, freq, lp6 FROM ulfin ORDER BY piece
 """
@@ -14125,12 +13615,12 @@ def _unigram_shrink_ctes() -> str:
     return ",\n".join(parts)
 
 
-_PENDING_ORACLES["unigram_shrink_train_documents"] = f"""
+_MODULE_ORACLES["unigram_shrink_train_documents"] = f"""
     WITH {_unigram_shrink_ctes()}
     SELECT piece, freq, lp6 FROM sfin ORDER BY piece
 """
 
-_PENDING_ORACLES["unigram_token_count_documents"] = f"""
+_MODULE_ORACLES["unigram_token_count_documents"] = f"""
     WITH {_unigram_train_ctes()},
     udocw AS (
         SELECT doc_id, w FROM (
@@ -14158,7 +13648,7 @@ _PENDING_ORACLES["unigram_token_count_documents"] = f"""
 # The local BPE trainer is graded by the distributed trainer's
 # unrolled-CTE replay (merge equality IS the equivalence claim; the
 # distributed gate additionally grades pair_count).
-_PENDING_ORACLES["bpe_train_local_graded_documents"] = f"""
+_MODULE_ORACLES["bpe_train_local_graded_documents"] = f"""
     WITH {_BPE_TRAIN_CTES}
     SELECT * FROM (
         SELECT 1 AS step, l AS sym_left, r AS sym_right FROM m0
@@ -14176,7 +13666,7 @@ _PENDING_ORACLES["bpe_train_local_graded_documents"] = f"""
 # graded by nn_descent_graph_embeddings / graph_beam_search_embeddings
 # (unrolled DuckDB replays); this gate adds the SF-scale recall
 # evidence the SRP/IVF/PQ tiers already carry.
-_PENDING_ORACLES["graph_recall_vs_exact_embeddings"] = """
+_MODULE_ORACLES["graph_recall_vs_exact_embeddings"] = """
     SELECT 50::BIGINT AS n_queries,
            900000::BIGINT AS recall_floor_ppm,
            true AS floor_met
@@ -14186,7 +13676,7 @@ _PENDING_ORACLES["graph_recall_vs_exact_embeddings"] = """
 # recall@1 is 50/50 at all three SFs with ENGINE-provisioned entries
 # (default_graph_entries' rank stride) and the facade's own default
 # beam/hops, measured deterministic like the manual-entries gate above.
-_PENDING_ORACLES["graph_auto_entry_recall_embeddings"] = """
+_MODULE_ORACLES["graph_auto_entry_recall_embeddings"] = """
     SELECT 50::BIGINT AS n_queries,
            900000::BIGINT AS recall_floor_ppm,
            true AS floor_met
@@ -14258,13 +13748,13 @@ _FUZZY_DECON_CTES = f"""
             WHERE jaccard_ppm >= 300000)
 """
 
-_PENDING_ORACLES["fuzzy_decontaminate_documents"] = f"""
+_MODULE_ORACLES["fuzzy_decontaminate_documents"] = f"""
     WITH {_FUZZY_DECON_CTES}
     SELECT corpus_id, bench_id, jaccard_ppm FROM hits
     ORDER BY corpus_id, bench_id
 """
 
-_PENDING_ORACLES["fuzzy_decontaminate_apply_documents"] = f"""
+_MODULE_ORACLES["fuzzy_decontaminate_apply_documents"] = f"""
     WITH {_FUZZY_DECON_CTES}
     SELECT doc_id FROM documents
     WHERE doc_id < 200 AND doc_id % 2 = 0
@@ -14272,14 +13762,14 @@ _PENDING_ORACLES["fuzzy_decontaminate_apply_documents"] = f"""
     ORDER BY doc_id
 """
 
-_PENDING_ORACLES["fuzzy_decontaminate_xxh_planted_documents"] = """
+_MODULE_ORACLES["fuzzy_decontaminate_xxh_planted_documents"] = """
     SELECT doc_id AS corpus_id, doc_id + 100000 AS bench_id,
            1000000::BIGINT AS jaccard_ppm
     FROM documents WHERE doc_id < 50 ORDER BY corpus_id
 """
 
 
-# Stupid Backoff trigram LM (round 9, staged for the r10 window):
+# Stupid Backoff trigram LM (round 9):
 # shared CTE chain — even-doc training streams, order-1/2/3 gram
 # counts, and the ARPA-analog conditional micro-log tables m3/m2/m1
 # plus the OOV-floor row m0. Replays text_analysis.ngram_lm_train's
@@ -14329,7 +13819,7 @@ _NGLM_CTES = """
                FROM nt)
 """
 
-_PENDING_ORACLES["ngram_lm_train_documents"] = (
+_MODULE_ORACLES["ngram_lm_train_documents"] = (
     "WITH " + _NGLM_CTES + """
     SELECT * FROM (
         SELECT 3 AS "order", w1, w2, w3, cnt, lp6 FROM m3
@@ -14342,7 +13832,7 @@ _PENDING_ORACLES["ngram_lm_train_documents"] = (
     """
 )
 
-_PENDING_ORACLES["ngram_lm_score_documents"] = (
+_MODULE_ORACLES["ngram_lm_score_documents"] = (
     "WITH " + _NGLM_CTES + """,
     sto AS (
         SELECT doc_id,
@@ -14379,23 +13869,23 @@ _PENDING_ORACLES["ngram_lm_score_documents"] = (
 )
 
 
-_PENDING_ORACLES["hnsw_descent_recall_embeddings"] = """
+_MODULE_ORACLES["hnsw_descent_recall_embeddings"] = """
     SELECT 50::BIGINT AS n_queries,
            900000::BIGINT AS recall_floor_ppm,
            true AS floor_met
 """
 
 
-# Streaming ANN serving twin (round 9, staged for the r10 window):
+# Streaming ANN serving twin (round 9):
 # bounded 2-batch query stream + per-query independence ⇒ the
 # accumulated parquet sink equals graph_beam_search_embeddings, so
 # the batch gate's unrolled build+search replay grades it verbatim.
-_PENDING_ORACLES["stream_graph_topk_embeddings"] = _PENDING_ORACLES[
+_MODULE_ORACLES["stream_graph_topk_embeddings"] = _MODULE_ORACLES[
     "graph_beam_search_embeddings"
 ]
 
 
-_PENDING_ORACLES["filtered_topk_embeddings"] = f"""
+_MODULE_ORACLES["filtered_topk_embeddings"] = f"""
     SELECT query_id, neighbor_id, similarity, rank FROM (
         SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
                round({_COS}, 4) AS similarity,
@@ -14471,10 +13961,10 @@ def _wordpiece_oracle(num_merges: int = 6, min_count: int = 2) -> str:
     )
 
 
-_PENDING_ORACLES["wordpiece_train_documents"] = _wordpiece_oracle()
+_MODULE_ORACLES["wordpiece_train_documents"] = _wordpiece_oracle()
 
 
-_PENDING_ORACLES["opq_planted_recall_embeddings"] = """
+_MODULE_ORACLES["opq_planted_recall_embeddings"] = """
     SELECT vec_id AS query_id, vec_id + 100000 AS neighbor_id
     FROM embeddings WHERE vec_id < 50 ORDER BY query_id
 """
@@ -14482,7 +13972,7 @@ _PENDING_ORACLES["opq_planted_recall_embeddings"] = """
 # the RaBitQ 1-bit tier keeps every planted twin: identical sign code
 # + identical abs_sum ⇒ the twin's estimate ties the query's own
 # maximum, survives the shortlist, and the exact rerank ranks it first
-_PENDING_ORACLES["rabitq_planted_recall_embeddings"] = """
+_MODULE_ORACLES["rabitq_planted_recall_embeddings"] = """
     SELECT vec_id AS query_id, vec_id + 100000 AS neighbor_id
     FROM embeddings WHERE vec_id < 50 ORDER BY query_id
 """
@@ -14490,7 +13980,7 @@ _PENDING_ORACLES["rabitq_planted_recall_embeddings"] = """
 # the RaBitQ,IVF composition keeps every planted twin: identical
 # vector ⇒ identical coarse list, the own list is always probed, the
 # estimator tie survives the shortlist, exact rerank pins rank 1
-_PENDING_ORACLES["rabitq_ivf_planted_recall_embeddings"] = """
+_MODULE_ORACLES["rabitq_ivf_planted_recall_embeddings"] = """
     SELECT vec_id AS query_id, vec_id + 100000 AS neighbor_id
     FROM embeddings WHERE vec_id < 50 ORDER BY query_id
 """
@@ -14498,7 +13988,7 @@ _PENDING_ORACLES["rabitq_ivf_planted_recall_embeddings"] = """
 # streaming 1-bit serving: per-query independence makes the
 # accumulated sink equal the batch operator, so the same planted SQL
 # grades the stream end to end
-_PENDING_ORACLES["stream_rabitq_topk_embeddings"] = """
+_MODULE_ORACLES["stream_rabitq_topk_embeddings"] = """
     SELECT vec_id AS query_id, vec_id + 100000 AS neighbor_id
     FROM embeddings WHERE vec_id < 50 ORDER BY query_id
 """
@@ -14508,24 +13998,14 @@ _PENDING_ORACLES["stream_rabitq_topk_embeddings"] = """
 # sign code/abs_sum/res_nrm2; the twin's distance-composition score is
 # the exact-tie maximum (~0), the own list is always probed, and the
 # exact rerank pins rank 1
-_PENDING_ORACLES["rabitq_ivfres_planted_recall_embeddings"] = """
+_MODULE_ORACLES["rabitq_ivfres_planted_recall_embeddings"] = """
     SELECT vec_id AS query_id, vec_id + 100000 AS neighbor_id
     FROM embeddings WHERE vec_id < 50 ORDER BY query_id
 """
 
 
-# --------------------------------------------------------------------------
-# Promotion (runs once, after every _PENDING_ORACLES assignment above):
-# a gate that has entered ANY graded window moves OUT of the staging
-# dict permanently. _PENDING_ORACLES therefore holds ONLY gates staged
-# for a FUTURE round, and is disjoint from oracle_sql() by construction
-# (contract-tested in tests/test_contract.py) — check_oracles.py
-# --pending merges pending OVER registered, so a stale duplicate would
-# silently shadow the graded SQL (VERDICT r10 item 3).
-# --------------------------------------------------------------------------
-_PROMOTED_ORACLES: dict[str, str] = {}
-for _k in (_R5_WINDOW + _R6_WINDOW + _R7_WINDOW + _R8_WINDOW
-           + _R9_WINDOW + _R10_WINDOW + _R11_WINDOW + _R12_WINDOW):
-    if _k in _PENDING_ORACLES:
-        _PROMOTED_ORACLES[_k] = _PENDING_ORACLES.pop(_k)
-del _k
+# The staged gates' SQL, for check_oracles.py --pending,
+# tools/plan_rotation.py and the contract tests.
+_PENDING_ORACLES: dict[str, str] = {
+    k: sql for k, sql in _MODULE_ORACLES.items() if k in _STAGED
+}

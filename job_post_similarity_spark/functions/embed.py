@@ -34,14 +34,6 @@ _TOKEN_BASE = 1_000_003
 _VEC_MAX_TOKEN_LEN = 256
 
 
-def _token_codes(text: str) -> np.ndarray:
-    """Stable polynomial rolling-hash code per whitespace token
-    (scalar reference path; the batch path below is bit-identical)."""
-    if not text:
-        return np.empty(0, dtype=np.int64)
-    return _poly_hash_scalar(text.lower().split())
-
-
 def _poly_hash_scalar(tokens: list) -> np.ndarray:
     codes = []
     for tok in tokens:

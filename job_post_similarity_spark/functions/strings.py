@@ -126,12 +126,6 @@ def clean_text(col: Column | str) -> Column:
 # ---------------------------------------------------------- F9-F12: misc
 
 
-def round_sim(col: Column | str, digits: int = 4) -> Column:
-    """F9: round(similarity, 4) (reference: app/main.py:261)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c, digits)
-
-
 def canonical_pair(a: Column | str, b: Column | str) -> tuple[Column, Column]:
     """F10: (min, max) string canonicalization of a pair
     (reference: app/main.py:253-254)."""

@@ -105,13 +105,3 @@ def l2_to_cosine(dist: Column | str) -> Column:
     c = _c(dist)
     sim = F.lit(1.0) - (c * c) / F.lit(2.0)
     return F.least(F.greatest(sim, F.lit(-1.0)), F.lit(1.0))
-
-
-def l2_to_cosine_as_written(sq_dist: Column | str) -> Column:
-    """V3 (fidelity form): the reference passes Faiss *squared* L2 into
-    the 1 - d²/2 formula (app/main.py:250 feeding app/evaluation.py:24-27),
-    so as wired it computes 1 - (L2²)²/2. Provided for byte-parity
-    experiments; ``dot_cosine`` / ``l2_to_cosine`` are the correct paths."""
-    c = _c(sq_dist)
-    sim = F.lit(1.0) - (c * c) / F.lit(2.0)
-    return F.least(F.greatest(sim, F.lit(-1.0)), F.lit(1.0))

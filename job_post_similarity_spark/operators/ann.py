@@ -174,31 +174,6 @@ def lsh_similarity_join(
     )
 
 
-def lsh_nearest_neighbors(
-    df: DataFrame,
-    query_vec,
-    k: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_length: float = 0.5,
-    num_hash_tables: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """V5 point-query tier: approxNearestNeighbors for one query vector
-    (reference: index.search, app/vector_search.py:143-205)."""
-    from pyspark.ml.linalg import Vectors
-
-    model, prepared = lsh_fit(df, vec_col, bucket_length, num_hash_tables, seed)
-    q = Vectors.dense(list(query_vec))
-    res = model.approxNearestNeighbors(prepared, q, k, distCol="__dist")
-    return res.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.round(F.lit(1.0) - (F.col("__dist") * F.col("__dist")) / 2.0, 4).alias(
-            "similarity"
-        ),
-    )
-
-
 # ------------------------------------------------------------------- IVF
 
 

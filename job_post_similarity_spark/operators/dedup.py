@@ -719,21 +719,6 @@ def keep_cluster_representatives(
 # ------------------------------------------------- embedding-cosine tier
 
 
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Embedding-cosine near-dup — routes through the size-dispatched
-    facade (operators.ann.auto_similarity_join): exact blocked-BLAS
-    below the broadcast budget, banded SRP-LSH / IVF beyond it — so
-    this public path can never driver-collect an oversized corpus."""
-    from .ann import auto_similarity_join
-
-    return auto_similarity_join(df, id_col, vec_col, threshold)
-
-
 def semantic_dedup(
     df: DataFrame,
     id_col: str = "vec_id",

@@ -49,6 +49,8 @@ def pagerank(
     simplification; feed symmetric edge pairs (as the bipartite
     builders do) when you need none.
 
+    Edges with a null ``src`` or ``dst`` are dropped.
+
     ``every_node_receives=True`` (safe exactly when every node has at
     least one IN-edge, e.g. any symmetric graph): skips the
     per-iteration left join against the node list — the contribution
@@ -59,7 +61,11 @@ def pagerank(
         raise ValueError("pagerank needs iterations >= 1")
     e_src = F.col(src).alias("src")
     e_dst = F.col(dst).alias("dst")
-    ed = edges.select(e_src, e_dst)
+    # a null endpoint is not a node: keeping it would invent a NULL
+    # node and leak rank out of real nodes through its edges
+    ed = edges.select(e_src, e_dst).filter(
+        F.col("src").isNotNull() & F.col("dst").isNotNull()
+    )
     # The node list is only needed off the fast path: for the initial
     # constant ranks (iteration 1 specializes them away below) and the
     # per-iteration dangling rebuild. On the fast path skipping it

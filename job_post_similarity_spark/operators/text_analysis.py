@@ -73,15 +73,6 @@ def bpe_ish_token_count(col: Column | str) -> Column:
     return F.size(chunks) + long_extra
 
 
-def stopword_ratio(col: Column | str, lang: str = "en") -> Column:
-    """Fraction of whitespace tokens that are language stopwords."""
-    c = F.col(col) if isinstance(col, str) else col
-    toks = F.split(F.trim(F.lower(c)), r"\s+")
-    sw = F.array(*[F.lit(w) for w in _LANG_MARKERS[lang]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
-
-
 def punct_ratio(col: Column | str) -> Column:
     """Punctuation characters / total characters."""
     c = F.col(col) if isinstance(col, str) else col

@@ -19,8 +19,8 @@ def test_pending_oracles_disjoint_from_registered():
     """check_oracles.py --pending merges _PENDING_ORACLES OVER
     oracle_sql() on duplicate keys, so a stale pending entry would
     silently shadow the graded SQL (the round-4 semantic_dedup
-    near-miss mechanism; VERDICT r10 item 3). The module-end
-    promotion block pops every windowed gate out of pending —
+    near-miss mechanism; VERDICT r10 item 3). oracle_sql() skips
+    every _STAGED name and _PENDING_ORACLES holds only those —
     this pins that invariant against a future staging edit."""
     pending = set(entrymod._PENDING_ORACLES)
     registered = set(entrymod.oracle_sql())
@@ -175,3 +175,40 @@ def test_readme_registry_counts():
     assert not re.search(r"returns \d+ named queries", readme), (
         "README states a query count outside the pinned header sentence"
     )
+
+
+def test_no_unreferenced_package_defs():
+    """Every top-level def/class in the package is referenced outside
+    its own definition somewhere in the package, the entry module,
+    bench.py, perfbench/, tools/ or tests/ (word-boundary match, so a
+    string or comment counts as a reference). No allowlist: a name
+    nothing reaches is deleted, not excused."""
+    import ast
+    import os
+    import re
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "job_post_similarity_spark")
+    paths = [os.path.join(repo, "__spark_entry__.py"),
+             os.path.join(repo, "bench.py")]
+    for top in (pkg, *(os.path.join(repo, d)
+                       for d in ("perfbench", "tools", "tests"))):
+        for d, _, fs in os.walk(top):
+            paths += [os.path.join(d, f) for f in fs if f.endswith(".py")]
+    src = {p: open(p).read() for p in paths}
+    dead = []
+    for path, text in src.items():
+        if not path.startswith(pkg + os.sep):
+            continue
+        lines = text.splitlines(keepends=True)
+        for node in ast.parse(text).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                     ast.ClassDef)):
+                continue
+            word = re.compile(rf"\b{re.escape(node.name)}\b")
+            own = "".join(lines[node.lineno - 1:node.end_lineno])
+            refs = sum(len(word.findall(t)) for t in src.values())
+            if refs == len(word.findall(own)):
+                dead.append(f"{os.path.relpath(path, repo)}:"
+                            f"{node.lineno} {node.name}")
+    assert not dead, f"unreferenced package defs: {dead}"

@@ -599,6 +599,27 @@ def test_pagerank_star_hand_computed(spark):
     assert two == {"a": 150_000, "b": 213_750, "c": 213_750}
 
 
+def test_pagerank_drops_null_endpoint_edges(spark):
+    """Edges with a null src or dst are not edges: no NULL node in the
+    output, and the ranks equal those of the clean 2-cycle. (Kept,
+    the (NULL, 1) edge makes a NULL node at 150000 and the (2, NULL)
+    edge halves node 2's out-share, so node 1 falls below RANK_UNIT.)"""
+    from job_post_similarity_spark.operators.graph import pagerank
+
+    dirty = spark.createDataFrame(
+        [(1, 2), (2, 1), (None, 1), (2, None)], "src long, dst long"
+    )
+    clean = spark.createDataFrame([(1, 2), (2, 1)], "src long, dst long")
+
+    def ranks(edges):
+        out = pagerank(edges, iterations=3).collect()
+        return {r["node"]: r["pr"] for r in out}
+
+    got, want = ranks(dirty), ranks(clean)
+    assert None not in got
+    assert got == want == {1: 1_000_000, 2: 1_000_000}
+
+
 def test_bipartite_edges_symmetric_and_prefixed(spark):
     from pyspark.sql import functions as F
 

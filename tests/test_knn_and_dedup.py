@@ -541,19 +541,6 @@ def test_auto_similarity_join_dispatch_and_output(embeddings):
     assert approx <= {(a, b) for a, b, _ in exact} | approx  # sanity: runs
 
 
-def test_lsh_nearest_neighbors_point_query(embeddings):
-    """MLlib approxNearestNeighbors point query (V5 single-vector
-    tier): the query vector's own row must come back at similarity ~1."""
-    qvec = embeddings.filter(F.col("vec_id") == 5).first()["embedding"]
-    # the API-parity tier warns BY DESIGN — assert-and-swallow
-    with pytest.warns(UserWarning, match="DEGENERATE"):
-        out = ann.lsh_nearest_neighbors(
-            embeddings, qvec, k=3, bucket_length=2.0, num_hash_tables=4
-        ).collect()
-    assert len(out) == 3
-    assert out[0]["neighbor_id"] == 5 and abs(out[0]["similarity"] - 1.0) < 1e-3
-
-
 def test_substring_dup_spans_planted(spark):
     """Planted shared run: two docs share an 8-token phrase at
     different offsets; span recovered exactly on both sides, unrelated

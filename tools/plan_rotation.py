@@ -8,9 +8,9 @@ priority; prior-green gates park at 51+; rows-only tiers trail.
 This tool computes the recommended next-round ordering from the
 current registry + CORRECTNESS history:
 
-1. never-graded oracle-backed gates (including _PENDING_ORACLES,
-   whose SQL must move into oracle_sql() when they enter the window)
-   — window priority, oldest-staged first;
+1. never-graded oracle-backed gates (including the _STAGED ones,
+   whose names must be dropped from _STAGED when they enter the
+   window) — window priority, oldest-staged first;
 2. prior-green canaries fill any window slack — OLDEST-GRADING
    FIRST (VERDICT r8 item 8): canaries sort by the round their
    grading last passed, ascending, so no green entry can go stale
@@ -98,8 +98,8 @@ def main() -> int:
     )
     order = window + canaries + rest
 
-    backed = oracles | set(pending)  # disjoint since r11: promotion
-    # POPS a windowed gate out of _PENDING_ORACLES (module-end block)
+    backed = oracles | set(pending)  # disjoint: oracle_sql() skips
+    # every _STAGED name, and _PENDING_ORACLES holds only those
     print(f"queries: {len(queries)}  oracle-backed: "
           f"{len(backed)} ({len(set(pending) - oracles)} staged-only)  "
           f"graded-green history: {len(graded & set(queries))}")
@@ -126,8 +126,8 @@ def main() -> int:
               f"window and wait another round: {overflow}")
     pend_in_window = [q for q in window if q in pending]
     if pend_in_window:
-        print(f"  move {len(pend_in_window)} _PENDING_ORACLES entries "
-              "into oracle_sql() as they enter the window")
+        print(f"  drop {len(pend_in_window)} names from _STAGED "
+              "as they enter the window")
     if "--emit-order" in sys.argv:
         print("\nORDER = [")
         for q in order:
