@@ -7068,9 +7068,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "winsorize_events": winsorize_events,
         "hash_split_events": hash_split_events,
         "sq8_encode_embeddings": sq8_encode_embeddings,
-        "sq8_recall_vs_exact": sq8_recall_vs_exact,  # pos 50
-        # ===== position 51+: every entry here green in a prior =====
-        # ===== round's CORRECTNESS file (machine-checked)       =====
+        "sq8_recall_vs_exact": sq8_recall_vs_exact,
         "similarity_pairs_flagship": similarity_pairs_flagship,
         "srp_recall_vs_exact": srp_recall_vs_exact,
         "chunk_documents": chunk_documents_gate,

@@ -29,10 +29,16 @@ reference's Flat/IVF/HNSW switch.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
 from .caching import cache_auto
 
 from .operators import ann, knn
 from .schemas import require_embedding_dim
+
+#: corpora up to this many rows serve the descent tier from one
+#: broadcast ``HnswSnapshot`` (``ann.hnsw_serving_state``'s default cap)
+_SNAPSHOT_CAP = 100_000
 
 
 class VectorSearch:
@@ -312,7 +318,16 @@ class VectorSearch:
         docstring; proven by gate graph_recall_vs_exact_embeddings;
         the built graph is memoized across query batches and
         invalidated on add/load/remove); other → SRP-LSH candidates +
-        exact verify."""
+        exact verify.
+
+        From ``hierarchy_min_rows`` on, HNSW* serves by layered
+        descent. Within the broadcast cap a cold build runs in numpy
+        from one corpus collect (``ann.hnsw_local_build``): the
+        unpruned NN-Descent rounds, which a cold build's NEW-flag
+        pruning leaves byte-identical, so the edges equal the
+        relational build's row for row (pinned by
+        ``test_local_hierarchy_build_equals_relational``). Mutations
+        still repair relationally."""
         assert self._df is not None, "index is empty — add() first"
         d = self.index_description.strip().lower()
         if d == "flat" or self.ntotal < self.exact_shortcut_rows:
@@ -445,6 +460,13 @@ class VectorSearch:
                 rotation=P, codes=codes,
             )
         if d.startswith("hnsw"):
+            if (
+                self._graph is None
+                and self._stale_graph is None
+                and self._hier is None
+                and self._descent_in_cap()
+            ):
+                self._build_local_hierarchy()
             # capture the append bookkeeping BEFORE the layer-0
             # build consumes it — the hierarchy repair below needs
             # (old corpus, appended rows) to insert per-layer
@@ -485,7 +507,7 @@ class VectorSearch:
                         corpus_rows=old_n,
                         nav_tab=self._stale_nav_tab,
                         new_rows_count=pend_n,
-                    ).transform(cache_auto)
+                    ).transform(self._hold)
                     self._graph_params = {
                         "k": 8, "built": "insert",
                         "base": (self._graph_params or {}).get(
@@ -504,14 +526,14 @@ class VectorSearch:
                         self._df, self._stale_graph,
                         self.id_col, self.vec_col,
                         assume_append_only=True,
-                    ).transform(cache_auto)
+                    ).transform(self._hold)
                     self._graph_params = {
                         "k": 8, "iters": 2, "built": "refresh",
                     }
                 else:
                     self._graph = ann.nn_descent_knn_graph(
                         self._df, self.id_col, self.vec_col
-                    ).transform(cache_auto)
+                    ).transform(self._hold)
                     self._graph_params = {
                         "k": 8, "iters": 3, "built": "cold",
                     }
@@ -520,8 +542,10 @@ class VectorSearch:
                     # warm one: its lineage reads the stale graph's
                     # cached blocks, and unpersisting first would make
                     # the first action recompute the old graph from
-                    # cold inside the 'incremental' path
-                    self._graph.count()
+                    # cold inside the 'incremental' path (a driver
+                    # view is materialized already)
+                    if not self._descent_in_cap():
+                        self._graph.count()
                     ann.release_relation(self._stale_graph)
                     self._stale_graph = None
                 self._graph_corpus = None
@@ -553,13 +577,9 @@ class VectorSearch:
                         # per-layer — layer 0 adopts the graph the
                         # insert/refresh dispatch above already
                         # maintained, upper layers pay only for the
-                        # rows whose md5 level reaches them
-                        # localCheckpoint, not persist: the hierarchy
-                        # is referenced 3-4 times per maintenance/
-                        # state-build call, and a cached-but-lineaged
-                        # relation re-pays Catalyst optimization of
-                        # the whole build plan per reference
-                        # (measured 15 s vs 5 s on the insert path)
+                        # rows whose md5 level reaches them (held
+                        # checkpointed: measured 15 s vs 5 s on the
+                        # insert path against a cached hierarchy)
                         stale_meta = self._stale_hier_meta or {}
                         self._hier = ann.hnsw_hierarchy_insert(
                             pend_corpus, self._stale_hier, pend,
@@ -576,12 +596,12 @@ class VectorSearch:
                                 "layer_sizes"
                             ),
                             old_top_layer=stale_meta.get("top_layer"),
-                        ).localCheckpoint()
+                        ).transform(self._hold, checkpoint=True)
                         ann.release_relation(self._stale_hier)
                         self._stale_hier = None
                         self._stale_hier_meta = None
                         if self._stale_nav is not None:
-                            # consumed — the checkpoint above
+                            # consumed — holding the hierarchy above
                             # materialized every reader
                             ann.release_relation(self._stale_nav)
                             self._stale_nav = None
@@ -592,18 +612,20 @@ class VectorSearch:
                             entry_budget=knobs["entry_budget"],
                             corpus_rows=self.ntotal,
                             base_graph=self._graph, meta=meta,
-                        ).localCheckpoint()
+                        ).transform(self._hold, checkpoint=True)
                     self._hier_meta = meta
-                if self._nav is None:
-                    # per-layer membership, materialized once per
-                    # corpus — every batch's descent reads it instead
-                    # of md5-rescanning the full corpus per layer
-                    self._nav = ann.hnsw_nav_members(
-                        self._df, self.id_col, self.vec_col,
-                        m=knobs["m"],
-                        top_layer=self._hier_meta["top_layer"],
-                    ).transform(cache_auto)
                 if self._serving_state is None:
+                    if self._nav is None and not self._descent_in_cap():
+                        # per-layer membership for the relational tier,
+                        # materialized once per corpus — every batch's
+                        # descent reads it instead of md5-rescanning
+                        # the full corpus per layer (the snapshot tier
+                        # never reads it; save() builds it on demand)
+                        self._nav = ann.hnsw_nav_members(
+                            self._df, self.id_col, self.vec_col,
+                            m=knobs["m"],
+                            top_layer=self._hier_meta["top_layer"],
+                        ).transform(cache_auto)
                     # within the broadcast cap: one HnswSnapshot, so
                     # every batch is a single scan; above it,
                     # relational tables only for the upper layers
@@ -651,6 +673,54 @@ class VectorSearch:
         return ann.srp_topk_search(
             queries, self._df, k=k, id_col=self.id_col, vec_col=self.vec_col
         )
+
+    def _descent_in_cap(self) -> bool:
+        """The corpus serves by layered descent from a broadcast
+        ``HnswSnapshot``: at least ``hierarchy_min_rows`` rows and at
+        most the snapshot's broadcast cap."""
+        return self.hierarchy_min_rows <= self.ntotal <= _SNAPSHOT_CAP
+
+    def _hold(self, df: DataFrame, checkpoint: bool = False) -> DataFrame:
+        """Keep an index relation for the current epoch. On the
+        in-cap descent tier it becomes a driver-held ``createDataFrame``
+        view of its one collect (``ann.driver_view``): nothing stays
+        persisted, and the snapshot reads it back without recomputing
+        the build. Otherwise it is persisted, or localCheckpointed when
+        ``checkpoint`` (a hierarchy is read several times per
+        maintenance or state-build call, and a cached-but-lineaged
+        relation re-pays Catalyst optimization of the whole build plan
+        per reference)."""
+        if self._descent_in_cap():
+            return ann.driver_view(df)
+        return df.localCheckpoint() if checkpoint else df.transform(cache_auto)
+
+    def _build_local_hierarchy(self) -> None:
+        """Cold in-cap build: the whole hierarchy in numpy from one
+        corpus collect (``ann.hnsw_local_build``), the serving snapshot
+        from its arrays, and ``_hier``/``_graph`` as job-free views of
+        the same edges — what ``save()`` and ``add()``'s insert/refresh
+        read. Row-for-row the relational NN-Descent + hierarchy
+        build."""
+        knobs = self._HIER_KNOBS
+        build = ann.hnsw_local_build(
+            self._df, self.id_col, self.vec_col,
+            k=knobs["k"], m=knobs["m"],
+            entry_budget=knobs["entry_budget"],
+            corpus_rows=self.ntotal,
+        )
+        self._hier = build.hierarchy()
+        self._hier_meta = build.meta
+        self._graph = self._hier.filter(F.col("layer") == 0).drop("layer")
+        self._graph_params = {"k": 8, "iters": 3, "built": "cold"}
+        self._serving_state = build.snapshot()
+        # a cold build supersedes any retired warm state
+        for name in ("_stale_hier", "_stale_nav", "_stale_nav_tab"):
+            if getattr(self, name) is not None:
+                ann.release_relation(getattr(self, name))
+                setattr(self, name, None)
+        self._stale_hier_meta = None
+        self._graph_corpus = None
+        self._pending_new = None
 
     def search_arrays(self, query_embeddings, k: int = 2):
         """Reference-shaped output (app/vector_search.py:143-205):
@@ -850,7 +920,12 @@ class VectorSearch:
         if self._df is None:
             return 0
         if self._ntotal_cache is None:
-            self._ntotal_cache = self._df.count()
+            # one job with no exchange: rows counted per partition and
+            # summed on the driver (an aggregate count() schedules an
+            # extra shuffle-map job under AQE)
+            self._ntotal_cache = (
+                self._df.select(F.lit(1))._jdf.queryExecution().toRdd().count()
+            )
         return self._ntotal_cache
 
     def remove(self, ids: list) -> None:

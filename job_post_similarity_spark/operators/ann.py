@@ -81,6 +81,15 @@ def release_relation(df: DataFrame) -> None:
         pass
 
 
+def driver_view(df: DataFrame) -> DataFrame:
+    """Collect ``df`` once as Arrow and return a ``createDataFrame``
+    view of the rows: they live in the driver, nothing is persisted
+    (``release_relation`` has nothing to free), and reading the view
+    never recomputes ``df``'s plan. For relations bounded by the
+    broadcast cap."""
+    return df.sparkSession.createDataFrame(df.toArrow(), schema=df.schema)
+
+
 def _to_mllib_vec(df: DataFrame, vec_col: str, out_col: str) -> DataFrame:
     from pyspark.ml.functions import array_to_vector
 
@@ -2653,7 +2662,10 @@ def nn_descent_knn_graph(
     forever), so the skipped candidates are exactly the ones that
     lost before and would lose again: a COLD build's output is
     BYTE-IDENTICAL per round to the unpruned version (what keeps the
-    unrolled DuckDB replay gate valid; warm caveats below), while
+    unrolled DuckDB replay gate valid, and what lets the in-cap numpy
+    build ``hnsw_local_build`` run the unpruned rounds — pinned by
+    ``test_local_hierarchy_build_equals_relational``; warm caveats
+    below), while
     late-round candidate mass tracks the
     CHANGED edge set instead of n·k². Candidate volume is ≤ ~4·n·k²
     in round 1 and ∝ changed·k² after.
@@ -2662,7 +2674,8 @@ def nn_descent_knn_graph(
     descending similarity, sim_ppm = floor(dot/1e6) ≈ cosine·1e6 for
     unit vectors. 100 TB shape: per-round cost is linear in n·k²,
     shuffles are node-keyed (AQE-splittable), and the driver loop
-    holds no data — the Lloyd/PageRank iterative shape.
+    holds no data — the Lloyd/PageRank iterative shape. Rows with a
+    null id are dropped.
 
     ``warm_edges`` (columns ``(src, dst)``) seeds the init with a
     PRIOR graph's edges in addition to the ring — the warm-start path
@@ -2701,6 +2714,9 @@ def nn_descent_knn_graph(
     empty_schema = (
         f"id {id_type}, neighbor_id {id_type}, rank int, sim_ppm long"
     )
+    # a null id joins nothing and has no ring position: drop it in both
+    # regimes (the small regime's sorted() probe would raise on it)
+    df = df.filter(F.col(id_col).isNotNull())
     base = df.select(
         F.col(id_col).alias("id"), _micro_quant(vec_col).alias("q")
     )
@@ -3837,35 +3853,31 @@ class HnswSnapshot:
         self._bc.unpersist()
 
 
-def _hnsw_snapshot(
+def _collect_corpus_arrays(
     corpus: DataFrame,
-    hierarchy: DataFrame,
-    top_layer: int,
     id_col: str,
     vec_col: str,
-    m: int,
-) -> HnswSnapshot:
-    """Collect corpus and hierarchy once and broadcast the
-    ``HnswSnapshot`` arrays. Rows and edges with a null id are dropped
-    (the relational joins never match a null key), edges whose ends
-    are not corpus rows likewise. Duplicate corpus ids, null vectors,
-    null elements and ragged widths raise ``ValueError`` naming the
-    id."""
+    m: int = 2,
+    level_cap: int | None = None,
+):
+    """Collect a corpus once, as Arrow, into the driver-held arrays of
+    the HNSW state: ids sorted ascending, the ``_micro_quant`` matrix
+    (quantized by Spark, so JVM HALF_UP; int32 when every component
+    fits, int64 otherwise), its largest absolute component ``qmax``,
+    and, when ``level_cap`` is given, each row's md5 level capped at
+    it (None otherwise). Rows with a null id are dropped (the
+    relational joins never match a null key). Duplicate ids, null
+    vectors, null elements and ragged widths raise ``ValueError``
+    naming the id, before anything is built."""
     import numpy as np
     import pyarrow.compute as pc
 
-    cap = top_layer + 1
+    cols = [F.col(id_col).alias("id"), _micro_quant(vec_col).alias("qv")]
+    if level_cap is not None:
+        cols.append(_hnsw_level(id_col, m, level_cap).alias("lv"))
     # collected as Arrow and checked column-wise: no Python object per
     # row, and the matrix is the flattened value buffer reshaped
-    tbl = (
-        corpus.filter(F.col(id_col).isNotNull())
-        .select(
-            F.col(id_col).alias("id"),
-            _micro_quant(vec_col).alias("qv"),
-            _hnsw_level(id_col, m, cap).alias("lv"),
-        )
-        .toArrow()
-    )
+    tbl = corpus.filter(F.col(id_col).isNotNull()).select(*cols).toArrow()
     ids = tbl.column("id").to_numpy()
     order = np.argsort(ids, kind="stable")
     ids = ids[order]
@@ -3873,8 +3885,14 @@ def _hnsw_snapshot(
     dup = np.flatnonzero(ids[1:] == ids[:-1])
     if len(dup):
         raise ValueError(f"HNSW corpus id {ids[dup[0]]!r} is not unique")
-    lv = tbl.column("lv").to_numpy().astype(np.int32)[order]
-    qv = tbl.column("qv").combine_chunks()
+    lv = (
+        tbl.column("lv").to_numpy().astype(np.int32)[order]
+        if level_cap is not None
+        else None
+    )
+    # chunk by chunk, never combined: the driver peak is the collected
+    # table plus one stored-dtype matrix
+    qv = tbl.column("qv")
     del tbl
     # a null vector has length -1; errors name the smallest bad id
     lens = pc.fill_null(pc.list_value_length(qv), -1).to_numpy()[order]
@@ -3887,19 +3905,82 @@ def _hnsw_snapshot(
             f"HNSW corpus id {ids[i]!r}: "
             + ("null vector" if lens[i] < 0 else f"{lens[i]} dims, not {d}")
         )
-    flat = qv.flatten()
+    flat = pc.list_flatten(qv)
     if flat.null_count:
-        null_at = np.flatnonzero(pc.is_null(flat).to_numpy(zero_copy_only=False))
+        null_at = np.flatnonzero(pc.is_null(flat).to_numpy())
         rank = np.empty(n, np.int64)
         rank[order] = np.arange(n)
         i = rank[null_at // d].min()
         raise ValueError(f"HNSW corpus id {ids[i]!r}: a null element")
-    q = flat.to_numpy().reshape(n, d)
     # |q| <= 1e6 on unit vectors: int32 halves the collected and
     # broadcast matrix; every dot still accumulates in int64/float64
-    qmax = max(int(q.max()), -int(q.min())) if q.size else 0
-    q = q.astype(np.int32 if qmax < 2**31 else np.int64, copy=False)[order]
+    lo_hi = pc.min_max(flat)
+    qmax = (
+        max(lo_hi["max"].as_py(), -lo_hi["min"].as_py()) if len(flat) else 0
+    )
+    q = np.empty((n, d), np.int32 if qmax < 2**31 else np.int64)
+    at = 0
+    for chunk in qv.chunks if d else ():
+        q[at : at + len(chunk)] = chunk.flatten().to_numpy().reshape(-1, d)
+        at += len(chunk)
     del qv, flat
+    return ids, q[order], qmax, lv
+
+
+def _snapshot_adjacency(n: int, layer, src, dst, top_layer: int) -> dict:
+    """Row-index CSR ``(indptr, indices)`` per served layer: layer 0
+    holds every layer's edges (duplicates kept, the relation the
+    relational layer-0 walk reads), layer l in 1..top_layer its own."""
+    import numpy as np
+
+    def csr(sel):
+        s, t = src[sel], dst[sel]
+        o = np.argsort(s, kind="stable")
+        indptr = np.zeros(n + 1, np.int64)
+        np.cumsum(np.bincount(s, minlength=n), out=indptr[1:])
+        return indptr, t[o].astype(np.int32)
+
+    adj = {0: csr(slice(None))}
+    for l in range(1, top_layer + 1):
+        adj[l] = csr(layer == l)
+    return adj
+
+
+def _broadcast_snapshot(
+    spark, ids, q, qmax, lv, adj, top_layer: int, m: int, id_type
+) -> HnswSnapshot:
+    """Ship the snapshot arrays in one broadcast; ``lv`` is capped at
+    ``top_layer + 1``."""
+    bc = spark.sparkContext.broadcast(
+        {"ids": ids, "q": q, "qmax": qmax, "lv": lv, "adj": adj}
+    )
+    return HnswSnapshot(
+        bc,
+        top_layer,
+        m,
+        id_type,
+        {l: int((lv >= l).sum()) for l in range(top_layer + 2)},
+    )
+
+
+def _hnsw_snapshot(
+    corpus: DataFrame,
+    hierarchy: DataFrame,
+    top_layer: int,
+    id_col: str,
+    vec_col: str,
+    m: int,
+) -> HnswSnapshot:
+    """Collect corpus and hierarchy once and broadcast the
+    ``HnswSnapshot`` arrays. The corpus collect drops null ids and
+    raises on dirty rows (``_collect_corpus_arrays``); edges with a
+    null id, or whose ends are not corpus rows, are dropped."""
+    import numpy as np
+
+    ids, q, qmax, lv = _collect_corpus_arrays(
+        corpus, id_col, vec_col, m, top_layer + 1
+    )
+    n = len(ids)
     edges = (
         hierarchy.filter(
             F.col("id").isNotNull() & F.col("neighbor_id").isNotNull()
@@ -3918,28 +3999,12 @@ def _hnsw_snapshot(
     src, ok_s = to_row("id")
     dst, ok_d = to_row("neighbor_id")
     ok = ok_s & ok_d
-    layer = edges.column("layer").to_numpy()[ok]
-    src, dst = src[ok], dst[ok]
-
-    def csr(sel):
-        s, t = src[sel], dst[sel]
-        o = np.argsort(s, kind="stable")
-        indptr = np.zeros(n + 1, np.int64)
-        np.cumsum(np.bincount(s, minlength=n), out=indptr[1:])
-        return indptr, t[o].astype(np.int32)
-
-    adj = {0: csr(slice(None))}
-    for l in range(1, top_layer + 1):
-        adj[l] = csr(layer == l)
-    bc = corpus.sparkSession.sparkContext.broadcast(
-        {"ids": ids, "q": q, "qmax": qmax, "lv": lv, "adj": adj}
+    adj = _snapshot_adjacency(
+        n, edges.column("layer").to_numpy()[ok], src[ok], dst[ok], top_layer
     )
-    return HnswSnapshot(
-        bc,
-        top_layer,
-        m,
+    return _broadcast_snapshot(
+        corpus.sparkSession, ids, q, qmax, lv, adj, top_layer, m,
         corpus.schema[id_col].dataType,
-        {l: int((lv >= l).sum()) for l in range(cap + 1)},
     )
 
 
@@ -4210,9 +4275,7 @@ def _hnsw_snapshot_descent(
                     out_n.append(cand[keep][:k])
                     out_dot.append(dt[keep][:k])
                     n_kept.append(len(out_n[-1]))
-            # _SIM_PPM_SQL: the JVM's `div` truncates toward zero
-            x = np.concatenate(out_dot) + 10**15
-            ppm = np.where(x >= 0, x // 10**6, -(-x // 10**6)) - 10**9
+            ppm = _sim_ppm_np(np.concatenate(out_dot))
             yield pd.DataFrame(
                 {
                     "query_id": np.repeat(qids, n_kept),
@@ -4230,6 +4293,171 @@ def _hnsw_snapshot_descent(
     return out.orderBy("query_id", "rank")
 
 
+def _sim_ppm_np(dot):
+    """``_SIM_PPM_SQL`` over an int64 array: the JVM's ``div``
+    truncates toward zero."""
+    import numpy as np
+
+    x = dot + 10**15
+    return np.where(x >= 0, x // 10**6, -(-x // 10**6)) - 10**9
+
+
+# Bounds of the driver-local kNN kernels: vector components gathered
+# per pair-scoring block (2 MB per side at int32), dots per exact
+# all-pairs row block (4 MB), and neighbor-of-neighbor candidate pairs
+# expanded per node block (~30 MB of index arrays). They cap driver
+# memory at any size within the broadcast cap and never change an
+# output value.
+_LOCAL_GATHER_ELEMS = 1 << 19
+_LOCAL_DOT_BLOCK = 1 << 19
+_LOCAL_CAND_PAIRS = 1 << 18
+
+
+def _exact_sums(q, qmax: int) -> bool:
+    """The snapshot's float64 rule: ``d * qmax**2 < 2**53`` bounds
+    every partial sum of a dot below the float mantissa, so float64
+    (BLAS) sums are exact integers; otherwise dots accumulate in
+    int64, wrapping like the JVM's long arithmetic. Never int32: ``q``
+    may be stored int32."""
+    return q.shape[1] * qmax * qmax < 2**53
+
+
+def _pair_dots(q, a, b):
+    """Integer dots of the row pairs ``(a[i], b[i])`` of ``q``, in
+    bounded gather blocks. Accumulated in int64 (the JVM's long
+    arithmetic, wraparound included) straight from the stored dtype:
+    no float copy of the gathered rows, ~4x faster than float64."""
+    import numpy as np
+
+    out = np.empty(len(a), np.int64)
+    step = max(1, _LOCAL_GATHER_ELEMS // max(1, q.shape[1]))
+    for s in range(0, len(a), step):
+        out[s : s + step] = np.einsum(
+            "ij,ij->i", q[a[s : s + step]], q[b[s : s + step]],
+            dtype=np.int64,
+        )
+    return out
+
+
+def _topk_per_src(src, dst, dot, k: int):
+    """Each src's best ``k`` candidates by (dot DESC, dst ASC), src-
+    major in rank order. The input must be sorted by (src, dst): the
+    stable sort then breaks dot ties by dst. ``~dot`` orders like
+    ``-dot`` without overflowing at the int64 minimum."""
+    import numpy as np
+
+    o = np.lexsort((~dot, src))
+    src, dst, dot = src[o], dst[o], dot[o]
+    first = np.flatnonzero(np.r_[True, src[1:] != src[:-1]])
+    pos = np.arange(len(src)) - np.repeat(
+        first, np.diff(np.r_[first, len(src)])
+    )
+    keep = pos < k
+    return src[keep], dst[keep], dot[keep]
+
+
+def _nn_descent_rows(q, rows, k: int, iters: int):
+    """``nn_descent_knn_graph``'s cold build in numpy, over the rows
+    ``rows`` (ascending row indices of ``q``, so row order is id
+    order): ring init, then ``iters`` rounds of symmetrize →
+    neighbor-of-neighbor candidates ∪ current edges → dedup → exact
+    integer dots → top-k by (dot DESC, id ASC). Unpruned: a cold
+    build's NEW-flag pruning skips only candidates that lost before
+    and would lose again. Candidates are expanded in node blocks of
+    at most ``_LOCAL_CAND_PAIRS`` pairs (one node may exceed it).
+    Returns ``(nbr, dot)``, each (len(rows), k_eff), local indices in
+    rank order."""
+    import numpy as np
+
+    n = len(rows)
+    k_eff = min(k, n - 1) if n > 1 else 0
+    if k_eff == 0:
+        return np.empty((n, 0), np.int64), np.empty((n, 0), np.int64)
+    local = np.arange(n)
+    nbr = np.sort((local[:, None] + np.arange(1, k_eff + 1)) % n, axis=1)
+    src = np.repeat(local, k_eff)
+    _, t, dt = _topk_per_src(
+        src, nbr.ravel(),
+        _pair_dots(q, rows[src], rows[nbr.ravel()]), k_eff,
+    )
+    nbr, dot = t.reshape(n, k_eff), dt.reshape(n, k_eff)
+    for _ in range(iters):
+        # symmetric adjacency (duplicates are harmless: candidates dedup)
+        s = np.concatenate([src, nbr.ravel()])
+        o = np.argsort(s, kind="stable")
+        sym = np.concatenate([nbr.ravel(), src])[o]
+        indptr = np.zeros(n + 1, np.int64)
+        np.cumsum(np.bincount(s, minlength=n), out=indptr[1:])
+        deg = np.diff(indptr)
+        # NoN pairs each node expands to; every node has >= k_eff edges
+        cum = np.cumsum(np.add.reduceat(deg[sym], indptr[:-1]))
+        new_nbr = np.empty_like(nbr)
+        new_dot = np.empty_like(dot)
+        b0 = 0
+        while b0 < n:
+            base = cum[b0 - 1] if b0 else 0
+            b1 = max(
+                b0 + 1,
+                int(np.searchsorted(cum, base + _LOCAL_CAND_PAIRS, "right")),
+            )
+            mid = sym[indptr[b0] : indptr[b1]]
+            x = np.repeat(np.repeat(local[b0:b1], deg[b0:b1]), deg[mid])
+            z = _csr_rows(indptr, sym, mid)
+            key = np.unique(
+                np.concatenate(
+                    [
+                        (x * n + z)[x != z],
+                        src[b0 * k_eff : b1 * k_eff] * n
+                        + nbr[b0:b1].ravel(),
+                    ]
+                )
+            )
+            cx, cz = np.divmod(key, n)
+            _, t, dt = _topk_per_src(
+                cx, cz, _pair_dots(q, rows[cx], rows[cz]), k_eff
+            )
+            new_nbr[b0:b1] = t.reshape(-1, k_eff)
+            new_dot[b0:b1] = dt.reshape(-1, k_eff)
+            b0 = b1
+        nbr, dot = new_nbr, new_dot
+    return nbr, dot
+
+
+def _exact_knn_rows(q, rows, k: int, exact: bool):
+    """``_exact_knn_graph`` in numpy over the rows ``rows`` (ascending):
+    for each row every other row, ranked by (dot DESC, id ASC), kept at
+    rank <= k or rank 2^j (the skip edges). Self is removed from the
+    ordered list, not from the ties, as the relational id !=
+    neighbor_id pre-filter does. Scored in row blocks of at most
+    ``_LOCAL_DOT_BLOCK`` dots. Returns ``(src, dst, rank, dot)``,
+    local indices, src-major in rank order."""
+    import numpy as np
+
+    n = len(rows)
+    if n < 2:
+        e = np.empty(0, np.int64)
+        return e, e, e.astype(np.int32), e
+    ranks = np.arange(1, n)
+    keep = (ranks <= k) | ((ranks & (ranks - 1)) == 0)
+    mat = q[rows].astype(np.float64 if exact else np.int64, copy=False)
+    step = max(1, _LOCAL_DOT_BLOCK // n)
+    nbrs, dots = [], []
+    for b0 in range(0, n, step):
+        blk = np.arange(b0, min(n, b0 + step))
+        dt = (mat[blk] @ mat.T).astype(np.int64)
+        order = np.argsort(~dt, axis=1, kind="stable")
+        nb = order[order != blk[:, None]].reshape(len(blk), n - 1)[:, keep]
+        nbrs.append(nb)
+        dots.append(dt[np.arange(len(blk))[:, None], nb])
+    m_keep = int(keep.sum())
+    return (
+        np.repeat(np.arange(n), m_keep),
+        np.concatenate(nbrs).ravel(),
+        np.tile(ranks[keep].astype(np.int32), n),
+        np.concatenate(dots).ravel(),
+    )
+
+
 def _exact_knn_graph_local(
     members: DataFrame, id_col: str, vec_col: str, k: int
 ) -> DataFrame:
@@ -4241,16 +4469,10 @@ def _exact_knn_graph_local(
     cost of a warm ``hnsw_hierarchy_insert``). The same
     bounded-collect shape as the IVF Lloyd trainer (`ivf_centers`):
     the data is driver-scalar-sized by contract, so distributing the
-    ranking buys nothing but scheduling floor.
-
-    Arithmetic replication notes: quantization is Spark's
-    ``round(x*1e6, 0)`` = HALF_UP away from zero, replayed as
-    ``sign(y)*floor(|y|+0.5)`` (equal for all doubles — a mismatch
-    would need a double within half an ulp below a .5 boundary,
-    which spacing forbids); inputs widen float->double BEFORE the
-    multiply exactly like the column cast; dots are int64 (<= d*1e12,
-    no overflow for d <= 1000); sim_ppm replays the shifted floor
-    division on non-negative operands."""
+    ranking buys nothing but scheduling floor. One Arrow collect of
+    the Spark-quantized matrix (``_collect_corpus_arrays``, which
+    drops null ids and raises on dirty rows), then the in-cap
+    build's all-pairs kernel ``_exact_knn_rows``."""
     import numpy as np
     import pandas as pd
 
@@ -4264,36 +4486,19 @@ def _exact_knn_graph_local(
             T.StructField("sim_ppm", T.LongType()),
         ]
     )
-    pdf = members.select(id_col, vec_col).toPandas()
-    n = len(pdf)
+    ids, q, qmax, _ = _collect_corpus_arrays(members, id_col, vec_col)
+    n = len(ids)
     if n < 2:
         return spark.createDataFrame([], schema=out_schema)
-    ids = pdf[id_col].to_numpy()
-    srt = np.argsort(ids, kind="stable")
-    ids = ids[srt]
-    vecs = np.stack(
-        [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].to_numpy()[srt]]
+    src, dst, rank, dot = _exact_knn_rows(
+        q, np.arange(n), k, _exact_sums(q, qmax)
     )
-    y = vecs * 1_000_000.0
-    q = (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)
-    dots = q @ q.T
-    # per-row total order (dot DESC, id ASC): stable argsort of -dot
-    # over id-ascending columns = the window's tie-break; removing
-    # SELF from the ordered list (not from the ties) reproduces the
-    # id != neighbor_id pre-rank exclusion for any tie layout
-    order = np.argsort(-dots, axis=1, kind="stable")
-    nbrs = order[order != np.arange(n)[:, None]].reshape(n, n - 1)
-    ranks = np.arange(1, n, dtype=np.int64)
-    keep = (ranks <= k) | ((ranks & (ranks - 1)) == 0)
-    nbr_kept = nbrs[:, keep]
-    m_keep = nbr_kept.shape[1]
-    dot_kept = dots[np.arange(n)[:, None], nbr_kept].ravel()
     out = pd.DataFrame(
         {
-            "id": np.repeat(ids, m_keep),
-            "neighbor_id": ids[nbr_kept].ravel(),
-            "rank": np.tile(ranks[keep].astype(np.int32), n),
-            "sim_ppm": (dot_kept + 10**15) // 10**6 - 10**9,
+            "id": ids[src],
+            "neighbor_id": ids[dst],
+            "rank": rank,
+            "sim_ppm": _sim_ppm_np(dot),
         }
     )
     return spark.createDataFrame(out, schema=out_schema)
@@ -4406,7 +4611,11 @@ def hnsw_hierarchy_build(
     cost the extra ~1/(m-1) only. ``meta`` (a dict, mutated in
     place) receives ``top_layer`` so a caller that builds-then-serves
     can pass it straight to ``hnsw_topk_search(top_layer=...)``
-    instead of paying an aggregation job to rediscover it."""
+    instead of paying an aggregation job to rediscover it.
+
+    Within the broadcast cap ``hnsw_local_build`` builds the same
+    edges and meta in numpy from one collect; this relational build is
+    the reference it is tested against, and the build above the cap."""
     n = corpus_rows if corpus_rows is not None else df.count()
     levels = max_level if max_level is not None else hnsw_max_level(
         n, m, entry_budget
@@ -4454,6 +4663,148 @@ def hnsw_hierarchy_build(
             meta["top_layer"] = l
             meta["layer_sizes"][l] = cnt
     return out
+
+
+class HnswLocalBuild:
+    """A layered hierarchy built on the driver by ``hnsw_local_build``:
+    the corpus arrays of its one collect (sorted ``ids``, quantized
+    ``q``, ``qmax``, md5 levels ``lv`` capped at
+    ``hnsw_max_level(n) + 1``), the edges as row-index arrays
+    ``layer, src, dst, rank, dot``, sorted by (layer, src, rank), and
+    ``meta`` (``top_layer``, ``layer_sizes``, ``size_cap``, as
+    ``hnsw_hierarchy_build`` fills it)."""
+
+    def __init__(self, spark, id_type, m, ids, q, qmax, lv, edges, meta):
+        self.spark = spark
+        self.id_type = id_type
+        self.m = m
+        self.ids, self.q, self.qmax, self.lv = ids, q, qmax, lv
+        self.layer, self.src, self.dst, self.rank, self.dot = edges
+        self.meta = meta
+
+    def hierarchy(self) -> DataFrame:
+        """The ``(layer, id, neighbor_id, rank, sim_ppm)`` edge table as
+        a ``createDataFrame`` view: planning and reading it run no job
+        over the corpus."""
+        import pandas as pd
+
+        schema = T.StructType(
+            [
+                T.StructField("layer", T.IntegerType()),
+                T.StructField("id", self.id_type),
+                T.StructField("neighbor_id", self.id_type),
+                T.StructField("rank", T.IntegerType()),
+                T.StructField("sim_ppm", T.LongType()),
+            ]
+        )
+        return self.spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "layer": self.layer,
+                    "id": self.ids[self.src],
+                    "neighbor_id": self.ids[self.dst],
+                    "rank": self.rank,
+                    "sim_ppm": _sim_ppm_np(self.dot),
+                }
+            ),
+            schema=schema,
+        )
+
+    def snapshot(self) -> HnswSnapshot:
+        """The serving ``HnswSnapshot``, its CSR built from the edge
+        arrays (no second collect)."""
+        import numpy as np
+
+        top = self.meta["top_layer"]
+        adj = _snapshot_adjacency(
+            len(self.ids), self.layer, self.src, self.dst, top
+        )
+        return _broadcast_snapshot(
+            self.spark, self.ids, self.q, self.qmax,
+            np.minimum(self.lv, top + 1), adj, top, self.m, self.id_type,
+        )
+
+
+def hnsw_local_build(
+    df: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 8,
+    iters: int = 3,
+    m: int = 2,
+    exact_budget: int = 2000,
+    entry_budget: int = 512,
+    corpus_rows: int | None = None,
+) -> HnswLocalBuild:
+    """``hnsw_hierarchy_build(df, base_graph=nn_descent_knn_graph(df))``
+    on the driver, for a corpus within the broadcast cap: one Arrow
+    collect (``_collect_corpus_arrays``: ids, ``_micro_quant`` matrix,
+    md5 levels capped at ``hnsw_max_level(n) + 1``), then
+
+    - layer 0: ``_nn_descent_rows`` — the unpruned NN-Descent rounds;
+    - layer l >= 1 over the rows with level >= l, with the builder's
+      stopping rule and capped ``layer_sizes`` (a layer of at most
+      ``entry_budget`` members ends the build): exact all-pairs with
+      rank-2^j skip edges (``_exact_knn_rows``) up to ``exact_budget``
+      members, NN-Descent above it.
+
+    Same integer dots, total orders and meta as the relational
+    builders, so the edges are row-for-row theirs (pinned by
+    ``test_local_hierarchy_build_equals_relational``). ``corpus_rows``
+    is the corpus row count null ids included, as the relational
+    builder counts it; omitted, one count job finds it. Dirty rows
+    raise ``ValueError`` before anything is built."""
+    import numpy as np
+
+    if k < 1:
+        raise ValueError("k must be >= 1")
+    if iters < 1:
+        raise ValueError("iters must be >= 1")
+    n = corpus_rows if corpus_rows is not None else df.count()
+    levels = hnsw_max_level(n, m, entry_budget)
+    ids, q, qmax, lv = _collect_corpus_arrays(
+        df, id_col, vec_col, m, levels + 1
+    )
+    exact = _exact_sums(q, qmax)
+    meta = {"top_layer": 0, "layer_sizes": {0: n}, "size_cap": exact_budget}
+    rows = np.arange(len(ids))
+    nbr, dot = _nn_descent_rows(q, rows, k, iters)
+    k0 = nbr.shape[1]
+    parts = [
+        (
+            np.repeat(rows, k0),
+            nbr.ravel(),
+            np.tile(np.arange(1, k0 + 1, dtype=np.int32), len(rows)),
+            dot.ravel(),
+        )
+    ]
+    for l in range(1, levels + 1):
+        rows = np.flatnonzero(lv >= l)
+        cnt = min(len(rows), exact_budget + 1)
+        if cnt <= entry_budget:
+            break
+        if cnt <= exact_budget:
+            s, t, r, dt = _exact_knn_rows(q, rows, k, exact)
+        else:
+            nbr, dt = _nn_descent_rows(q, rows, k, iters)
+            kl = nbr.shape[1]
+            s = np.repeat(np.arange(len(rows)), kl)
+            t = nbr.ravel()
+            r = np.tile(np.arange(1, kl + 1, dtype=np.int32), len(rows))
+            dt = dt.ravel()
+        parts.append((rows[s], rows[t], r, dt))
+        meta["top_layer"] = l
+        meta["layer_sizes"][l] = cnt
+    edges = (
+        np.repeat(
+            np.arange(len(parts), dtype=np.int32), [len(p[0]) for p in parts]
+        ),
+        *(np.concatenate([p[i] for p in parts]) for i in range(4)),
+    )
+    return HnswLocalBuild(
+        df.sparkSession, df.schema[id_col].dataType, m,
+        ids, q, qmax, lv, edges, meta,
+    )
 
 
 def hnsw_hierarchy_insert(

@@ -2081,6 +2081,76 @@ def test_vector_search_snapshot_lifetime(spark):
     assert not {r["neighbor_id"] for r in answers[2]} & {0, 1, 2, 500}
 
 
+def test_vector_search_cold_search_is_one_collect(spark, tmp_path, monkeypatch):
+    """Within the broadcast cap the first descent-tier search builds the
+    hierarchy in numpy from one corpus collect: at most 4 Spark jobs
+    (row count, corpus collect, the query batch's size probe and scan),
+    nothing left persisted, and ``save()`` writes ``__graph``/``__hier``
+    artifacts row-equal to those of the relational build."""
+    import numpy as np
+    import pandas as pd
+
+    from job_post_similarity_spark import index_api
+    from job_post_similarity_spark.index_api import VectorSearch
+
+    sc = spark.sparkContext
+    rng = np.random.default_rng(5)
+    centers = rng.normal(size=(8, 16))
+    v = centers[np.arange(300) % 8] + 0.3 * rng.normal(size=(300, 16))
+    v /= np.linalg.norm(v, axis=1, keepdims=True)
+
+    def frame(ids, vecs):
+        return spark.createDataFrame(
+            pd.DataFrame(
+                {"vec_id": list(ids), "embedding": [list(map(float, x)) for x in vecs]}
+            ),
+            "vec_id bigint, embedding array<double>",
+        )
+
+    corpus = frame(range(300), v)
+    queries = frame(range(1000, 1010), v[::30] + 0.01)
+
+    def index():
+        vs = VectorSearch(16, "HNSW32", spark=spark)
+        vs.exact_shortcut_rows = 0
+        vs.hierarchy_min_rows = 0
+        vs.add(corpus)
+        return vs
+
+    def saved(vs, name):
+        path = str(tmp_path / name)
+        vs.save(path)
+        return [
+            sorted(map(tuple, spark.read.parquet(f"{path}__{a}/rows").collect()))
+            for a in ("graph", "hier")
+        ]
+
+    vs = index()
+    group = "test-cold-descent-search"
+    persisted = set(sc._jsc.getPersistentRDDs().keySet())
+    sc.setJobGroup(group, "first descent-tier search")
+    try:
+        rows = vs.search(queries, k=3).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 4, jobs
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == persisted
+    assert len(rows) == 30
+
+    # the relational tier: the same index with the in-cap build off
+    monkeypatch.setattr(index_api, "_SNAPSHOT_CAP", -1)
+    ref = index()
+    assert sorted(map(tuple, ref.search(queries, k=3).collect())) == sorted(
+        map(tuple, rows)
+    )
+    want = saved(ref, "relational")
+    monkeypatch.undo()
+    assert saved(vs, "local") == want
+    assert all(want)
+
+
 def test_vector_search_saves_and_reloads_hierarchy_artifact(
     spark, embeddings, tmp_path
 ):

@@ -350,30 +350,46 @@ def test_bpe_merge_pairs_aggregates_vocab_before_explode(spark):
     assert gen != -1 and gen2 != gen and agg != -1
 
 
-def test_pagerank_fast_path_skips_node_list(spark):
+def test_pagerank_fast_path_skips_node_list(spark, monkeypatch):
     """every_node_receives=True + the iteration-1 specialization:
     the plan must not contain the node-list Union/distinct, and the
     first contribution pass is join-free (joins only appear for
     iterations 2+ → exactly iterations-1 rank joins)."""
-    from job_post_similarity_spark.operators.graph import (
-        bipartite_edges,
-        pagerank,
-    )
-    from job_post_similarity_spark.sources.io import load_table
+    from job_post_similarity_spark.operators.graph import pagerank
 
-    spark.catalog.clearCache()
-    li = load_table(spark, SF_DIR, "lineitem")
-    edges = bipartite_edges(li, "l_orderkey", "l_suppkey", ("O", "S"))
-    # pagerank materializes via localCheckpoint, so inspect the
-    # pre-checkpoint lineage by rebuilding the loop's plan: 2
-    # iterations → exactly 1 SortMergeJoin/ShuffledHashJoin on the
-    # rank column chain. Cheap proxy: the checkpointed result exists
-    # and the fast path equals the slow path (equality is asserted in
-    # test_corpus_ops); here assert the fast path runs without a
-    # node-list Union in ITS OWN lineage by checking the explain of
-    # the contribution subplan.
-    out = pagerank(edges, iterations=1, every_node_receives=True)
-    assert out.count() > 0
+    # a symmetric graph from a local relation: the edge input itself
+    # holds no Union, so any Union in the loop's plan is the node list
+    pairs = [(a, b) for a in range(6) for b in (a + 1, a + 2) if b < 6]
+    edges = spark.createDataFrame(
+        pairs + [(b, a) for a, b in pairs], "src long, dst long"
+    )
+    # pagerank returns the loop's ranks localCheckpointed: capture the
+    # optimized plan they are checkpointed from
+    plans = []
+    frame_type = type(edges)
+    checkpoint = frame_type.localCheckpoint
+
+    def capture(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(frame_type, "localCheckpoint", capture)
+    iterations = 3
+
+    def loop_plan(fast: bool) -> str:
+        plans.clear()
+        assert pagerank(
+            edges, iterations=iterations, every_node_receives=fast
+        ).count() == 6
+        (plan,) = plans
+        return plan
+
+    fast, slow = loop_plan(True), loop_plan(False)
+    assert len(re.findall(r"\bJoin Inner\b", fast)) == iterations - 1
+    assert "Union" not in fast and "Join LeftOuter" not in fast
+    # the slow path's node list, so the patterns above can fire
+    assert "Union" in slow
+    assert len(re.findall(r"\bJoin LeftOuter\b", slow)) == iterations
 
 
 def test_binary_quantize_no_exchange(spark):

@@ -2005,6 +2005,117 @@ def test_exact_knn_graph_local_equals_relational(spark):
     assert sorted(map(tuple, via_dispatch.collect())) == loc_rows
 
 
+def _hier_rows(df):
+    return [
+        tuple(r)
+        for r in df.select("layer", "id", "neighbor_id", "rank", "sim_ppm")
+        .orderBy("layer", "id", "rank")
+        .collect()
+    ]
+
+
+@pytest.mark.parametrize(
+    "n, vec_type, id_type, iters, exact_budget, entry_budget",
+    [
+        # layer 1 holds 61 > exact_budget members (the NN-Descent
+        # branch), the layers above it are exact all-pairs
+        (300, "float", "long", 1, 60, 16),
+        (300, "float", "long", 3, 60, 16),
+        (120, "double", "string", 2, 40, 8),
+        # n in {0, 1, k, k+1} at k=4
+        (0, "double", "long", 1, 2000, 512),
+        (1, "double", "long", 1, 2000, 512),
+        (4, "double", "string", 2, 2000, 1),
+        (5, "float", "long", 3, 2000, 1),
+    ],
+)
+def test_local_hierarchy_build_equals_relational(
+    spark, n, vec_type, id_type, iters, exact_budget, entry_budget
+):
+    """The in-cap numpy build (``hnsw_local_build``: unpruned NN-Descent
+    for layer 0 and above ``exact_budget``, exact all-pairs with skip
+    edges below it) reproduces ``hnsw_hierarchy_build`` over
+    ``nn_descent_knn_graph`` — whose NEW-flag pruning a cold build
+    claims is byte-identical to the unpruned rounds — row for row in
+    (layer, id, neighbor_id, rank) order, sim_ppm included, with the
+    same meta. Planted exact twins make dot ties."""
+    import numpy as np
+    import pandas as pd
+
+    from job_post_similarity_spark.operators.ann import (
+        hnsw_hierarchy_build,
+        hnsw_local_build,
+        nn_descent_knn_graph,
+    )
+
+    k, d = (4, 12) if n <= 5 else (8, 16)
+    rng = np.random.default_rng(n + iters)
+    centers = rng.normal(size=(6, d))
+    v = centers[np.arange(n) % 6] + 0.3 * rng.normal(size=(n, d))
+    v /= np.maximum(np.linalg.norm(v, axis=1, keepdims=True), 1e-12)
+    if n > 10:
+        v[n - 5 :] = v[:5]
+    if vec_type == "float":
+        v = v.astype(np.float32)
+    ids = rng.permutation(n) * 7 + 3
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "vec_id": [str(i) if id_type == "string" else int(i) for i in ids],
+                "embedding": [[float(x) for x in row] for row in v],
+            }
+        ),
+        f"vec_id {id_type}, embedding array<{vec_type}>",
+    )
+    knobs = dict(k=k, iters=iters, exact_budget=exact_budget,
+                 entry_budget=entry_budget)
+    meta: dict = {}
+    rel = hnsw_hierarchy_build(
+        df, meta=meta,
+        base_graph=nn_descent_knn_graph(df, k=k, iters=iters), **knobs,
+    )
+    local = hnsw_local_build(df, **knobs)
+    want = _hier_rows(rel)
+    assert _hier_rows(local.hierarchy()) == want
+    assert local.meta == meta
+    if n == 300:
+        assert meta["layer_sizes"][1] == exact_budget + 1
+        assert meta["top_layer"] >= 2
+
+
+def test_hnsw_builders_on_dirty_input(spark):
+    """The relational NN-Descent drops a null corpus id in both size
+    regimes (the small regime's sorted() id probe used to raise
+    TypeError on it); the numpy build refuses duplicate ids, null
+    vectors, null elements and ragged widths with the snapshot's
+    ValueErrors, naming the id, before it builds anything."""
+    import pytest as _pytest
+
+    from job_post_similarity_spark.operators.ann import (
+        hnsw_local_build,
+        nn_descent_knn_graph,
+    )
+
+    schema = "vec_id long, embedding array<double>"
+    rows = [(i, [1.0, float(i), 0.5 * i]) for i in range(1, 9)]
+    clean = spark.createDataFrame(rows, schema)
+    dirty = spark.createDataFrame(rows + [(None, [0.3, 0.2, 0.1])], schema)
+    want = sorted(map(tuple, nn_descent_knn_graph(clean, k=3, iters=2).collect()))
+    got = nn_descent_knn_graph(dirty, k=3, iters=2).collect()
+    assert sorted(map(tuple, got)) == want
+    assert _hier_rows(hnsw_local_build(dirty, k=3, iters=2).hierarchy()) == (
+        _hier_rows(hnsw_local_build(clean, k=3, iters=2).hierarchy())
+    )
+    for bad, msg in [
+        ((3, [0.1, 0.2, 0.3]), "id 3 is not unique"),
+        ((20, None), "id 20: null vector"),
+        ((21, [0.1, None, 0.3]), "id 21: a null element"),
+        ((22, [0.1, 0.2]), "id 22: 2 dims, not 3"),
+    ]:
+        with _pytest.raises(ValueError, match=msg):
+            hnsw_local_build(spark.createDataFrame(rows + [bad], schema))
+
+
 def test_quant_expr_equals_lambda(spark):
     """_micro_quant/_int_dot moved from lambda-built HOFs to F.expr
     strings (py4j-chatter shave) — pin that the SQL form computes the
