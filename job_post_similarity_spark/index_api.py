@@ -36,13 +36,77 @@ from .caching import cache_auto
 from .operators import ann, knn
 from .schemas import require_embedding_dim
 
-#: corpora up to this many rows serve the descent tier from one
-#: broadcast ``HnswSnapshot`` (``ann.hnsw_serving_state``'s default cap)
+#: corpora up to this many rows build the HNSW index in numpy from one
+#: corpus collect and serve the descent from one broadcast
+#: ``HnswSnapshot`` (``ann.hnsw_serving_state``'s default cap)
 _SNAPSHOT_CAP = 100_000
 
 
+class _Epoch:
+    """Everything derived from one version of the corpus: the corpus,
+    its memoized row count, the HNSW layer-0 graph and its build
+    provenance (cold/refresh/insert/loaded + knobs, recorded into the
+    saved artifact's meta), the layered hierarchy and its meta, the
+    per-layer navigation membership (``ann.hnsw_nav_members``), the
+    warm serving state (``ann.hnsw_serving_state``) and the OPQ/RaBitQ
+    memos. Searches fill it lazily and reuse it across query batches;
+    ``release()`` frees it."""
+
+    def __init__(self, corpus: DataFrame):
+        self.corpus = corpus
+        self.n: int | None = None
+        self.graph: DataFrame | None = None
+        self.graph_params: dict | None = None
+        self.hier: DataFrame | None = None
+        self.hier_meta: dict | None = None
+        self.nav: DataFrame | None = None
+        self.serving: ann.HnswSnapshot | dict | None = None
+        # OPQ: (kind, rotation, codebooks, encoded or rotated corpus);
+        # RaBitQ: (rotation[, centers], code table)
+        self.opq: tuple | None = None
+        self.rabitq: tuple | None = None
+
+    @property
+    def ntotal(self) -> int:
+        if self.n is None:
+            # one job with no exchange: rows counted per partition and
+            # summed on the driver (an aggregate count() schedules an
+            # extra shuffle-map job under AQE)
+            self.n = (
+                self.corpus.select(F.lit(1))._jdf.queryExecution().toRdd().count()
+            )
+        return self.n
+
+    def release(self, keep_warm: bool = False) -> None:
+        """Free the relations and broadcasts this epoch holds.
+        ``keep_warm`` (``add()`` retiring the epoch) keeps the graph,
+        hierarchy and membership: they cover exactly the old corpus,
+        which is what the next search's repair for the appended rows
+        reads. The snapshot's release is ``Broadcast.unpersist``, not
+        destroy: a frame an earlier ``search()`` returned still
+        collects."""
+        names = ["serving", "opq", "rabitq"]
+        if not keep_warm:
+            names += ["graph", "hier", "nav"]
+        for name in names:
+            memo = getattr(self, name)
+            setattr(self, name, None)
+            if isinstance(memo, ann.HnswSnapshot):
+                memo.release()
+            elif isinstance(memo, dict):  # relational serving tables
+                for tab in memo.values():
+                    ann.release_relation(tab)
+            elif isinstance(memo, tuple):  # quantizer model + codes
+                ann.release_relation(memo[-1])
+            elif memo is not None:
+                ann.release_relation(memo)
+
+
 class VectorSearch:
-    """Distributed analog of the reference's Faiss wrapper."""
+    """Distributed analog of the reference's Faiss wrapper. Where the
+    reference holds one Faiss index object, this holds one ``_Epoch``
+    per version of the corpus; after an add, the previous version's
+    built index and the rows appended since seed the next build."""
 
     def __init__(
         self,
@@ -58,178 +122,21 @@ class VectorSearch:
         self.use_gpu = use_gpu  # accepted-and-ignored (reference :53-76)
         self.id_col = id_col
         self.vec_col = vec_col
-        self._df: DataFrame | None = None
         self._spark = spark
-        # memoized NN-Descent graph + entry points for the HNSW*
-        # serving tier — built on first search, reused across query
-        # batches (build and the entry-stride ranking are both
-        # corpus-invariant work), invalidated by any mutation
-        self._graph: DataFrame | None = None
-        self._graph_entries: list | None = None
-        self._stale_graph: DataFrame | None = None
-        # corpus the stale graph covers + rows added since: a SMALL
-        # add serves through ann.graph_insert (exact, cost ∝ new
-        # rows) instead of the bulk warm refresh
-        self._graph_corpus: DataFrame | None = None
-        self._pending_new: DataFrame | None = None
-        # provenance of the memoized graph (cold/refresh/insert/loaded
-        # + the knobs used) — recorded into the saved artifact's meta
-        # instead of fixed literals
-        self._graph_params: dict | None = None
-        # memoized layered hierarchy for LARGE corpora (>=
-        # hierarchy_min_rows): upper layers + skip edges built ON TOP
-        # of the memoized layer-0 graph, served by top-down descent
-        # (ann.hnsw_topk_search) — the flat provisioned-entries path
-        # needs O(#regions) hop-0 scoring per query, which stops
-        # scaling once region count grows with the corpus
-        self._hier: DataFrame | None = None
-        self._hier_meta: dict | None = None
-        # retired-but-repairable hierarchy after an append (see
-        # _invalidate_graph keep_warm): the next descent search
-        # repairs it per-layer instead of rebuilding the upper layers
-        self._stale_hier: DataFrame | None = None
-        self._stale_hier_meta: dict | None = None
-        # memoized per-layer navigation membership (ann.
-        # hnsw_nav_members) — the descent's seed/scoring relations,
-        # kept resident beside the hierarchy so a warm serve never
-        # rescans the full corpus per layer; persisted with the
-        # hierarchy artifact on save()
-        self._nav: DataFrame | None = None
-        # retired pre-mutation membership table after an append —
-        # the hierarchy repair's per-layer old-member source (see
-        # _invalidate_graph keep_warm)
-        self._stale_nav: DataFrame | None = None
-        # memoized warm-serving state, one per index epoch: the flat
-        # tier's (node, qv, nxts) relation (ann.graph_nav_table) and
-        # the descent tier's ann.hnsw_serving_state — a broadcast
-        # HnswSnapshot within the broadcast cap (each batch is one
-        # scan, the loaded-Faiss zero-setup shape), per-layer
-        # relational tables above it
-        self._nav_tab: DataFrame | None = None
-        self._serving_state: ann.HnswSnapshot | dict | None = None
-        # retired flat nav table after an append — the insert
-        # navigation's warm state (see _invalidate_graph keep_warm)
-        self._stale_nav_tab: DataFrame | None = None
-        # memoized OPQ tier ('OPQ…' descriptors): the trained
-        # (rotation, codebooks) + the persisted encoded corpus for
-        # the flat form, or the persisted ROTATED corpus for the
-        # OPQ…,IVF…,PQ… composition (ivfpq_topk_search builds its own
-        # buckets/codes over it). Corpus-invariant — invalidated on
-        # any mutation like the graph memo.
-        self._opq: tuple | None = None
-        # memoized RaBitQ tier ('RaBitQ' descriptor): the seeded
-        # orthonormal rotation + the persisted 1-bit code table
-        # (ann.rabitq_train/encode — no codebooks; model is d²
-        # driver doubles)
-        self._rabitq: tuple | None = None
-        # memoized row count: every search consults ntotal (the
-        # exact-shortcut dispatch) and the graph tier threads it into
-        # beam search's size dispatch — one count per mutation, not
-        # one per query batch
-        self._ntotal_cache: int | None = None
+        self._epoch: _Epoch | None = None  # None while the index is empty
+        self._retired: _Epoch | None = None
+        self._pending: DataFrame | None = None
 
-    def _invalidate_graph(self, keep_warm: bool = False) -> None:
-        """Drop the memoized HNSW-tier graph (and its entry points)
-        after an index mutation. ``keep_warm`` (add — the corpus
-        GREW and every old node survives) keeps the old edge table
-        as a warm-start seed: the next search runs
-        ``ann.nn_descent_refresh`` over the stored edges (1-2 rounds)
-        instead of a cold NN-Descent build. ``remove`` and ``load``
-        invalidate COLD: heavy removal strands survivors with mostly-
-        stale edge lists that 2 warm rounds may not repair to the
-        cold-build contract, and ``load`` replaces the corpus
-        wholesale."""
-        if self._graph is not None:
-            if keep_warm:
-                if self._stale_graph is not None:
-                    ann.release_relation(self._stale_graph)
-                self._stale_graph = self._graph
-            else:
-                ann.release_relation(self._graph)
-            self._graph = None
-        if not keep_warm:
-            if self._stale_graph is not None:
-                ann.release_relation(self._stale_graph)
-                self._stale_graph = None
-            self._graph_corpus = None
-            self._pending_new = None
-            self._graph_params = None
-        self._graph_entries = None
-        if self._hier is not None:
-            # the hierarchy embeds layer 0 — ANY graph invalidation
-            # stales it. keep_warm (add) RETIRES it instead of
-            # dropping: the next descent search repairs it per-layer
-            # via ann.hnsw_hierarchy_insert (cost ∝ new rows), the
-            # incremental contract the reference's index.add keeps
-            # (app/vector_search.py:85-141). Cold invalidation
-            # (remove/load) drops it — heavy removal breaks the
-            # per-layer insert premise.
-            if keep_warm:
-                if self._stale_hier is not None:
-                    ann.release_relation(self._stale_hier)
-                self._stale_hier = self._hier
-                self._stale_hier_meta = self._hier_meta
-            else:
-                ann.release_relation(self._hier)
-            self._hier = None
-            self._hier_meta = None
-        if not keep_warm and self._stale_hier is not None:
-            ann.release_relation(self._stale_hier)
-            self._stale_hier = None
-            self._stale_hier_meta = None
-        if self._nav is not None:
-            # membership is corpus-derived — stale with the hierarchy.
-            # keep_warm (add) RETIRES it: it covers exactly the OLD
-            # corpus's per-layer membership, which is what the
-            # hierarchy repair's per-layer old-member relations want
-            # (saves an md5 rescan of the corpus per repaired layer)
-            if keep_warm:
-                if self._stale_nav is not None:
-                    ann.release_relation(self._stale_nav)
-                self._stale_nav = self._nav
-            else:
-                ann.release_relation(self._nav)
-            self._nav = None
-        if not keep_warm and self._stale_nav is not None:
-            ann.release_relation(self._stale_nav)
-            self._stale_nav = None
-        # serving tables embed vectors AND adjacency — stale with the
-        # graph on ANY mutation. keep_warm RETIRES the flat table:
-        # it covers exactly (old corpus, old graph), which is what the
-        # per-row insert's navigation beam-search wants. Retire only
-        # when there IS a table (ADVICE r10: a second consecutive
-        # keep-warm mutation would overwrite the retired table with
-        # None, discarding warm state that still matches), and release
-        # whatever gets replaced/dropped.
-        if keep_warm:
-            if self._nav_tab is not None:
-                if self._stale_nav_tab is not None:
-                    ann.release_relation(self._stale_nav_tab)
-                self._stale_nav_tab = self._nav_tab
-        else:
-            if self._stale_nav_tab is not None:
-                ann.release_relation(self._stale_nav_tab)
-            self._stale_nav_tab = None
-        self._nav_tab = None
-        # the snapshot's release is Broadcast.unpersist, not destroy:
-        # a frame an earlier search() returned still collects
-        if isinstance(self._serving_state, ann.HnswSnapshot):
-            self._serving_state.release()
-        elif self._serving_state is not None:
-            for _tab in self._serving_state.values():
-                ann.release_relation(_tab)
-        self._serving_state = None
-        if self._opq is not None:
-            # the encoded/rotated relation is corpus-derived — any
-            # mutation (warm or cold) stales it; the model retrains
-            # on the next OPQ search
-            ann.release_relation(self._opq[-1])
-            self._opq = None
-        if self._rabitq is not None:
-            # same corpus-derived staleness as the OPQ code table
-            ann.release_relation(self._rabitq[-1])
-            self._rabitq = None
-        self._ntotal_cache = None  # every mutation routes through here
+    def _reset(self, df: DataFrame) -> None:
+        """Start a new epoch over ``df`` and release every held one.
+        ``remove`` and ``load`` rebuild cold: heavy removal strands
+        survivors with mostly-stale edge lists that 2 warm rounds may
+        not repair to the cold-build contract, and ``load`` replaces
+        the corpus wholesale."""
+        for ep in (self._epoch, self._retired):
+            if ep is not None:
+                ep.release()
+        self._epoch, self._retired, self._pending = _Epoch(df), None, None
 
     # -------------------------------------------------- build surface
 
@@ -240,24 +147,25 @@ class VectorSearch:
     def add(self, df: DataFrame) -> None:
         """Add a (id, embedding) DataFrame to the index. Batching is
         obsolete (reference batched 10k adds, app/main.py:71-97) —
-        union is lazy and distributed. At the HNSW tier the rows added
-        since the graph was built accumulate in ``_pending_new``: the
-        next search dispatches a SMALL pending set to the exact
-        per-row ``ann.graph_insert`` and a large one to the bulk warm
-        refresh (see ``search``)."""
+        union is lazy and distributed. An add after an HNSW build
+        retires that epoch as the warm seed, and the rows added since
+        accumulate in ``_pending``: the next search dispatches a SMALL
+        pending set to the exact per-row ``ann.graph_insert`` and a
+        large one to the bulk warm refresh (see ``_build_hierarchy``).
+        Only an epoch with a graph is retired (ADVICE r10): a second
+        add before any search keeps the seed that still matches."""
         require_embedding_dim(df, self.vec_col, self.dimension)
-        if self._graph is not None and self._graph_corpus is None:
-            # the graph being retired covers exactly the current rows
-            self._graph_corpus = self._df
-        if self._graph_corpus is not None:
-            self._pending_new = (
-                df
-                if self._pending_new is None
-                else self._pending_new.unionByName(df)
-            )
-        self._df = df if self._df is None else self._df.unionByName(df)
+        ep = self._epoch
+        if ep is not None and ep.graph is not None:
+            ep.release(keep_warm=True)
+            self._retired, self._pending = ep, df
+        else:
+            if ep is not None:
+                ep.release()
+            if self._pending is not None:
+                self._pending = self._pending.unionByName(df)
+        self._epoch = _Epoch(df if ep is None else ep.corpus.unionByName(df))
         self._spark = df.sparkSession
-        self._invalidate_graph(keep_warm=True)
 
     def add_arrays(self, embeddings, ids) -> None:
         """numpy-compat shim for reference-style callers
@@ -284,22 +192,6 @@ class VectorSearch:
     #: more than re-converging the union)
     insert_add_fraction: float = 0.1
 
-    #: corpora at or above this row count serve the HNSW tier by
-    #: LAYERED DESCENT (ann.hnsw_topk_search over upper layers built
-    #: on the memoized layer-0 graph) instead of flat provisioned
-    #: entries. Default equals exact_shortcut_rows — the descent IS
-    #: the approximate serving tier from the point approximate
-    #: serving starts: measured (r10, 20k-row 32-cluster fixture at
-    #: the 10x step) the flat tier's fixed-hop walk from one entry
-    #: per region collapses as intra-cluster graph diameter grows
-    #: (recall@1 0.10 at 4 hops) while the descent's exhaustive
-    #: ~start_budget-member seed holds 0.88-0.92 AND serves faster
-    #: warm (1.35 s vs 1.68 s). The flat provisioned-entries path
-    #: stays reachable (raise this knob, or call
-    #: ann.graph_topk_search directly) for corpora known to have
-    #: small, many clusters.
-    hierarchy_min_rows: int = 10_000
-
     #: build knobs for the layered tier — recorded into the saved
     #: hierarchy artifact's meta and REQUIRED to match on load (the
     #: descent replays the md5 % m^l membership predicate, so serving
@@ -312,28 +204,29 @@ class VectorSearch:
         """k-NN search: (query_id, neighbor_id, similarity, rank).
         Strategy follows index_description (the reference's switch,
         app/vector_search.py:42-47) once the corpus outgrows
-        ``exact_shortcut_rows``: Flat → exact blocked-BLAS;
-        HNSW* → NN-Descent graph + beam search
-        (``ann.graph_topk_search`` — clustered-corpus regime, see its
-        docstring; proven by gate graph_recall_vs_exact_embeddings;
-        the built graph is memoized across query batches and
-        invalidated on add/load/remove); other → SRP-LSH candidates +
-        exact verify.
+        ``exact_shortcut_rows``: Flat → exact blocked-BLAS; OPQ… and
+        RaBitQ… → their quantizer tiers; HNSW* → layered descent
+        (``ann.hnsw_topk_search``) over an NN-Descent layer-0 graph
+        and the upper layers built on it; other → SRP-LSH candidates +
+        exact verify. What a tier builds is held by the current epoch
+        and reused across query batches until the next mutation.
 
-        From ``hierarchy_min_rows`` on, HNSW* serves by layered
-        descent. Within the broadcast cap a cold build runs in numpy
-        from one corpus collect (``ann.hnsw_local_build``): the
-        unpruned NN-Descent rounds, which a cold build's NEW-flag
-        pruning leaves byte-identical, so the edges equal the
-        relational build's row for row (pinned by
-        ``test_local_hierarchy_build_equals_relational``). Mutations
-        still repair relationally."""
-        assert self._df is not None, "index is empty — add() first"
+        Within the broadcast cap a cold HNSW build runs in numpy from
+        one corpus collect (``ann.hnsw_local_build``): the unpruned
+        NN-Descent rounds, which a cold build's NEW-flag pruning
+        leaves byte-identical, so the edges equal the relational
+        build's row for row (pinned by
+        ``test_local_hierarchy_build_equals_relational``), and every
+        batch is one scan over a broadcast ``HnswSnapshot``. Above the
+        cap the build and the descent are relational. Mutations still
+        repair relationally."""
+        ep = self._epoch
+        assert ep is not None, "index is empty — add() first"
         d = self.index_description.strip().lower()
-        if d == "flat" or self.ntotal < self.exact_shortcut_rows:
+        if d == "flat" or ep.ntotal < self.exact_shortcut_rows:
             return knn.knn_join(
                 queries, self.id_col, self.vec_col, k=k,
-                include_self=False, right=self._df,
+                include_self=False, right=ep.corpus,
             )
         if d.startswith("opq"):
             # Faiss 'OPQ<m>[,IVF<c>],PQ<m>' family: learn the
@@ -343,22 +236,22 @@ class VectorSearch:
             # descriptor asks for it. Model + encoded relation are
             # memoized across query batches like the graph tier.
             pq_m, ivf_c = ann.parse_opq_description(d)
-            if self._opq is None:
+            if ep.opq is None:
                 R, books = ann.opq_train(
-                    self._df, self.vec_col, m=pq_m,
-                    n_rows=self.ntotal,
+                    ep.corpus, self.vec_col, m=pq_m,
+                    n_rows=ep.ntotal,
                 )
                 if ivf_c is not None:
                     rotated = ann.rotate_vectors(
-                        self._df, R, self.id_col, self.vec_col
+                        ep.corpus, R, self.id_col, self.vec_col
                     ).transform(cache_auto)
-                    self._opq = ("ivf", R, books, rotated)
+                    ep.opq = ("ivf", R, books, rotated)
                 else:
                     codes = ann.opq_encode(
-                        self._df, R, books, self.id_col, self.vec_col
+                        ep.corpus, R, books, self.id_col, self.vec_col
                     ).transform(cache_auto)
-                    self._opq = ("flat", R, books, codes)
-            kind, R, books, rel = self._opq
+                    ep.opq = ("flat", R, books, codes)
+            kind, R, books, rel = ep.opq
             if kind == "ivf":
                 # rotation preserves distances, so rotate-then-IVFPQ
                 # is exactly Faiss's OPQ,IVF,PQ pipeline; the coarse
@@ -416,17 +309,17 @@ class VectorSearch:
                     "Residual RaBitQ needs a coarse quantizer — use "
                     "'RaBitQ,IVF<c>,Residual'"
                 )
-            if self._rabitq is None:
-                P = ann.rabitq_train(self._df, self.vec_col)
+            if ep.rabitq is None:
+                P = ann.rabitq_train(ep.corpus, self.vec_col)
                 if ivf_c is not None:
                     import numpy as _np
 
                     mat = ann._quantizer_train_sample(
-                        self._df, self.vec_col, self.ntotal, 42, None
+                        ep.corpus, self.vec_col, ep.ntotal, 42, None
                     )
                     centers = ann._lloyd_kmeans(mat, ivf_c, 10, 42)
                     assigned = ann.ivf_assign_with_centers(
-                        self._df, centers, self.vec_col, n_probe=1
+                        ep.corpus, centers, self.vec_col, n_probe=1
                     )
                     if residual:
                         codes = ann.rabitq_encode_residual(
@@ -438,247 +331,77 @@ class VectorSearch:
                             assigned, P, self.id_col, self.vec_col,
                             carry_cols=("bucket",),
                         ).transform(cache_auto)
-                    self._rabitq = (P, centers, codes)
+                    ep.rabitq = (P, centers, codes)
                 else:
                     codes = ann.rabitq_encode(
-                        self._df, P, self.id_col, self.vec_col
+                        ep.corpus, P, self.id_col, self.vec_col
                     ).transform(cache_auto)
-                    self._rabitq = (P, codes)
-            if len(self._rabitq) == 3:
-                P, centers, codes = self._rabitq
+                    ep.rabitq = (P, codes)
+            if len(ep.rabitq) == 3:
+                P, centers, codes = ep.rabitq
                 return ann.rabitq_ivf_topk_search(
-                    queries, self._df, k=k,
+                    queries, ep.corpus, k=k,
                     n_centroids=ivf_c or 16,
                     id_col=self.id_col, vec_col=self.vec_col,
                     rotation=P, centers=centers, codes=codes,
                     residual=residual,
                 )
-            P, codes = self._rabitq
+            P, codes = ep.rabitq
             return ann.rabitq_topk_search(
-                queries, self._df, k=k,
+                queries, ep.corpus, k=k,
                 id_col=self.id_col, vec_col=self.vec_col,
                 rotation=P, codes=codes,
             )
         if d.startswith("hnsw"):
-            if (
-                self._graph is None
-                and self._stale_graph is None
-                and self._hier is None
-                and self._descent_in_cap()
-            ):
-                self._build_local_hierarchy()
-            # capture the append bookkeeping BEFORE the layer-0
-            # build consumes it — the hierarchy repair below needs
-            # (old corpus, appended rows) to insert per-layer
-            pend = self._pending_new
-            pend_corpus = self._graph_corpus
-            if self._graph is None:
-                old_n = (
-                    self._graph_corpus.count()
-                    if self._stale_graph is not None
-                    and self._pending_new is not None
-                    and self._graph_corpus is not None
-                    else None
-                )
-                pend_n = (
-                    self._pending_new.count()
-                    if old_n is not None
-                    else None
-                )
-                if (
-                    old_n is not None
-                    and self.insert_add_fraction > 0
-                    and pend_n <= self.insert_add_fraction * old_n
-                ):
-                    # small add: exact per-row insert — navigate the
-                    # stored graph, repair reverse fan-in; cost ∝ new
-                    # rows (ann.graph_insert's exact-union contract).
-                    # The retired nav table (old corpus, old graph)
-                    # is exactly the insert navigation's warm state.
-                    self._graph = ann.graph_insert(
-                        self._graph_corpus,
-                        self._stale_graph,
-                        self._pending_new,
-                        id_col=self.id_col,
-                        vec_col=self.vec_col,
-                        entries=ann.default_graph_entries(
-                            self._graph_corpus, self.id_col
-                        ),
-                        corpus_rows=old_n,
-                        nav_tab=self._stale_nav_tab,
-                        new_rows_count=pend_n,
-                    ).transform(self._hold)
-                    self._graph_params = {
-                        "k": 8, "built": "insert",
-                        "base": (self._graph_params or {}).get(
-                            "built", "cold"
-                        ),
-                    }
-                elif self._stale_graph is not None:
-                    # bulk add: warm-start refresh over the
-                    # pre-mutation edges (reference batched-add
-                    # contract, app/vector_search.py:85-141) — 1-2
-                    # rounds instead of a cold build
-                    # add() is the only keep_warm mutation (remove()
-                    # invalidates cold), so this refresh is provably
-                    # pure-append — skip the removal-detection joins
-                    self._graph = ann.nn_descent_refresh(
-                        self._df, self._stale_graph,
-                        self.id_col, self.vec_col,
-                        assume_append_only=True,
-                    ).transform(self._hold)
-                    self._graph_params = {
-                        "k": 8, "iters": 2, "built": "refresh",
-                    }
-                else:
-                    self._graph = ann.nn_descent_knn_graph(
-                        self._df, self.id_col, self.vec_col
-                    ).transform(self._hold)
-                    self._graph_params = {
-                        "k": 8, "iters": 3, "built": "cold",
-                    }
-                if self._stale_graph is not None:
-                    # materialize the new graph BEFORE dropping the
-                    # warm one: its lineage reads the stale graph's
-                    # cached blocks, and unpersisting first would make
-                    # the first action recompute the old graph from
-                    # cold inside the 'incremental' path (a driver
-                    # view is materialized already)
-                    if not self._descent_in_cap():
-                        self._graph.count()
-                    ann.release_relation(self._stale_graph)
-                    self._stale_graph = None
-                self._graph_corpus = None
-                self._pending_new = None
-                if self._stale_nav_tab is not None:
-                    # consumed (the insert's count above materialized
-                    # its reader) or obsolete (refresh/cold path) —
-                    # release the checkpoint blocks either way
-                    # (release_relation, not the checkpoint-no-op
-                    # unpersist — ADVICE r11)
-                    ann.release_relation(self._stale_nav_tab)
-                self._stale_nav_tab = None
-                if self.ntotal < self.hierarchy_min_rows:
-                    # flat-tier provisioning only: the descent path
-                    # derives entries from the hierarchy itself
-                    self._graph_entries = ann.default_graph_entries(
-                        self._df, self.id_col
-                    )
-            if self.ntotal >= self.hierarchy_min_rows:
-                knobs = self._HIER_KNOBS
-                if self._hier is None:
-                    meta: dict = {}
-                    if (
-                        self._stale_hier is not None
-                        and pend is not None
-                        and pend_corpus is not None
-                    ):
-                        # append path: repair the retired hierarchy
-                        # per-layer — layer 0 adopts the graph the
-                        # insert/refresh dispatch above already
-                        # maintained, upper layers pay only for the
-                        # rows whose md5 level reaches them (held
-                        # checkpointed: measured 15 s vs 5 s on the
-                        # insert path against a cached hierarchy)
-                        stale_meta = self._stale_hier_meta or {}
-                        self._hier = ann.hnsw_hierarchy_insert(
-                            pend_corpus, self._stale_hier, pend,
-                            id_col=self.id_col, vec_col=self.vec_col,
-                            k=knobs["k"], m=knobs["m"],
-                            entry_budget=knobs["entry_budget"],
-                            base_graph=self._graph, meta=meta,
-                            # retired warm state: membership + stored
-                            # sizes make the per-layer repair probe
-                            # only the NEW rows (no md5 rescan of the
-                            # full corpus per layer)
-                            nav_members=self._stale_nav,
-                            old_layer_sizes=stale_meta.get(
-                                "layer_sizes"
-                            ),
-                            old_top_layer=stale_meta.get("top_layer"),
-                        ).transform(self._hold, checkpoint=True)
-                        ann.release_relation(self._stale_hier)
-                        self._stale_hier = None
-                        self._stale_hier_meta = None
-                        if self._stale_nav is not None:
-                            # consumed — holding the hierarchy above
-                            # materialized every reader
-                            ann.release_relation(self._stale_nav)
-                            self._stale_nav = None
-                    else:
-                        self._hier = ann.hnsw_hierarchy_build(
-                            self._df, self.id_col, self.vec_col,
-                            k=knobs["k"], m=knobs["m"],
-                            entry_budget=knobs["entry_budget"],
-                            corpus_rows=self.ntotal,
-                            base_graph=self._graph, meta=meta,
-                        ).transform(self._hold, checkpoint=True)
-                    self._hier_meta = meta
-                if self._serving_state is None:
-                    if self._nav is None and not self._descent_in_cap():
-                        # per-layer membership for the relational tier,
-                        # materialized once per corpus — every batch's
-                        # descent reads it instead of md5-rescanning
-                        # the full corpus per layer (the snapshot tier
-                        # never reads it; save() builds it on demand)
-                        self._nav = ann.hnsw_nav_members(
-                            self._df, self.id_col, self.vec_col,
-                            m=knobs["m"],
-                            top_layer=self._hier_meta["top_layer"],
-                        ).transform(cache_auto)
-                    # within the broadcast cap: one HnswSnapshot, so
-                    # every batch is a single scan; above it,
-                    # relational tables only for the upper layers
-                    # serving will read (ADVICE r10 medium)
-                    self._serving_state = ann.hnsw_serving_state(
-                        self._df, self._hier,
-                        self._hier_meta["top_layer"],
-                        id_col=self.id_col, vec_col=self.vec_col,
-                        nav_members=self._nav, m=knobs["m"],
-                        corpus_rows=self.ntotal,
-                        layer_sizes=self._hier_meta["layer_sizes"],
-                        size_cap=self._hier_meta.get("size_cap"),
-                    )
-                return ann.hnsw_topk_search(
-                    queries, self._df, k=k,
+            knobs = self._HIER_KNOBS
+            if ep.hier is None:
+                self._build_hierarchy(ep)
+            if ep.serving is None:
+                if ep.nav is None and not self._descent_in_cap():
+                    # per-layer membership for the relational tier,
+                    # materialized once per corpus — every batch's
+                    # descent reads it instead of md5-rescanning the
+                    # full corpus per layer (the snapshot tier never
+                    # reads it; save() builds it on demand)
+                    ep.nav = ann.hnsw_nav_members(
+                        ep.corpus, self.id_col, self.vec_col,
+                        m=knobs["m"], top_layer=ep.hier_meta["top_layer"],
+                    ).transform(cache_auto)
+                # within the broadcast cap: one HnswSnapshot, so every
+                # batch is a single scan; above it, relational tables
+                # only for the upper layers serving will read (ADVICE
+                # r10 medium)
+                ep.serving = ann.hnsw_serving_state(
+                    ep.corpus, ep.hier, ep.hier_meta["top_layer"],
                     id_col=self.id_col, vec_col=self.vec_col,
-                    hierarchy=self._hier,
-                    m=knobs["m"],
-                    graph_k=knobs["k"],
-                    entry_budget=knobs["entry_budget"],
-                    corpus_rows=self.ntotal,
-                    top_layer=self._hier_meta["top_layer"],
-                    layer_sizes=self._hier_meta["layer_sizes"],
-                    size_cap=self._hier_meta.get("size_cap"),
-                    nav_members=self._nav,
-                    serving_state=self._serving_state,
+                    nav_members=ep.nav, m=knobs["m"],
+                    corpus_rows=ep.ntotal,
+                    layer_sizes=ep.hier_meta["layer_sizes"],
+                    size_cap=ep.hier_meta.get("size_cap"),
                 )
-            if self._nav_tab is None and self.ntotal <= 100_000:
-                # flat-tier warm-serving state, one per index build —
-                # only within the broadcast regime the beam search
-                # reads it in (a user-raised hierarchy_min_rows could
-                # otherwise route a >100k corpus here and materialize
-                # a full-corpus broadcast join serving ignores)
-                self._nav_tab = ann.graph_nav_table(
-                    self._df, self._graph, self.id_col, self.vec_col
-                ).localCheckpoint()
-            return ann.graph_topk_search(
-                queries, self._df, k=k,
+            return ann.hnsw_topk_search(
+                queries, ep.corpus, k=k,
                 id_col=self.id_col, vec_col=self.vec_col,
-                graph=self._graph,
-                entries=self._graph_entries,
-                corpus_rows=self.ntotal,
-                nav_tab=self._nav_tab,
+                hierarchy=ep.hier,
+                m=knobs["m"],
+                graph_k=knobs["k"],
+                entry_budget=knobs["entry_budget"],
+                corpus_rows=ep.ntotal,
+                top_layer=ep.hier_meta["top_layer"],
+                layer_sizes=ep.hier_meta["layer_sizes"],
+                size_cap=ep.hier_meta.get("size_cap"),
+                nav_members=ep.nav,
+                serving_state=ep.serving,
             )
         return ann.srp_topk_search(
-            queries, self._df, k=k, id_col=self.id_col, vec_col=self.vec_col
+            queries, ep.corpus, k=k, id_col=self.id_col, vec_col=self.vec_col
         )
 
     def _descent_in_cap(self) -> bool:
-        """The corpus serves by layered descent from a broadcast
-        ``HnswSnapshot``: at least ``hierarchy_min_rows`` rows and at
-        most the snapshot's broadcast cap."""
-        return self.hierarchy_min_rows <= self.ntotal <= _SNAPSHOT_CAP
+        """The corpus is within the snapshot's broadcast cap: its cold
+        HNSW build runs in numpy and its descent serves from one
+        broadcast ``HnswSnapshot``."""
+        return self.ntotal <= _SNAPSHOT_CAP
 
     def _hold(self, df: DataFrame, checkpoint: bool = False) -> DataFrame:
         """Keep an index relation for the current epoch. On the
@@ -694,33 +417,106 @@ class VectorSearch:
             return ann.driver_view(df)
         return df.localCheckpoint() if checkpoint else df.transform(cache_auto)
 
-    def _build_local_hierarchy(self) -> None:
-        """Cold in-cap build: the whole hierarchy in numpy from one
-        corpus collect (``ann.hnsw_local_build``), the serving snapshot
-        from its arrays, and ``_hier``/``_graph`` as job-free views of
-        the same edges — what ``save()`` and ``add()``'s insert/refresh
-        read. Row-for-row the relational NN-Descent + hierarchy
-        build."""
+    def _build_hierarchy(self, ep: _Epoch) -> None:
+        """Build ``ep``'s layer-0 graph (unless load() adopted one) and
+        its hierarchy. A cold in-cap build runs in numpy from one
+        corpus collect (``ann.hnsw_local_build``) and yields the
+        serving snapshot too; ``hier``/``graph`` are job-free views of
+        the same edges, what ``save()`` and the next add's repair
+        read. After an add, the retired epoch seeds the build instead:
+        layer 0 goes through the exact per-row ``ann.graph_insert``
+        when the pending rows are at most ``insert_add_fraction`` of
+        the old corpus (cost ∝ new rows), else through the bulk warm
+        ``ann.nn_descent_refresh`` (reference batched-add contract,
+        app/vector_search.py:85-141); ``ann.hnsw_hierarchy_insert``
+        then repairs the upper layers, paying only for the rows whose
+        md5 level reaches them. The retired epoch is released once the
+        new hierarchy is held."""
         knobs = self._HIER_KNOBS
-        build = ann.hnsw_local_build(
-            self._df, self.id_col, self.vec_col,
-            k=knobs["k"], m=knobs["m"],
-            entry_budget=knobs["entry_budget"],
-            corpus_rows=self.ntotal,
-        )
-        self._hier = build.hierarchy()
-        self._hier_meta = build.meta
-        self._graph = self._hier.filter(F.col("layer") == 0).drop("layer")
-        self._graph_params = {"k": 8, "iters": 3, "built": "cold"}
-        self._serving_state = build.snapshot()
-        # a cold build supersedes any retired warm state
-        for name in ("_stale_hier", "_stale_nav", "_stale_nav_tab"):
-            if getattr(self, name) is not None:
-                ann.release_relation(getattr(self, name))
-                setattr(self, name, None)
-        self._stale_hier_meta = None
-        self._graph_corpus = None
-        self._pending_new = None
+        warm, pend = self._retired, self._pending
+        if ep.graph is None and warm is None and self._descent_in_cap():
+            build = ann.hnsw_local_build(
+                ep.corpus, self.id_col, self.vec_col,
+                k=knobs["k"], m=knobs["m"],
+                entry_budget=knobs["entry_budget"],
+                corpus_rows=ep.ntotal,
+            )
+            ep.hier, ep.hier_meta = build.hierarchy(), build.meta
+            ep.graph = ep.hier.filter(F.col("layer") == 0).drop("layer")
+            ep.graph_params = {"k": 8, "iters": 3, "built": "cold"}
+            ep.serving = build.snapshot()
+            return
+        if ep.graph is None and warm is None:
+            ep.graph = ann.nn_descent_knn_graph(
+                ep.corpus, self.id_col, self.vec_col
+            ).transform(self._hold)
+            ep.graph_params = {"k": 8, "iters": 3, "built": "cold"}
+        elif ep.graph is None:
+            # both counts are memoized, and the pending rows are
+            # exactly the rows the union gained
+            old_n = warm.ntotal
+            pend_n = ep.ntotal - old_n
+            if (
+                self.insert_add_fraction > 0
+                and pend_n <= self.insert_add_fraction * old_n
+            ):
+                ep.graph = ann.graph_insert(
+                    warm.corpus, warm.graph, pend,
+                    id_col=self.id_col, vec_col=self.vec_col,
+                    entries=ann.default_graph_entries(
+                        warm.corpus, self.id_col
+                    ),
+                    corpus_rows=old_n,
+                    new_rows_count=pend_n,
+                ).transform(self._hold)
+                ep.graph_params = {
+                    "k": 8, "built": "insert",
+                    "base": (warm.graph_params or {}).get("built", "cold"),
+                }
+            else:
+                # add() is the only warm mutation (remove() resets
+                # cold), so the refresh is provably pure-append — skip
+                # the removal-detection joins
+                ep.graph = ann.nn_descent_refresh(
+                    ep.corpus, warm.graph, self.id_col, self.vec_col,
+                    assume_append_only=True,
+                ).transform(self._hold)
+                ep.graph_params = {"k": 8, "iters": 2, "built": "refresh"}
+            if not self._descent_in_cap():
+                # materialize the new graph BEFORE the warm one is
+                # released: its lineage reads the old graph's cached
+                # blocks (a driver view is materialized already)
+                ep.graph.count()
+        meta: dict = {}
+        if warm is not None and warm.hier is not None:
+            old_meta = warm.hier_meta or {}
+            ep.hier = ann.hnsw_hierarchy_insert(
+                warm.corpus, warm.hier, pend,
+                id_col=self.id_col, vec_col=self.vec_col,
+                k=knobs["k"], m=knobs["m"],
+                entry_budget=knobs["entry_budget"],
+                corpus_rows=warm.ntotal,
+                base_graph=ep.graph, meta=meta,
+                # retired membership + stored sizes make the per-layer
+                # repair probe only the NEW rows (no md5 rescan of the
+                # full corpus per layer)
+                nav_members=warm.nav,
+                old_layer_sizes=old_meta.get("layer_sizes"),
+                old_top_layer=old_meta.get("top_layer"),
+            ).transform(self._hold, checkpoint=True)
+        else:
+            ep.hier = ann.hnsw_hierarchy_build(
+                ep.corpus, self.id_col, self.vec_col,
+                k=knobs["k"], m=knobs["m"],
+                entry_budget=knobs["entry_budget"],
+                corpus_rows=ep.ntotal,
+                base_graph=ep.graph, meta=meta,
+            ).transform(self._hold, checkpoint=True)
+        ep.hier_meta = meta
+        if warm is not None:
+            # consumed: holding the hierarchy materialized every reader
+            warm.release()
+            self._retired = self._pending = None
 
     def search_arrays(self, query_embeddings, k: int = 2):
         """Reference-shaped output (app/vector_search.py:143-205):
@@ -729,7 +525,7 @@ class VectorSearch:
         import numpy as np
         import pandas as pd
 
-        assert self._df is not None and self._spark is not None
+        assert self._epoch is not None and self._spark is not None
         qids = list(range(-len(query_embeddings), 0))  # avoid id clash
         qdf = self._spark.createDataFrame(
             pd.DataFrame(
@@ -758,18 +554,19 @@ class VectorSearch:
         ``index_store`` kNN-graph artifact) so a reloaded index serves
         without rebuilding — the reference saves the trained Faiss
         structure, not just the raw vectors."""
-        assert self._df is not None
+        ep = self._epoch
+        assert ep is not None
         from .operators import index_store
 
-        self._df.write.mode("overwrite").parquet(index_path)
-        if self._graph is not None:
+        ep.corpus.write.mode("overwrite").parquet(index_path)
+        if ep.graph is not None:
             index_store.save_knn_graph(
                 index_path + "__graph",
-                self._graph,
-                self.ntotal,  # memoized — no extra count job
+                ep.graph,
+                ep.ntotal,  # memoized — no extra count job
                 # actual build provenance (cold/refresh/insert/loaded
                 # + knobs), not fixed literals
-                params=self._graph_params or {"k": 8, "iters": 3},
+                params=ep.graph_params or {"k": 8, "iters": 3},
             )
         else:
             # no graph built for THIS corpus: a sibling artifact left
@@ -777,55 +574,55 @@ class VectorSearch:
             # adopted by load() whenever its n_rows happens to match,
             # serving edge lists for the wrong vectors
             index_store.delete_index(index_path + "__graph")
-        if self._hier is not None and self._hier_meta is not None:
+        if ep.hier is not None and ep.hier_meta is not None:
             # at-scale tier: the layered hierarchy persists beside the
             # vectors too — WITH the per-layer navigation membership
             # and the build knobs, so a reloaded index descends
             # immediately and with the right membership predicate
-            if self._nav is None:
-                self._nav = ann.hnsw_nav_members(
-                    self._df, self.id_col, self.vec_col,
+            if ep.nav is None:
+                ep.nav = ann.hnsw_nav_members(
+                    ep.corpus, self.id_col, self.vec_col,
                     m=self._HIER_KNOBS["m"],
-                    top_layer=self._hier_meta["top_layer"],
+                    top_layer=ep.hier_meta["top_layer"],
                 ).transform(cache_auto)
             index_store.save_hnsw_hierarchy(
                 index_path + "__hier",
-                self._hier,
-                self.ntotal,
-                self._hier_meta["top_layer"],
-                self._hier_meta["layer_sizes"],
+                ep.hier,
+                ep.ntotal,
+                ep.hier_meta["top_layer"],
+                ep.hier_meta["layer_sizes"],
                 params=dict(self._HIER_KNOBS),
-                size_cap=self._hier_meta.get("size_cap"),
-                nav_members=self._nav,
+                size_cap=ep.hier_meta.get("size_cap"),
+                nav_members=ep.nav,
             )
         else:
             index_store.delete_index(index_path + "__hier")
-        if self._opq is not None and self._opq[0] == "flat":
+        if ep.opq is not None and ep.opq[0] == "flat":
             # trained OPQ tier persists too: rotation + codebooks +
             # the encoded code table (the reference saves the whole
             # trained Faiss structure, OPQ pre-transform included).
             # The IVF composition memoizes a rotated copy of the
             # vectors instead of codes — rebuilt on load rather than
             # doubling the stored corpus.
-            kind, R, books, codes = self._opq
+            kind, R, books, codes = ep.opq
             pq_m, _ivf = ann.parse_opq_description(
                 self.index_description
             )
             index_store.save_opq_index(
-                index_path + "__opq", R, books, codes, self.ntotal,
+                index_path + "__opq", R, books, codes, ep.ntotal,
                 params={"descriptor_m": pq_m},
             )
         else:
             index_store.delete_index(index_path + "__opq")
-        if self._rabitq is not None and len(self._rabitq) == 2:
+        if ep.rabitq is not None and len(ep.rabitq) == 2:
             # RaBitQ tier (flat form): rotation (the whole model) +
             # 1-bit code table persist beside the vectors like the
             # OPQ artifact. The IVF composition memoizes centers +
             # bucketed codes in RAM and rebuilds on load (the OPQ,IVF
             # policy — don't double-store the corpus-sized relation).
-            P, codes = self._rabitq
+            P, codes = ep.rabitq
             index_store.save_rabitq_index(
-                index_path + "__rabitq", P, codes, self.ntotal
+                index_path + "__rabitq", P, codes, ep.ntotal
             )
         else:
             index_store.delete_index(index_path + "__rabitq")
@@ -834,8 +631,8 @@ class VectorSearch:
         assert self._spark is not None, "pass spark= before load()"
         df = self._spark.read.parquet(index_path)
         require_embedding_dim(df, self.vec_col, self.dimension)
-        self._df = df
-        self._invalidate_graph()
+        self._reset(df)
+        ep = self._epoch
         # adopt a co-saved graph artifact when its row count still
         # matches the vectors being loaded (staleness contract of
         # load_or_build_knn_graph); any mismatch or load failure just
@@ -846,12 +643,9 @@ class VectorSearch:
             graph, meta = index_store.load_knn_graph(
                 self._spark, index_path + "__graph"
             )
-            if meta["n_rows"] == self.ntotal:  # populates the memo too
-                self._graph = graph.transform(cache_auto)
-                self._graph_entries = ann.default_graph_entries(
-                    df, self.id_col
-                )
-                self._graph_params = {
+            if meta["n_rows"] == ep.ntotal:  # populates the memo too
+                ep.graph = graph.transform(cache_auto)
+                ep.graph_params = {
                     k: v
                     for k, v in meta.items()
                     if k not in ("kind", "n_rows", "format_version")
@@ -867,9 +661,9 @@ class VectorSearch:
                 self._spark, index_path + "__hier",
                 expect=self._HIER_KNOBS,
             )
-            if hmeta["n_rows"] == self.ntotal:
-                self._hier = hier.transform(cache_auto)
-                self._hier_meta = {
+            if hmeta["n_rows"] == ep.ntotal:
+                ep.hier = hier.transform(cache_auto)
+                ep.hier_meta = {
                     "top_layer": hmeta["top_layer"],
                     "layer_sizes": hmeta["layer_sizes"],
                     "size_cap": hmeta.get("size_cap"),
@@ -878,7 +672,7 @@ class VectorSearch:
                     self._spark, index_path + "__hier"
                 )
                 if nav is not None:
-                    self._nav = nav.transform(cache_auto)
+                    ep.nav = nav.transform(cache_auto)
         except index_store.IndexLoadError:
             pass
         d = self.index_description.strip().lower()
@@ -893,10 +687,10 @@ class VectorSearch:
                 # — a different m reshapes the codes
                 if (
                     ivf_c is None
-                    and ometa["n_rows"] == self.ntotal
+                    and ometa["n_rows"] == ep.ntotal
                     and ometa["m"] == pq_m
                 ):
-                    self._opq = ("flat", R, books, codes.transform(cache_auto))
+                    ep.opq = ("flat", R, books, codes.transform(cache_auto))
             except index_store.IndexLoadError:
                 pass
         if d.startswith("rabitq") and "ivf" not in d:
@@ -907,30 +701,19 @@ class VectorSearch:
                     self._spark, index_path + "__rabitq"
                 )
                 # row-count adoption guard, like the other artifacts
-                if rmeta["n_rows"] == self.ntotal:
-                    self._rabitq = (R, codes.transform(cache_auto))
+                if rmeta["n_rows"] == ep.ntotal:
+                    ep.rabitq = (R, codes.transform(cache_auto))
             except index_store.IndexLoadError:
                 pass
 
     @property
     def ntotal(self) -> int:
         """Reference: index.ntotal (app/vector_search.py:297-301).
-        Memoized until the next mutation (add/load/remove) — serving
-        paths read it per batch."""
-        if self._df is None:
-            return 0
-        if self._ntotal_cache is None:
-            # one job with no exchange: rows counted per partition and
-            # summed on the driver (an aggregate count() schedules an
-            # extra shuffle-map job under AQE)
-            self._ntotal_cache = (
-                self._df.select(F.lit(1))._jdf.queryExecution().toRdd().count()
-            )
-        return self._ntotal_cache
+        Memoized per epoch — serving paths read it per batch."""
+        return 0 if self._epoch is None else self._epoch.ntotal
 
     def remove(self, ids: list) -> None:
         """The op the reference refuses (NotImplementedError,
         app/vector_search_cpu.py:157-175) — trivial here."""
-        assert self._df is not None
-        self._df = knn.remove_vectors(self._df, self.id_col, ids)
-        self._invalidate_graph()
+        assert self._epoch is not None
+        self._reset(knn.remove_vectors(self._epoch.corpus, self.id_col, ids))

@@ -3649,9 +3649,10 @@ def graph_topk_search(
     """HNSW-shaped serving facade: NN-Descent graph build +
     ``graph_beam_search`` over an external query batch — the
     graph-index analog of ``srp_topk_search`` (reference default
-    index HNSW32, app/main.py:47; the index-description switch at
-    app/vector_search.py:42-47 routes here via
-    ``VectorSearch.search``).
+    index HNSW32, app/main.py:47). ``VectorSearch.search`` serves
+    ``HNSW*`` by layered descent (``hnsw_topk_search``) instead; this
+    flat tier stays for ``filtered_topk_search``, the oracle gates and
+    the bench rows.
 
     Default entry points are one corpus id per coarse region (a
     global-rank stride, 32 regions): a CONVERGED kNN graph over
@@ -5628,11 +5629,12 @@ def filtered_topk_search(
       k survivors for a query means the oversample missed; callers
       needing a hard guarantee lower ``selectivity_threshold`` to
       push more predicates onto the exact branch. The index tier
-      follows corpus size like ``VectorSearch.search`` does:
-      corpora >= ``hierarchy_min_rows`` serve the LAYERED hierarchy
-      (``hnsw_topk_search`` — the fixed-hop flat walk degrades as
-      intra-cluster diameter grows; pass ``hierarchy=`` to reuse a
-      built one), smaller ones the flat provisioned-entries graph.
+      follows corpus size: corpora >= ``hierarchy_min_rows`` serve
+      the LAYERED hierarchy (``hnsw_topk_search``, the tier
+      ``VectorSearch.search`` serves ``HNSW*`` from — the fixed-hop
+      flat walk degrades as intra-cluster diameter grows; pass
+      ``hierarchy=`` to reuse a built one), smaller ones the flat
+      provisioned-entries graph.
 
     Cost shape at scale: one bounded selectivity probe
     (``limit(threshold·n + 1).count()`` on the filtered scan —

@@ -356,7 +356,7 @@ def test_vector_search_saves_and_reloads_rabitq_artifact(spark, tmp_path):
     )
     fresh.exact_shortcut_rows = 1
     fresh.load(path)
-    assert fresh._rabitq is not None, "artifact not adopted"
+    assert fresh._epoch.rabitq is not None, "artifact not adopted"
     after = sorted(map(tuple, fresh.search(queries, k=2).collect()))
     assert after == before
     top1 = {q: nb for q, nb, _s, r in after if r == 1}
@@ -373,7 +373,7 @@ def test_vector_search_saves_and_reloads_rabitq_artifact(spark, tmp_path):
     other.add(df.limit(5).select(
         (F.col("vec_id") + 500000).alias("vec_id"), "embedding"
     ))
-    assert other._rabitq is None  # invalidated by the mutation
+    assert other._epoch.rabitq is None  # invalidated by the mutation
 
 
 def test_add_to_rabitq_index_incremental_no_retrain(spark, tmp_path):

@@ -888,10 +888,12 @@ def test_vector_search_class_api(spark, embeddings, tmp_path):
 
 def test_vector_search_hnsw_routes_to_graph_tier(spark, embeddings):
     """index_description='HNSW*' dispatches VectorSearch.search to the
-    NN-Descent + beam-search graph tier (reference switch
+    layered-descent tier over the NN-Descent graph (reference switch
     app/vector_search.py:42-47, default HNSW32 at app/main.py:47).
     Fixture: the clustered derivation the graph gate uses (navigable
-    regime); corpus-member queries must retrieve their exact top-1."""
+    regime); corpus-member queries must retrieve their exact top-1,
+    before and after adds served through the per-row insert and the
+    bulk refresh."""
     import math
 
     from job_post_similarity_spark.index_api import VectorSearch
@@ -915,7 +917,7 @@ def test_vector_search_hnsw_routes_to_graph_tier(spark, embeddings):
     vs.add(emb)
     # under the small-corpus threshold HNSW still serves EXACT (the
     # quality-preserving shortcut — approximate tiers only engage at
-    # scale); drop the threshold to exercise the graph path here
+    # scale); drop the threshold to exercise the descent path here
     assert vs.ntotal < vs.exact_shortcut_rows
     vs.exact_shortcut_rows = 0
     qids = [i * (n // 10) for i in range(10)]
@@ -944,19 +946,21 @@ def test_vector_search_hnsw_routes_to_graph_tier(spark, embeddings):
     # an external twin's nearest corpus member is the original itself
     assert got_ext == {q + 1_000_000: q for q in qids}
 
-    # ---- incremental add at the HNSW tier: the old graph is kept as
-    # a WARM-START seed (ann.nn_descent_refresh) instead of a cold
-    # invalidate — and searches after the add still serve correctly
-    assert vs._graph is not None
-    old_graph = vs._graph
+    # ---- incremental add at the HNSW tier: the built epoch is
+    # retired as a WARM-START seed instead of a cold invalidate — and
+    # searches after the add still serve correctly
+    first = vs._epoch
+    old_graph = first.graph
+    assert old_graph is not None
     twins = emb.filter(F.col("vec_id") < 5).select(
         (F.col("vec_id") + 2_000_000).alias("vec_id"), "embedding"
     )
     vs.add(twins)
-    assert vs._graph is None and vs._stale_graph is old_graph
+    assert vs._epoch.graph is None and vs._retired is first
+    assert first.graph is old_graph and first.corpus is not None
     # 5 rows over a ~500-row corpus is under insert_add_fraction, so
     # this search serves through the EXACT per-row graph_insert path
-    assert vs._pending_new is not None and vs._graph_corpus is not None
+    assert vs._pending is not None
     got2 = {
         r["query_id"]: r["neighbor_id"]
         for r in vs.search(emb.filter(F.col("vec_id") < 5), k=1)
@@ -966,8 +970,10 @@ def test_vector_search_hnsw_routes_to_graph_tier(spark, embeddings):
     # (dot exactly 1.0 beats every natural neighbor, and the twin is
     # the only exact match with self excluded)
     assert got2 == {q: q + 2_000_000 for q in range(5)}
-    assert vs._stale_graph is None and vs._graph is not None
-    assert vs._pending_new is None and vs._graph_corpus is None
+    assert vs._retired is None and vs._epoch.graph is not None
+    assert vs._pending is None
+    assert vs._epoch.graph_params["built"] == "insert"
+    assert vs._epoch.hier_meta.get("built") == "insert"
 
     # same add with the insert path disabled exercises the bulk warm
     # REFRESH branch and must serve the same answers
@@ -984,6 +990,10 @@ def test_vector_search_hnsw_routes_to_graph_tier(spark, embeddings):
         ).collect()
     }
     assert got3 == {q: q + 3_000_000 for q in range(5, 10)}
+    # the refreshed layer 0 carries the per-layer hierarchy repair
+    assert vs._retired is None and vs._pending is None
+    assert vs._epoch.graph_params["built"] == "refresh"
+    assert vs._epoch.hier_meta.get("built") == "insert"
 
 
 def test_opq_descriptor_parse_and_join_routing():
@@ -1040,7 +1050,7 @@ def test_vector_search_opq_descriptor_serves_planted_twins(
             "query_id", "neighbor_id", "similarity", "rank",
         }
         rows = got.collect()
-        assert vs._opq is not None and vs._opq[0] == kind
+        assert vs._epoch.opq is not None and vs._epoch.opq[0] == kind
         found = {
             r["query_id"]
             for r in rows
@@ -1048,11 +1058,11 @@ def test_vector_search_opq_descriptor_serves_planted_twins(
         }
         assert len(found) >= 16, (desc, sorted(found))
         # memo survives a second batch, dies on mutation
-        memo = vs._opq
+        memo = vs._epoch.opq
         vs.search(queries.limit(3), k=2).collect()
-        assert vs._opq is memo
+        assert vs._epoch.opq is memo
         vs.remove([0])
-        assert vs._opq is None
+        assert vs._epoch.opq is None
 
     # small corpora keep the exact shortcut regardless of descriptor
     vs = VectorSearch(64, "OPQ4,PQ4", spark=spark)
@@ -1068,7 +1078,7 @@ def test_vector_search_opq_descriptor_serves_planted_twins(
             include_self=False, right=corpus,
         ).collect()
     }
-    assert got == want and vs._opq is None
+    assert got == want and vs._epoch.opq is None
 
 
 def test_vector_search_saves_and_reloads_opq_artifact(
@@ -1088,7 +1098,7 @@ def test_vector_search_saves_and_reloads_opq_artifact(
     vs.exact_shortcut_rows = 0
     queries = emb.filter(F.col("vec_id") < 10)
     want = sorted(map(tuple, vs.search(queries, k=3).collect()))
-    assert vs._opq is not None and vs._opq[0] == "flat"
+    assert vs._epoch.opq is not None and vs._epoch.opq[0] == "flat"
     path = str(tmp_path / "opq_idx")
     vs.save(path)
 
@@ -1096,14 +1106,14 @@ def test_vector_search_saves_and_reloads_opq_artifact(
     vs2.load(path)
     vs2.exact_shortcut_rows = 0
     # model + codes adopted at load — no retrain before serving
-    assert vs2._opq is not None and vs2._opq[0] == "flat"
+    assert vs2._epoch.opq is not None and vs2._epoch.opq[0] == "flat"
     got = sorted(map(tuple, vs2.search(queries, k=3).collect()))
     assert got == want
 
     # descriptor-m mismatch refuses (codes are shaped by m)
     vs3 = VectorSearch(64, "OPQ8,PQ8", spark=spark)
     vs3.load(path)
-    assert vs3._opq is None
+    assert vs3._epoch.opq is None
 
     # a save from an instance without the OPQ memo drops the sibling
     vs4 = VectorSearch(64, "OPQ4,PQ4", spark=spark)
@@ -1111,15 +1121,15 @@ def test_vector_search_saves_and_reloads_opq_artifact(
     vs4.save(path)
     vs5 = VectorSearch(64, "OPQ4,PQ4", spark=spark)
     vs5.load(path)
-    assert vs5._opq is None
+    assert vs5._epoch.opq is None
 
 
 def test_vector_search_saves_and_reloads_graph_artifact(
     spark, embeddings, tmp_path
 ):
-    """save() at the HNSW tier persists the built graph beside the
-    vectors; load() adopts it when the row count matches, so the
-    reloaded index serves without an NN-Descent rebuild (the
+    """save() at the HNSW tier persists the built graph and hierarchy
+    beside the vectors; load() adopts them when the row count
+    matches, so the reloaded index serves without a rebuild (the
     reference persists the trained Faiss structure, not just raw
     vectors — app/vector_search.py:207-239)."""
     import math
@@ -1148,20 +1158,24 @@ def test_vector_search_saves_and_reloads_graph_artifact(
         (r["query_id"], r["neighbor_id"])
         for r in vs.search(queries, k=1).collect()
     }
-    assert vs._graph is not None
+    assert vs._epoch.graph is not None
     path = str(tmp_path / "vs_index")
     vs.save(path)
 
     vs2 = VectorSearch(dim, "HNSW32", spark=spark)
     vs2.load(path)
     vs2.exact_shortcut_rows = 0
-    # graph adopted at load time — no rebuild needed before serving
-    assert vs2._graph is not None and vs2._graph_entries is not None
+    # graph + hierarchy adopted at load time — no rebuild needed
+    # before serving
+    loaded = vs2._epoch
+    assert loaded.graph is not None and loaded.hier is not None
+    hier = loaded.hier
     after = {
         (r["query_id"], r["neighbor_id"])
         for r in vs2.search(queries, k=1).collect()
     }
     assert after == before
+    assert vs2._epoch is loaded and loaded.hier is hier
 
     # a vector-count mismatch refuses the stale artifact
     vs3 = VectorSearch(dim, "HNSW32", spark=spark)
@@ -1172,7 +1186,7 @@ def test_vector_search_saves_and_reloads_graph_artifact(
 
     shutil.copytree(path + "__graph", str(tmp_path / "vs_index2__graph"))
     vs3.load(str(tmp_path / "vs_index2"))
-    assert vs3._graph is None
+    assert vs3._epoch.graph is None
 
     # the saved meta records the ACTUAL build provenance, and a
     # reloaded index adopts it (so a re-save round-trips it)
@@ -1182,7 +1196,7 @@ def test_vector_search_saves_and_reloads_graph_artifact(
     with open(os.path.join(path + "__graph", "meta.json")) as fh:
         meta = json.load(fh)
     assert meta["built"] == "cold" and meta["k"] == 8
-    assert vs2._graph_params["built"] == "cold"
+    assert vs2._epoch.graph_params["built"] == "cold"
 
     # overwriting the SAME path with a different same-count corpus
     # (graph never built) must drop the old sibling graph — load()
@@ -1200,7 +1214,7 @@ def test_vector_search_saves_and_reloads_graph_artifact(
     assert not os.path.exists(path + "__graph")
     vs5 = VectorSearch(dim, "HNSW32", spark=spark)
     vs5.load(path)
-    assert vs5._graph is None
+    assert vs5._epoch.graph is None
 
 
 def test_compact_parquet_merges_small_files(spark, documents, tmp_path):
@@ -1929,12 +1943,11 @@ def test_stream_fuzzy_decontaminate_equals_batch(spark, tmp_path):
 
 
 def test_vector_search_hierarchy_dispatch_at_scale_threshold(spark, embeddings):
-    """At >= hierarchy_min_rows the HNSW tier serves by LAYERED
+    """From exact_shortcut_rows on, the HNSW tier serves by LAYERED
     DESCENT (ann.hnsw_topk_search over upper layers built on the
-    memoized layer-0 graph) instead of flat provisioned entries —
-    same exact top-1 on the clustered fixture, hierarchy memoized
-    across batches, and ANY mutation invalidates it (add() retires
-    it with the warm graph)."""
+    memoized layer-0 graph) — same exact top-1 on the clustered
+    fixture, hierarchy memoized across batches, and ANY mutation
+    invalidates it (add() retires it with the warm graph)."""
     import math
 
     from job_post_similarity_spark.index_api import VectorSearch
@@ -1957,15 +1970,13 @@ def test_vector_search_hierarchy_dispatch_at_scale_threshold(spark, embeddings):
     vs = VectorSearch(dim, "HNSW32", spark=spark)
     vs.add(emb)
     vs.exact_shortcut_rows = 0
-    vs.hierarchy_min_rows = 1  # force the at-scale dispatch
     qids = [i * (n // 10) for i in range(10)]
     queries = emb.filter(F.col("vec_id").isin(qids))
     got = {
         r["query_id"]: r["neighbor_id"]
         for r in vs.search(queries, k=1).collect()
     }
-    assert vs._hier is not None and vs._hier_meta is not None
-    assert vs._graph_entries is None  # flat provisioning never ran
+    assert vs._epoch.hier is not None and vs._epoch.hier_meta is not None
     exact = {
         r["query_id"]: r["neighbor_id"]
         for r in knn.knn_join(
@@ -1975,9 +1986,9 @@ def test_vector_search_hierarchy_dispatch_at_scale_threshold(spark, embeddings):
     }
     assert got == exact
 
-    hier_first = vs._hier
+    hier_first = vs._epoch.hier
     vs.search(queries, k=1).collect()
-    assert vs._hier is hier_first  # memoized across batches
+    assert vs._epoch.hier is hier_first  # memoized across batches
 
     # append RETIRES the hierarchy instead of dropping it: the next
     # search repairs it per-layer (ann.hnsw_hierarchy_insert — layer 0
@@ -1988,31 +1999,35 @@ def test_vector_search_hierarchy_dispatch_at_scale_threshold(spark, embeddings):
         (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
     )
     vs.add(twins)
-    assert vs._hier is None and vs._stale_hier is hier_first
+    assert vs._epoch.hier is None and vs._retired.hier is hier_first
     got2 = {
         r["query_id"]: r["neighbor_id"]
         for r in vs.search(
             emb.filter(F.col("vec_id") < 5), k=1
         ).collect()
     }
-    assert vs._hier is not None and vs._hier is not hier_first
-    assert vs._stale_hier is None
-    assert vs._hier_meta.get("built") == "insert"
+    assert vs._epoch.hier is not None and vs._epoch.hier is not hier_first
+    assert vs._retired is None
+    assert vs._epoch.hier_meta.get("built") == "insert"
     # each original's top-1 is now its bit-identical twin — the
     # repaired hierarchy serves the appended rows exactly
     assert got2 == {q: q + 10_000_000 for q in range(5)}
 
 
-def test_vector_search_snapshot_lifetime(spark):
+def test_vector_search_snapshot_lifetime(spark, tmp_path):
     """The descent tier's serving state is one broadcast HnswSnapshot
     per index epoch, released (Broadcast.unpersist, never destroy)
     only when the index mutates: a frame search() returned before an
     add or a remove still collects the same rows after it, and across
-    search → add → search → remove → search the JVM's persisted RDD
-    set never grows past what the first search left — no serving
-    table is localCheckpointed per epoch. Counted after a forced
-    Python + JVM GC, so only relations something still holds are
-    counted, not builder intermediates awaiting the ContextCleaner."""
+    search → add → add → search → remove → search the JVM's persisted
+    RDD set never grows past what the first search left — no serving
+    table is localCheckpointed per epoch. The second add, with no
+    search between, keeps the first retired epoch as the warm seed,
+    and the insert path serves both batches' planted twins. A load
+    releases the epoch it replaces and serves the saved rows.
+    Counted after a forced Python + JVM GC, so only relations
+    something still holds are counted, not builder intermediates
+    awaiting the ContextCleaner."""
     import gc
     import time
 
@@ -2050,7 +2065,6 @@ def test_vector_search_snapshot_lifetime(spark):
 
     vs = VectorSearch(16, "HNSW32", spark=spark)
     vs.exact_shortcut_rows = 0
-    vs.hierarchy_min_rows = 0
     vs.add(frame(range(240), v))
     queries = frame(range(1000, 1012), v[::20] + 0.01)
     frames, answers = [], []
@@ -2059,7 +2073,7 @@ def test_vector_search_snapshot_lifetime(spark):
         out = vs.search(queries, k=3)
         answers.append(out.collect())
         frames.append(out)
-        assert isinstance(vs._serving_state, HnswSnapshot)
+        assert isinstance(vs._epoch.serving, HnswSnapshot)
         assert len(answers[-1]) == 12 * 3
 
     def old_frames_still_collect():
@@ -2069,16 +2083,52 @@ def test_vector_search_snapshot_lifetime(spark):
     before = persisted()  # whatever earlier tests still hold
     search()
     first = len(persisted() - before)
-    vs.add(frame(range(500, 510), v[:10] * 0.99))
+    seed = vs._epoch
+    vs.add(frame(range(500, 510), v[:10]))
     old_frames_still_collect()
+    # a second add before any search keeps the first retired epoch
+    # (ADVICE r10): it still matches the corpus the repair starts from
+    vs.add(frame(range(600, 605), v[40:45]))
+    assert vs._retired is seed and seed.graph is not None
+    assert seed.serving is None  # retiring released the snapshot
     search()
     assert len(persisted() - before) <= first
+    assert vs._retired is None and vs._pending is None
+    assert vs._epoch.graph_params["built"] == "insert"
+    # each batch's rows are bit-identical twins of corpus members:
+    # with self excluded, a member's top-1 is its twin (dot 1.0)
+    members = [*range(10), *range(40, 45)]
+    top1 = {
+        r["query_id"]: r["neighbor_id"]
+        for r in vs.search(frame(members, v[members]), k=1).collect()
+    }
+    assert top1 == {
+        **{i: 500 + i for i in range(10)},
+        **{40 + j: 600 + j for j in range(5)},
+    }
     vs.remove([0, 1, 2, 500])
     old_frames_still_collect()
     search()
     assert len(persisted() - before) <= first
     assert answers[2] != answers[0]  # the removed ids left the index
     assert not {r["neighbor_id"] for r in answers[2]} & {0, 1, 2, 500}
+
+    # save → load: the replaced epoch is released (save() cached its
+    # navigation membership, which must not outlive it) and the
+    # loaded index serves the same rows
+    replaced = vs._epoch
+    before_save = persisted()
+    vs.save(str(tmp_path / "idx"))
+    cached_by_save = persisted() - before_save
+    assert cached_by_save  # the membership save() built for the artifact
+    vs.load(str(tmp_path / "idx"))
+    assert vs._epoch is not replaced
+    assert (replaced.graph, replaced.hier, replaced.nav, replaced.serving) == (
+        None, None, None, None,
+    )
+    search()
+    assert sorted(map(tuple, answers[3])) == sorted(map(tuple, answers[2]))
+    assert not cached_by_save & persisted()
 
 
 def test_vector_search_cold_search_is_one_collect(spark, tmp_path, monkeypatch):
@@ -2113,7 +2163,6 @@ def test_vector_search_cold_search_is_one_collect(spark, tmp_path, monkeypatch):
     def index():
         vs = VectorSearch(16, "HNSW32", spark=spark)
         vs.exact_shortcut_rows = 0
-        vs.hierarchy_min_rows = 0
         vs.add(corpus)
         return vs
 
@@ -2164,10 +2213,9 @@ def test_vector_search_saves_and_reloads_hierarchy_artifact(
     vs = VectorSearch(dim, "HNSW32", spark=spark)
     vs.add(embeddings)
     vs.exact_shortcut_rows = 0
-    vs.hierarchy_min_rows = 1
     queries = embeddings.filter(F.col("vec_id") < 5)
     want = sorted(map(tuple, vs.search(queries, k=2).collect()))
-    assert vs._hier is not None
+    assert vs._epoch.hier is not None
 
     path = str(tmp_path / "idx")
     vs.save(path)
@@ -2175,11 +2223,10 @@ def test_vector_search_saves_and_reloads_hierarchy_artifact(
     vs2 = VectorSearch(dim, "HNSW32", spark=spark)
     vs2.load(path)
     vs2.exact_shortcut_rows = 0
-    vs2.hierarchy_min_rows = 1
-    assert vs2._hier is not None and vs2._hier_meta is not None
+    assert vs2._epoch.hier is not None and vs2._epoch.hier_meta is not None
     # the per-layer nav membership rides the artifact too — the
     # reloaded index serves without md5-rescanning the corpus
-    assert vs2._nav is not None
+    assert vs2._epoch.nav is not None
     got = sorted(map(tuple, vs2.search(queries, k=2).collect()))
     assert got == want
 
@@ -2188,7 +2235,7 @@ def test_vector_search_saves_and_reloads_hierarchy_artifact(
     vs_m4 = VectorSearch(dim, "HNSW32", spark=spark)
     vs_m4._HIER_KNOBS = {**VectorSearch._HIER_KNOBS, "m": 4}
     vs_m4.load(path)
-    assert vs_m4._hier is None and vs_m4._nav is None
+    assert vs_m4._epoch.hier is None and vs_m4._epoch.nav is None
 
     # a save from an instance WITHOUT a built hierarchy removes the
     # stale sibling (same lifecycle rule as the flat graph artifact)
@@ -2197,4 +2244,4 @@ def test_vector_search_saves_and_reloads_hierarchy_artifact(
     vs3.save(path)
     vs4 = VectorSearch(dim, "HNSW32", spark=spark)
     vs4.load(path)
-    assert vs4._hier is None
+    assert vs4._epoch.hier is None

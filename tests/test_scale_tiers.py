@@ -2305,7 +2305,7 @@ def test_rabitq_ivf_planted_twin_recall(spark):
     ix.exact_shortcut_rows = 1
     ix.add(df)
     out = ix.search(queries, k=2).collect()
-    assert len(ix._rabitq) == 3
+    assert len(ix._epoch.rabitq) == 3
     t1 = {r["query_id"]: r["neighbor_id"] for r in out if r["rank"] == 1}
     assert t1 == {i: i + 100000 for i in range(16)}
 
