@@ -37,7 +37,7 @@ from .operators import ann, knn
 from .schemas import require_embedding_dim
 
 #: corpora up to this many rows build the HNSW index in numpy from one
-#: corpus collect and serve the descent from one broadcast
+#: corpus collect and serve the descent from one driver-held
 #: ``HnswSnapshot`` (``ann.hnsw_serving_state``'s default cap)
 _SNAPSHOT_CAP = 100_000
 
@@ -82,9 +82,10 @@ class _Epoch:
         ``keep_warm`` (``add()`` retiring the epoch) keeps the graph,
         hierarchy and membership: they cover exactly the old corpus,
         which is what the next search's repair for the appended rows
-        reads. The snapshot's release is ``Broadcast.unpersist``, not
-        destroy: a frame an earlier ``search()`` returned still
-        collects."""
+        reads. The snapshot's release drops its arrays and
+        unpersists its broadcast, if a large batch made one, but
+        does not destroy it: a frame an earlier ``search()`` returned
+        still collects."""
         names = ["serving", "opq", "rabitq"]
         if not keep_warm:
             names += ["graph", "hier", "nav"]
@@ -216,10 +217,15 @@ class VectorSearch:
         NN-Descent rounds, which a cold build's NEW-flag pruning
         leaves byte-identical, so the edges equal the relational
         build's row for row (pinned by
-        ``test_local_hierarchy_build_equals_relational``), and every
-        batch is one scan over a broadcast ``HnswSnapshot``. Above the
-        cap the build and the descent are relational. Mutations still
-        repair relationally."""
+        ``test_local_hierarchy_build_equals_relational``). Batches
+        then serve from the ``HnswSnapshot`` arrays: one of at most
+        10k queries on the driver, when ``search`` is called (no Spark
+        job when the batch's plan folds to a local relation, e.g.
+        ``createDataFrame`` from pandas; one single-task job
+        otherwise; the result is a local ``createDataFrame`` view), a
+        larger one in one scan over a broadcast of the arrays. Above the cap the build and the
+        descent are relational. Mutations still repair
+        relationally."""
         ep = self._epoch
         assert ep is not None, "index is empty — add() first"
         d = self.index_description.strip().lower()
@@ -367,10 +373,10 @@ class VectorSearch:
                         ep.corpus, self.id_col, self.vec_col,
                         m=knobs["m"], top_layer=ep.hier_meta["top_layer"],
                     ).transform(cache_auto)
-                # within the broadcast cap: one HnswSnapshot, so every
-                # batch is a single scan; above it, relational tables
-                # only for the upper layers serving will read (ADVICE
-                # r10 medium)
+                # within the broadcast cap: one HnswSnapshot, which
+                # serves a batch with no plan over the index; above
+                # it, relational tables only for the upper layers
+                # serving will read (ADVICE r10 medium)
                 ep.serving = ann.hnsw_serving_state(
                     ep.corpus, ep.hier, ep.hier_meta["top_layer"],
                     id_col=self.id_col, vec_col=self.vec_col,
@@ -400,21 +406,27 @@ class VectorSearch:
     def _descent_in_cap(self) -> bool:
         """The corpus is within the snapshot's broadcast cap: its cold
         HNSW build runs in numpy and its descent serves from one
-        broadcast ``HnswSnapshot``."""
+        driver-held ``HnswSnapshot``."""
         return self.ntotal <= _SNAPSHOT_CAP
 
     def _hold(self, df: DataFrame, checkpoint: bool = False) -> DataFrame:
         """Keep an index relation for the current epoch. On the
         in-cap descent tier it becomes a driver-held ``createDataFrame``
-        view of its one collect (``ann.driver_view``): nothing stays
-        persisted, and the snapshot reads it back without recomputing
-        the build. Otherwise it is persisted, or localCheckpointed when
+        view of its one collect (``ann.driver_view``) and ``df`` is
+        released (``ann.release_relation``): nothing stays persisted,
+        and the snapshot reads it back without recomputing the build.
+        Otherwise it is persisted, or localCheckpointed when
         ``checkpoint`` (a hierarchy is read several times per
         maintenance or state-build call, and a cached-but-lineaged
         relation re-pays Catalyst optimization of the whole build plan
         per reference)."""
         if self._descent_in_cap():
-            return ann.driver_view(df)
+            view = ann.driver_view(df)
+            # a checkpointed build output is freed now, not when a
+            # later GC finds it unreachable: the listener bus holds
+            # the last query plan that read it until it catches up
+            ann.release_relation(df)
+            return view
         return df.localCheckpoint() if checkpoint else df.transform(cache_auto)
 
     def _build_hierarchy(self, ep: _Epoch) -> None:

@@ -886,6 +886,49 @@ def test_vector_search_class_api(spark, embeddings, tmp_path):
     assert vs2.ntotal == n - 2
 
 
+def test_vector_search_hnsw_search_arrays(spark):
+    """The (distances, ids) array shim on the HNSW descent tier: its
+    ids and L2 distances, sqrt(2 - 2·similarity), are search()'s rows
+    for the same batch, and each self-query finds its own corpus row
+    at rank 1 with distance ~0."""
+    import numpy as np
+    import pandas as pd
+
+    from job_post_similarity_spark.index_api import VectorSearch
+
+    rng = np.random.default_rng(11)
+    centers = rng.normal(size=(6, 16))
+    v = centers[np.arange(240) % 6] + 0.3 * rng.normal(size=(240, 16))
+    v /= np.linalg.norm(v, axis=1, keepdims=True)
+    vs = VectorSearch(16, "HNSW32", spark=spark)
+    vs.exact_shortcut_rows = 0
+    vs.add(
+        spark.createDataFrame(
+            pd.DataFrame(
+                {"vec_id": range(240), "embedding": [list(map(float, x)) for x in v]}
+            ),
+            "vec_id bigint, embedding array<double>",
+        )
+    )
+    picks = list(range(0, 240, 24))
+    q = v[picks]
+    dist, ids = vs.search_arrays(q, k=4)
+    assert dist.shape == ids.shape == (len(picks), 4)
+    assert list(ids[:, 0]) == picks
+    assert (dist[:, 0] < 5e-3).all()
+
+    # search() over the batch search_arrays builds (ids -n..-1)
+    qdf = spark.createDataFrame(
+        pd.DataFrame({"vec_id": range(-len(q), 0), "embedding": list(q)})
+    )
+    rows = vs.search(qdf, k=4).collect()
+    assert len(rows) == dist.size
+    for r in rows:
+        at = (r["query_id"] + len(q), r["rank"] - 1)
+        assert ids[at] == r["neighbor_id"]
+        assert dist[at] == np.sqrt(max(0.0, 2.0 - 2.0 * r["similarity"]))
+
+
 def test_vector_search_hnsw_routes_to_graph_tier(spark, embeddings):
     """index_description='HNSW*' dispatches VectorSearch.search to the
     layered-descent tier over the NN-Descent graph (reference switch
@@ -2015,9 +2058,10 @@ def test_vector_search_hierarchy_dispatch_at_scale_threshold(spark, embeddings):
 
 
 def test_vector_search_snapshot_lifetime(spark, tmp_path):
-    """The descent tier's serving state is one broadcast HnswSnapshot
-    per index epoch, released (Broadcast.unpersist, never destroy)
-    only when the index mutates: a frame search() returned before an
+    """The descent tier's serving state is one driver-held HnswSnapshot
+    per index epoch, released (arrays dropped; a broadcast, if one
+    was made, unpersisted, never destroyed) only when the index
+    mutates: a frame search() returned before an
     add or a remove still collects the same rows after it, and across
     search → add → add → search → remove → search the JVM's persisted
     RDD set never grows past what the first search left — no serving
@@ -2133,15 +2177,23 @@ def test_vector_search_snapshot_lifetime(spark, tmp_path):
 
 def test_vector_search_cold_search_is_one_collect(spark, tmp_path, monkeypatch):
     """Within the broadcast cap the first descent-tier search builds the
-    hierarchy in numpy from one corpus collect: at most 4 Spark jobs
-    (row count, corpus collect, the query batch's size probe and scan),
-    nothing left persisted, and ``save()`` writes ``__graph``/``__hier``
-    artifacts row-equal to those of the relational build."""
+    hierarchy in numpy from one corpus collect: at most 3 Spark jobs
+    (row count, corpus collect, the query batch's collect), nothing
+    left persisted, and ``save()`` writes ``__graph``/``__hier``
+    artifacts row-equal to those of the relational build. A warm
+    search of a batch within the driver cut, built by
+    ``createDataFrame`` from pandas, runs no Spark job at all, nor
+    does collecting its result; the snapshot makes its one broadcast
+    on the first batch over the cut, reuses it for the next, and the
+    index's next mutation unpersists it. A batch served by that scan
+    equals, row for row and in order, the same batch on the
+    driver."""
     import numpy as np
     import pandas as pd
 
     from job_post_similarity_spark import index_api
     from job_post_similarity_spark.index_api import VectorSearch
+    from job_post_similarity_spark.operators import ann
 
     sc = spark.sparkContext
     rng = np.random.default_rng(5)
@@ -2174,19 +2226,49 @@ def test_vector_search_cold_search_is_one_collect(spark, tmp_path, monkeypatch):
             for a in ("graph", "hier")
         ]
 
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+
     vs = index()
-    group = "test-cold-descent-search"
     persisted = set(sc._jsc.getPersistentRDDs().keySet())
-    sc.setJobGroup(group, "first descent-tier search")
-    try:
-        rows = vs.search(queries, k=3).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 4, jobs
+    made = []
+    real_broadcast = sc.broadcast
+
+    def counting_broadcast(value):
+        bc = real_broadcast(value)
+        unpersist = bc.unpersist
+
+        def recorded_unpersist(*args, **kwargs):
+            made.append("unpersisted")
+            return unpersist(*args, **kwargs)
+
+        bc.unpersist = recorded_unpersist
+        made.append(bc)
+        return bc
+
+    monkeypatch.setattr(sc, "broadcast", counting_broadcast)
+    rows, jobs = jobs_of(
+        "test-cold-descent-search", lambda: vs.search(queries, k=3).collect()
+    )
+    assert 0 < len(jobs) <= 3, jobs
     assert set(sc._jsc.getPersistentRDDs().keySet()) == persisted
     assert len(rows) == 30
+
+    # warm: a createDataFrame batch within the cut is served on the
+    # driver, and collecting the local result runs no job either
+    warm, jobs = jobs_of(
+        "test-warm-descent-search", lambda: vs.search(queries, k=3).collect()
+    )
+    assert jobs == [] and warm == rows
+    assert made == []  # no broadcast yet
+    snap = vs._epoch.serving
+    monkeypatch.undo()
 
     # the relational tier: the same index with the in-cap build off
     monkeypatch.setattr(index_api, "_SNAPSHOT_CAP", -1)
@@ -2198,6 +2280,30 @@ def test_vector_search_cold_search_is_one_collect(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     assert saved(vs, "local") == want
     assert all(want)
+
+    # a 1001-query batch is within the driver cut; with the cut
+    # patched below it, the same batch takes one scan over one
+    # broadcast, made on the first such batch and reused by the next,
+    # and answers row for row as on the driver. Its rows arrive out of
+    # id order, so only a total sort puts the scan's output in order.
+    monkeypatch.setattr(sc, "broadcast", counting_broadcast)
+    shuffled = np.random.default_rng(7).permutation(1001)
+    big = frame(
+        np.array([*range(1000, 1010), *range(5000, 5991)])[shuffled],
+        np.concatenate([v[::30] + 0.01, v[np.arange(991) % 300] + 0.02])[
+            shuffled
+        ],
+    )
+    on_driver = vs.search(big, k=3).collect()
+    assert len(on_driver) == 1001 * 3 and made == []
+    assert [r for r in on_driver if r["query_id"] < 1010] == rows
+    monkeypatch.setattr(ann, "_DRIVER_BATCH", 100)
+    for _ in range(2):
+        assert vs.search(big, k=3).collect() == on_driver
+    assert vs._epoch.serving is snap
+    assert len(made) == 1 and snap._bc is made[0]
+    vs.remove([0])  # a mutation releases the epoch's snapshot
+    assert made[1:] == ["unpersisted"] and snap.arrays is None
 
 
 def test_vector_search_saves_and_reloads_hierarchy_artifact(

@@ -2422,7 +2422,7 @@ def test_hnsw_serving_state_sentinel_layer_sizes(spark):
     )
     assert 1 in tabs and 0 not in tabs
     assert tabs[1].count() > 0
-    # (b') the whole corpus within the cap: one broadcast snapshot
+    # (b') the whole corpus within the cap: one HnswSnapshot
     # serving every layer instead of per-layer tables
     snap = hnsw_serving_state(
         df, hier, top, layer_sizes={1: 21}, size_cap=20,
@@ -2478,20 +2478,22 @@ def _typed_vec_df(spark, ids, vecs, id_t="bigint", el_t="double"):
     )
 
 
-def test_hnsw_snapshot_tier_equals_relational(spark):
-    """hnsw_topk_search through the broadcast HnswSnapshot (one scan
-    per batch) returns the relational reference tier's rows in the
-    same order, byte for byte: fitted seed, forced walks from the
-    entry membership (start_budget=1), a fitted seed plus forced
-    walks, corpus-member queries (self-exclusion) and external ids,
-    f64 and f32 vectors, bigint and string ids, k one below beam, a
-    batch over the 1000-query single-partition sort (the orderBy
-    path), an empty batch (same schema, id types kept), an upper
+def test_hnsw_snapshot_tier_equals_relational(spark, monkeypatch):
+    """hnsw_topk_search through the HnswSnapshot returns the
+    relational reference tier's rows in the same order, byte for byte:
+    fitted seed, forced walks from the entry membership
+    (start_budget=1), a fitted seed plus forced walks, corpus-member
+    queries (self-exclusion) and external ids, f64 and f32 vectors,
+    bigint and string ids, k one below beam, a 1100-query batch
+    (several seed blocks) served on the driver and, with the driver
+    cut patched below it, by the broadcast scan + orderBy, an empty
+    batch (same schema, id types kept), an upper
     layer with edges to non-members (the walk must not step off its
     layer), and an empty entry layer (the smallest-id backstop seeds
     alone)."""
     import numpy as np
 
+    from job_post_similarity_spark.operators import ann
     from job_post_similarity_spark.operators.ann import (
         HnswSnapshot,
         hnsw_hierarchy_build,
@@ -2556,7 +2558,8 @@ def test_hnsw_snapshot_tier_equals_relational(spark):
             rows = same(queries, df, snap, {**base, **extra})
             assert len(rows) == 12 * extra.get("k", 3)
         if id_t == "bigint":
-            # > 1000 queries: the orderBy output path
+            # a batch of several seed blocks: on the driver, then
+            # over the (patched) cut through the scan + orderBy
             big = _typed_vec_df(
                 spark,
                 range(20_000, 21_100),
@@ -2564,6 +2567,9 @@ def test_hnsw_snapshot_tier_equals_relational(spark):
                 + 0.02 * rng.normal(size=(1100, 16)),
             )
             assert len(same(big, df, snap, base)) == 1100 * 3
+            monkeypatch.setattr(ann, "_DRIVER_BATCH", 100)
+            assert len(same(big, df, snap, base)) == 1100 * 3
+            monkeypatch.undo()
             # empty batch: same schema, no rows
             assert same(external.limit(0), df, snap, base) == []
             # walked layer 2 gets edges from every member to ten
@@ -2613,14 +2619,17 @@ def test_hnsw_snapshot_tier_equals_relational(spark):
     snap.release()
 
 
-def test_hnsw_snapshot_dirty_query_raises_in_scan(spark):
+def test_hnsw_snapshot_dirty_query_raises_in_scan(spark, monkeypatch):
     """A query row with a null vector, a null element or the wrong
-    width fails the snapshot scan itself with a ValueError naming the
-    query id — no probe or validation job of its own (one job, the
-    scan). The corpus gets the same checks (and a duplicate-id check)
-    when the snapshot is built."""
+    width raises a ValueError naming the query id: from
+    hnsw_topk_search itself for a batch served on the driver, whose
+    one job is the batch's collect (a parallelized batch: one task,
+    not a limit's growing scans), and from the scan for a batch over
+    the driver cut. The corpus gets the same checks (and a
+    duplicate-id check) when the snapshot is built."""
     from pyspark.errors import PythonException
 
+    from job_post_similarity_spark.operators import ann
     from job_post_similarity_spark.operators.ann import (
         hnsw_hierarchy_build,
         hnsw_serving_state,
@@ -2634,32 +2643,43 @@ def test_hnsw_snapshot_dirty_query_raises_in_scan(spark):
     snap = hnsw_serving_state(df, hier, meta["top_layer"], corpus_rows=60)
     good = [float(x) for x in vecs[3]]
     sc = spark.sparkContext
+    schema = "vec_id bigint, embedding array<double>"
+
+    def serve(queries, query_rows):
+        return hnsw_topk_search(
+            queries, df, k=2, hierarchy=hier,
+            top_layer=meta["top_layer"],
+            layer_sizes=meta["layer_sizes"], query_rows=query_rows,
+            serving_state=snap,
+        )
+
     for bad_id, bad_vec, what in (
         (7, None, "a null vector"),
         (8, good[:3], "3 dims, the index has 8"),
         (9, good[:5] + [None] + good[6:], "a null element"),
     ):
-        queries = spark.createDataFrame(
-            [(100, good), (bad_id, bad_vec)],
-            "vec_id bigint, embedding array<double>",
-        )
+        queries = spark.createDataFrame([(100, good), (bad_id, bad_vec)], schema)
         group = f"dirty_query_{bad_id}"
-        sc.setJobGroup(group, "dirty query scan")
+        sc.setJobGroup(group, "dirty query on the driver")
         try:
-            with pytest.raises(PythonException) as err:
-                hnsw_topk_search(
-                    queries, df, k=2, hierarchy=hier,
-                    top_layer=meta["top_layer"],
-                    layer_sizes=meta["layer_sizes"], query_rows=2,
-                    serving_state=snap,
-                ).collect()
+            with pytest.raises(ValueError) as err:
+                serve(queries, 2)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
-        assert f"ValueError: hnsw_topk_search: query id {bad_id} has {what}" in str(
-            err.value
-        )
+        assert str(err.value) == f"hnsw_topk_search: query id {bad_id} has {what}"
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    # over the driver cut (patched low) the batch is scanned: the same
+    # check fails the scan's task
+    monkeypatch.setattr(ann, "_DRIVER_BATCH", 100)
+    big = spark.createDataFrame(
+        [(1000 + i, good) for i in range(1000)] + [(9, good[:3])], schema
+    )
+    with pytest.raises(PythonException) as err:
+        serve(big, None).collect()
+    assert "ValueError: hnsw_topk_search: query id 9 has 3 dims, the index has 8" in str(
+        err.value
+    )
     snap.release()
     # the same checks on the corpus, at snapshot build, name the id
     for rows, what in (
