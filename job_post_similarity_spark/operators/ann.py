@@ -752,15 +752,32 @@ def srp_lsh_similarity_join(
       ``verify='broadcast'`` (raises past it). The driver collects the
       matrix (the one eager job), sorts it by id, computes the
       ``(n, bands)`` buckets once and sorts each band by (bucket, row).
-      Matrix and band index ship in ONE broadcast; one ``mapInPandas``
-      over strided row blocks expands, per row and band, the larger-id
-      rows in its bucket and keeps a pair only in the FIRST band where
-      the two rows collide — the candidate dedup needs no shuffle.
-      Pairs are scored in bounded chunks; only those scoring at least
-      ``threshold - 1e-4`` cross Arrow, and the JVM rounds, filters and
-      sorts. Nothing is persisted. The only shuffle is that final sort,
-      and a hot bucket spreads over every task instead of one join
-      task. Per-task memory is the broadcast plus bounded chunks.
+      One kernel (``_srp_scored_pairs``) expands, per row and band,
+      the larger-id rows in its bucket and keeps a pair only in the
+      FIRST band where the two rows collide — the candidate dedup
+      needs no shuffle. Pairs are scored in bounded chunks; only those
+      scoring at least ``threshold - 1e-4`` leave it, and the JVM
+      rounds, filters and sorts. Nothing is persisted. Rows with a
+      null id are dropped before the collect (the relational tier
+      never matches them). A null or ragged vector raises
+      ``ValueError`` naming the smallest offending id at the collect,
+      under ``'auto'`` too; a null element scores NaN and pairs with
+      nothing.
+
+      - Driver path: an index of at most ``_SRP_DRIVER_EXPANSIONS``
+        band expansions (``sum(end - nxt)``, counted before any
+        scoring; a 200-post dedup batch at 8 × 16 holds 3.5-4.5
+        thousand) runs the kernel on the driver and hands the survivors
+        to the JVM as one local relation, sorted in a single
+        partition: the whole join is the matrix collect plus the one
+        job that consumes the result, with no broadcast, no Python
+        worker and no shuffle.
+      - Scan: a larger index ships with the matrix in ONE broadcast;
+        one ``mapInPandas`` over strided row blocks runs the kernel
+        in every task, and the JVM sorts by ``orderBy`` (a range
+        sample plus one shuffle). A hot bucket spreads over every
+        task instead of one join task. Per-task memory is the
+        broadcast plus bounded chunks.
     - Relational: past the budget under ``'auto'``, or
       ``verify='relational'``; fully lazy, unbounded corpus size.
       ``srp_band_signatures`` emits (id, band, bucket) map-side, the
@@ -769,20 +786,27 @@ def srp_lsh_similarity_join(
       two hash joins re-attach the vectors and an Arrow-batched dot
       scores them. Tune bits_per_band ≈ log2(n/target_bucket_size),
       bands to hit recall at the operating threshold. The signature
-      table is persisted and outlives the call (not released).
+      table is persisted and outlives the call (not released). Dirty
+      vectors are not checked up front here: a null or ragged one
+      fails the signature scan when the result runs, with numpy's
+      error inside a ``PythonException``.
 
     ``bits_per_band='auto'`` solves bits/bands with
     ``srp_parameter_plan`` from the corpus size: ``corpus_rows`` if
     given, else the collected matrix's row count (broadcast tier) or
     one count job (relational tier).
     """
-    from .knn import _collect_matrix
+    from .knn import _collect_matrix, _OverBroadcastBudget
 
     ids = mat = None
     if verify in ("auto", "broadcast"):
+        # a null id joins nothing in the relational tier: drop it here
+        # too, or it pairs with every twin and turns bigint ids into f64
         try:
-            ids, mat = _collect_matrix(df, id_col, vec_col)
-        except ValueError:
+            ids, mat = _collect_matrix(
+                df.filter(F.col(id_col).isNotNull()), id_col, vec_col
+            )
+        except _OverBroadcastBudget:
             if verify == "broadcast":
                 raise
     if bits_per_band == "auto":
@@ -845,6 +869,20 @@ _SRP_ROW_BLOCK = 4096
 _SRP_PAIR_CHUNK = 1 << 17
 _SRP_SCORE_CHUNK = 8192
 
+#: band indexes with at most this many band expansions (candidate
+#: pairs before the first-band dedup) are scored on the driver; larger
+#: ones in the broadcast scan, which runs the kernel twice (the
+#: ``orderBy`` range sample, then the sort's shuffle) but in every
+#: task. Timed on a 4-vCPU host, ``.collect()`` of the fused tier on
+#: clustered 384-d rows at 8 bits x 16 bands, threshold 0.9, median of
+#: 3, driver vs scan: local[4] 0.9 vs 1.5 s at 0.19 M expansions, 3.4
+#: vs 3.2 s at 1.2 M, 6.6 vs 5.1 s at 2.3 M, 12.5 vs 9.0 s at 4.8 M;
+#: local[2] 0.8 vs 1.3 s at 0.19 M, 12.2 vs 13.2 s at 4.7 M, and the
+#: driver still ahead at 19 M (46.8 vs 55.3 s, 2 runs). The cut sits
+#: at the local[4] parity: going from 2 to 4 cores moved the parity
+#: from past 19 M down to ~1 M, so more executors favour the scan
+_SRP_DRIVER_EXPANSIONS = 1_000_000
+
 
 def _srp_fused_pair_join(
     df: DataFrame,
@@ -857,8 +895,11 @@ def _srp_fused_pair_join(
     seed: int,
 ) -> DataFrame:
     """Broadcast tier of ``srp_lsh_similarity_join`` over the collected
-    ``(ids, mat)``: band index built once on the driver, candidate
-    expansion + first-band dedup + verify in one mapInPandas scan."""
+    ``(ids, mat)``: band index built once on the driver, then candidate
+    expansion + first-band dedup + verify by ``_srp_scored_pairs``,
+    on the driver into a local relation when the index holds at most
+    ``_SRP_DRIVER_EXPANSIONS`` band expansions, else in one
+    mapInPandas scan over a broadcast of the index."""
     import numpy as np
     import pandas as pd
 
@@ -898,47 +939,81 @@ def _srp_fused_pair_join(
         perm[b] = p
         nxt[b, p] = pos
         end[b, p] = np.repeat(np.r_[starts[1:], n], np.diff(np.r_[starts, n]))
+    index = (sid, m, perm, nxt, end)
+    # margin pre-filter: only pairs that can survive the JVM
+    # round-then-threshold filter leave the kernel; rounding stays JVM
+    # HALF_UP
+    lo = threshold - 1e-4
+    if int((end - nxt).sum()) <= _SRP_DRIVER_EXPANSIONS:
+        block = _SRP_ROW_BLOCK
+        frames = list(_srp_scored_pairs(
+            (np.arange(r0, min(n, r0 + block)) for r0 in range(0, n, block)),
+            index, lo, _SRP_PAIR_CHUNK, _SRP_SCORE_CHUNK,
+        ))
+        pdf = (
+            pd.concat(frames, ignore_index=True) if frames
+            else pd.DataFrame(
+                {"id1": sid[:0], "id2": sid[:0], "similarity": np.empty(0)}
+            )
+        )
+        return _round_filter_sort_pairs(
+            spark.createDataFrame(pdf, out_schema), threshold, local=True
+        )
     sc = spark.sparkContext
-    bc = sc.broadcast((sid, m, perm, nxt, end))
+    bc = sc.broadcast(index)
     tasks = sc.defaultParallelism
     # read on the driver: the closure ships the values
     step = tasks * _SRP_ROW_BLOCK
     pair_chunk, score_chunk = _SRP_PAIR_CHUNK, _SRP_SCORE_CHUNK
-    # margin pre-filter: only pairs that can survive the JVM
-    # round-then-threshold filter cross Arrow; rounding stays JVM HALF_UP
-    lo = threshold - 1e-4
 
     def op(batches):
-        sid, m, perm, nxt, end = bc.value
+        index = bc.value
         for pdf in batches:
             for t in pdf["id"].to_numpy():
                 # strided blocks: partners are the LARGER ids, so a
                 # contiguous block of small ids would hold most pairs
-                for r0 in range(int(t), n, step):
-                    rows = np.arange(r0, min(n, r0 + step), tasks)
-                    for i, j in _srp_first_band_pairs(
-                        rows, perm, nxt, end, pair_chunk
-                    ):
-                        for c in range(0, len(i), score_chunk):
-                            a = i[c : c + score_chunk]
-                            z = j[c : c + score_chunk]
-                            sims = np.einsum(
-                                "ij,ij->i",
-                                m[a].astype(np.float64, copy=False),
-                                m[z].astype(np.float64, copy=False),
-                            )
-                            keep = sims >= lo
-                            if keep.any():
-                                yield pd.DataFrame({
-                                    "id1": sid[a[keep]],
-                                    "id2": sid[z[keep]],
-                                    "similarity": sims[keep],
-                                })
+                yield from _srp_scored_pairs(
+                    (
+                        np.arange(r0, min(n, r0 + step), tasks)
+                        for r0 in range(int(t), n, step)
+                    ),
+                    index, lo, pair_chunk, score_chunk,
+                )
 
     scored = spark.range(tasks, numPartitions=tasks).mapInPandas(
         op, out_schema
     )
     return _round_filter_sort_pairs(scored, threshold)
+
+
+def _srp_scored_pairs(blocks, index, lo, pair_chunk, score_chunk):
+    """The fused SRP kernel, run by the driver path and by each scan
+    task alike: for every row-index array in ``blocks``, expand its
+    first-band candidate pairs from the band ``index`` ``(sid, m, perm,
+    nxt, end)``, score them by ``einsum`` in chunks of ``score_chunk``
+    and yield one ``(id1, id2, similarity)`` frame per chunk holding
+    the pairs that score at least ``lo``."""
+    import numpy as np
+    import pandas as pd
+
+    sid, m, perm, nxt, end = index
+    for rows in blocks:
+        for i, j in _srp_first_band_pairs(rows, perm, nxt, end, pair_chunk):
+            for c in range(0, len(i), score_chunk):
+                a = i[c : c + score_chunk]
+                z = j[c : c + score_chunk]
+                sims = np.einsum(
+                    "ij,ij->i",
+                    m[a].astype(np.float64, copy=False),
+                    m[z].astype(np.float64, copy=False),
+                )
+                keep = sims >= lo
+                if keep.any():
+                    yield pd.DataFrame({
+                        "id1": sid[a[keep]],
+                        "id2": sid[z[keep]],
+                        "similarity": sims[keep],
+                    })
 
 
 def _srp_first_band_pairs(rows, perm, nxt, end, cap):
@@ -982,16 +1057,20 @@ def _srp_first_band_pairs(rows, perm, nxt, end, cap):
         yield i[keep], j[keep]
 
 
-def _round_filter_sort_pairs(scored: DataFrame, threshold: float) -> DataFrame:
+def _round_filter_sort_pairs(
+    scored: DataFrame, threshold: float, local: bool = False
+) -> DataFrame:
     """JVM tail shared by every pair-join verify: HALF_UP round to 4
-    places, threshold filter, deterministic order."""
-    return (
-        scored.select(
-            "id1", "id2", F.round(F.col("similarity"), 4).alias("similarity")
-        )
-        .filter(F.col("similarity") >= threshold)
-        .orderBy(F.desc("similarity"), F.asc("id1"), F.asc("id2"))
-    )
+    places, threshold filter, deterministic order. ``local``: ``scored``
+    is a driver-built local relation, sorted in one partition, which
+    takes no range-sample job."""
+    out = scored.select(
+        "id1", "id2", F.round(F.col("similarity"), 4).alias("similarity")
+    ).filter(F.col("similarity") >= threshold)
+    order = (F.desc("similarity"), F.asc("id1"), F.asc("id2"))
+    if local:
+        return out.coalesce(1).sortWithinPartitions(*order)
+    return out.orderBy(*order)
 
 
 def _verify_pair_candidates(

@@ -48,6 +48,11 @@ _F64_CACHE_BYTES = 512 * 1024 * 1024
 _MAX_BROADCAST_ROWS = 1_000_000
 
 
+class _OverBroadcastBudget(ValueError):
+    """``_collect_matrix``'s side is past its row budget: the one
+    collect failure a caller with a relational tier falls back on."""
+
+
 def _collect_matrix(
     df: DataFrame, id_col: str, vec_col: str, max_rows: int = _MAX_BROADCAST_ROWS
 ):
@@ -63,14 +68,34 @@ def _collect_matrix(
     dtype = np.float32 if elem.simpleString() == "float" else np.float64
     pdf = df.select(id_col, vec_col).limit(max_rows + 1).toPandas()
     if len(pdf) > max_rows:
-        raise ValueError(
+        raise _OverBroadcastBudget(
             f"broadcast side exceeds {max_rows} rows — use knn_join_passes "
             "(split broadcast) or ann.auto_similarity_join / "
             "ann.srp_topk_search (relational ANN) instead"
         )
     ids = pdf[id_col].to_numpy()
-    mat = np.asarray(list(pdf[vec_col]), dtype=dtype)
+    try:
+        mat = np.asarray(list(pdf[vec_col]), dtype=dtype)
+    except ValueError:
+        mat = None
+    if mat is None or (mat.ndim != 2 and len(pdf)):
+        raise _dirty_vector_error(pdf, id_col, vec_col)
     return ids, mat
+
+
+def _dirty_vector_error(pdf: pd.DataFrame, id_col: str, vec_col: str):
+    """The ``ValueError`` for collected rows holding a null or ragged
+    vector. It names the smallest offending id; the expected width is
+    the smallest id's non-null vector's (the HNSW snapshot tier's
+    rule)."""
+    pdf = pdf.sort_values(id_col, kind="stable")
+    lens = [-1 if v is None else len(v) for v in pdf[vec_col]]
+    d = next((w for w in lens if w >= 0), 0)
+    k = next(k for k, w in enumerate(lens) if w != d)
+    return ValueError(
+        f"vector of id {pdf[id_col].tolist()[k]!r}: "
+        + ("null vector" if lens[k] < 0 else f"{lens[k]} dims, not {d}")
+    )
 
 
 def knn_join_expr(

@@ -355,44 +355,130 @@ def _srp_tier_cases(spark):
 
 def test_srp_verify_tiers_agree(spark, monkeypatch):
     """The broadcast tier (fused band index + first-band dedup + einsum
-    verify in one scan) must emit exactly the relational tier's rows,
-    in the same order, with the same round-4 similarities — on stress
-    and planner knobs, f32/f64, string ids, exact twins, a hot bucket,
-    one row, and (schema included) no rows. Some cases rerun with
-    tiny chunk bounds: chunking must never change a value."""
+    verify) must emit exactly the relational tier's rows, in the same
+    order, with the same round-4 similarities — on stress and planner
+    knobs, f32/f64, string ids, exact twins, a hot bucket, one row, and
+    (schema included) no rows. It runs on both of its paths: scored on
+    the driver (the default cut, which every case is under) and in the
+    broadcast scan (the cut patched to -1, so that the single row's
+    empty index scans too). Some cases rerun with tiny chunk bounds:
+    chunking must never change a value."""
     from job_post_similarity_spark.operators import ann
 
-    def both(df, kw):
-        fused = ann.srp_lsh_similarity_join(
+    def fused(df, kw):
+        return ann.srp_lsh_similarity_join(
             df, "vec_id", "embedding", verify="broadcast", **kw
         )
-        rel = ann.srp_lsh_similarity_join(
+
+    def scans(out):
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        return "MapInPandas" in plan
+
+    cases = _srp_tier_cases(spark)
+    want = {
+        label: [tuple(r) for r in ann.srp_lsh_similarity_join(
             df, "vec_id", "embedding", verify="relational", **kw
+        ).collect()]
+        for label, df, kw, _ in cases
+    }
+    assert sum(map(bool, want.values())) >= 7
+    empties = {
+        id_type: spark.createDataFrame(
+            [], f"vec_id {id_type}, embedding array<float>"
         )
-        return fused, rel
+        for id_type in ("bigint", "string")
+    }
+    for cut in (ann._SRP_DRIVER_EXPANSIONS, -1):
+        with monkeypatch.context() as mp:
+            mp.setattr(ann, "_SRP_DRIVER_EXPANSIONS", cut)
+            for label, df, kw, shrink in cases:
+                out = fused(df, kw)
+                assert scans(out) == (cut < 0), (label, cut)
+                assert [tuple(r) for r in out.collect()] == want[label], (
+                    label, cut,
+                )
+                if shrink:
+                    with monkeypatch.context() as small:
+                        for name, v in (("_SRP_HASH_ROWS", 33),
+                                        ("_SRP_ROW_BLOCK", 7),
+                                        ("_SRP_PAIR_CHUNK", 64),
+                                        ("_SRP_SCORE_CHUNK", 50)):
+                            small.setattr(ann, name, v)
+                        got = [tuple(r) for r in fused(df, kw).collect()]
+                    assert got == want[label], (label, cut, "small chunks")
+            for id_type, empty in empties.items():
+                out = fused(empty, dict(threshold=0.9))
+                rel = ann.srp_lsh_similarity_join(
+                    empty, "vec_id", "embedding", verify="relational",
+                    threshold=0.9,
+                )
+                assert out.collect() == rel.collect() == []
+                assert out.schema == rel.schema
+                assert out.schema["id1"].dataType.simpleString() == id_type
 
-    nonempty = 0
-    for label, df, kw, shrink in _srp_tier_cases(spark):
-        fused, rel = both(df, kw)
-        want = [tuple(r) for r in rel.collect()]
-        assert [tuple(r) for r in fused.collect()] == want, label
-        nonempty += bool(want)
-        if shrink:
-            with monkeypatch.context() as mp:
-                for name, v in (("_SRP_HASH_ROWS", 33), ("_SRP_ROW_BLOCK", 7),
-                                ("_SRP_PAIR_CHUNK", 64), ("_SRP_SCORE_CHUNK", 50)):
-                    mp.setattr(ann, name, v)
-                fused, _ = both(df, kw)
-                got = [tuple(r) for r in fused.collect()]
-            assert got == want, f"{label} (small chunks)"
-    assert nonempty >= 7
 
-    for id_type in ("bigint", "string"):
-        empty = spark.createDataFrame([], f"vec_id {id_type}, embedding array<float>")
-        fused, rel = both(empty, dict(threshold=0.9))
-        assert fused.collect() == rel.collect() == []
-        assert fused.schema == rel.schema
-        assert fused.schema["id1"].dataType.simpleString() == id_type
+@pytest.mark.parametrize("cut", ["driver", "scan"])
+def test_srp_broadcast_tier_drops_null_ids(spark, monkeypatch, cut):
+    """A null id pairs with nothing on either path of the broadcast
+    tier, as in the relational tier, and the bigint ids stay ints."""
+    if cut == "scan":
+        monkeypatch.setattr(ann, "_SRP_DRIVER_EXPANSIONS", -1)
+    v = [0.6, 0.8]
+    df = spark.createDataFrame(
+        [(1, v), (None, v), (3, v)], "vec_id bigint, embedding array<float>"
+    )
+    tiers = {
+        verify: [tuple(r) for r in ann.srp_lsh_similarity_join(
+            df, threshold=0.5, verify=verify
+        ).collect()]
+        for verify in ("broadcast", "auto", "relational")
+    }
+    assert tiers == dict.fromkeys(tiers, [(1, 3, 1.0)])
+    assert all(type(r[0]) is int for r in tiers["broadcast"])
+
+
+@pytest.mark.parametrize("cut", ["driver", "scan"])
+def test_srp_broadcast_tier_names_dirty_vector(spark, monkeypatch, cut):
+    """A null or ragged vector fails the broadcast tier at its collect
+    with a ValueError naming the smallest offending id, under 'auto'
+    as well; a null element scores NaN and pairs with nothing, as in
+    the relational tier."""
+    if cut == "scan":
+        monkeypatch.setattr(ann, "_SRP_DRIVER_EXPANSIONS", -1)
+    v = [0.6, 0.8]
+    schema = "vec_id bigint, embedding array<float>"
+    for rows, msg in (
+        ([(1, v), (4, None), (2, None), (3, v)], "vector of id 2: null vector"),
+        ([(1, v), (3, [0.6, 0.8, 0.0]), (2, v)], "vector of id 3: 3 dims, not 2"),
+    ):
+        df = spark.createDataFrame(rows, schema)
+        for verify in ("broadcast", "auto"):
+            with pytest.raises(ValueError, match=msg):
+                ann.srp_lsh_similarity_join(df, threshold=0.5, verify=verify)
+    df = spark.createDataFrame([(1, v), (2, [0.6, None]), (3, v)], schema)
+    for verify in ("broadcast", "relational"):
+        got = ann.srp_lsh_similarity_join(df, threshold=0.5, verify=verify)
+        assert [tuple(r) for r in got.collect()] == [(1, 3, 1.0)]
+
+
+def test_srp_driver_path_collect_runs_two_jobs(spark):
+    """Under the cut, the fused pair join's collect is the matrix
+    collect plus one job over the local relation: no broadcast scan and
+    no range-sample job."""
+    sc = spark.sparkContext
+    df = _srp_tier_cases(spark)[1][1]
+    group = "test-srp-driver-path"
+    sc.setJobGroup(group, "srp driver path")
+    try:
+        rows = ann.srp_lsh_similarity_join(
+            df, threshold=0.4, bits_per_band=4, num_bands=24
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 2, jobs
 
 
 def test_srp_topk_search_matches_exact_on_planted(spark):

@@ -506,8 +506,10 @@ def test_run_pipeline_leaks_no_cache_and_bounds_pair_join_jobs(
 ):
     """At the default EngineConfig (HNSW32 -> SRP-LSH broadcast tier), a
     pipeline run leaves the JVM's persisted RDD set as it found it, its
-    similar_pairs stage runs at most 5 Spark jobs on 200 posts, and the
-    stage reads back with the schema inference would give."""
+    similar_pairs stage runs at most 2 Spark jobs on 200 posts (the
+    matrix collect and the stage write: the pairs are scored on the
+    driver), and the stage reads back with the schema inference would
+    give."""
     import os
 
     from job_post_similarity_spark.main import run_pipeline
@@ -541,7 +543,7 @@ def test_run_pipeline_leaks_no_cache_and_bounds_pair_join_jobs(
     pairs.collect()
     assert set(sc._jsc.getPersistentRDDs().keySet()) == persisted
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 5, jobs
+    assert 0 < len(jobs) <= 2, jobs
     assert pairs.schema == spark.read.parquet(os.path.join(out, "similar_pairs")).schema
 
 
